@@ -416,10 +416,11 @@ def p_user_agent(df, spec, ctx):
         chains["__uad"] = d_chain
         dcol = "__uad"
     if chains:
-        # a raw STREAMING DataFrame cannot host the distinct+join (no
-        # dedup aggregation mid-stream); the foreachBatch router path
-        # hands static per-batch frames in, so this only bites direct
-        # readStream pipelines — fall back to the per-row chain there
+        # a STREAMING DataFrame cannot host the distinct+join (no dedup
+        # aggregation mid-stream), and streaming.stream_pipeline compiles
+        # the chain onto the streaming frame — fall back to the per-row
+        # chain there (same values; pinned by the stream-versus-batch
+        # differential in tests/test_streaming.py)
         if cfg.get("dedup_parse", True) and not df.isStreaming:
             # DISTINCT-PARSE: run the ~350-regex bank once per DISTINCT
             # UA value, not once per row, then equi-join the parsed dim

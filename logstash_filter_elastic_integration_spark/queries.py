@@ -874,17 +874,22 @@ def _events_router(spark):
     return router
 
 
+def _events_datastream(ev):
+    """Datastream fields for the routing demos: 'error' events go to the
+    ev.error dataset, everything else to ev.std."""
+    return (ev.withColumn("data_stream.type", F.lit("logs"))
+            .withColumn("data_stream.dataset",
+                        F.when(F.col("event_type") == "error", "ev.error")
+                        .otherwise("ev.std"))
+            .withColumn("data_stream.namespace", F.lit("default")))
+
+
 def q_route_fanout(spark, sf_dir):
     """Datastream resolution -> per-route pipelines -> reroute fixpoint:
     'error' events route to err-pipe which reroutes them to alerts-high,
     whose pipeline stamps them; everything else takes std-pipe."""
     ev = load(spark, sf_dir, "events")
-    df = (ev.withColumn("data_stream.type", F.lit("logs"))
-          .withColumn("data_stream.dataset",
-                      F.when(F.col("event_type") == "error", "ev.error")
-                      .otherwise("ev.std"))
-          .withColumn("data_stream.namespace", F.lit("default")))
-    out = _events_router(spark).execute(df)
+    out = _events_router(spark).execute(_events_datastream(ev))
     return out.select("event_id", F.col("__sink").alias("sink"),
                       "severity", "alerted")
 
@@ -2262,29 +2267,24 @@ FROM px
 def q_stream_flagship(spark, sf_dir):
     """The COMPILED flagship pipeline itself (datastream resolution ->
     per-route pipelines -> reroute fixpoint) run as a STREAM: readStream
-    over the events table -> foreachBatch(Router.execute) with a
-    checkpoint -> per-sink aggregate accumulation.  This is the
-    north-rule streaming parity check: the same processor chain that runs
-    in batch runs per micro-batch, and the accumulated per-sink counts
-    must equal the batch run's (full value-hash oracle below; restart
-    semantics pinned in tests/test_streaming.py).  Per-batch aggregates
-    are sink×severity rows — metadata-sized, the legitimate collect."""
+    over the events table -> Router.execute compiled once onto the
+    streaming frame -> foreachBatch with a checkpoint -> per-sink
+    aggregate accumulation.  This is the north-rule streaming parity
+    check: the same processor chain that runs in batch runs on every
+    micro-batch, and the accumulated per-sink counts must equal the batch
+    run's (full value-hash oracle below; restart semantics pinned in
+    tests/test_streaming.py).  Per-batch aggregates are sink×severity
+    rows — metadata-sized, the legitimate collect."""
     import tempfile
 
     d = _events_stream_dir(sf_dir)
     schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    src = spark.readStream.schema(schema).parquet(d)
+    src = _events_router(spark).execute(
+        _events_datastream(spark.readStream.schema(schema).parquet(d)))
     acc: list[tuple] = []
 
     def process(batch_df, batch_id):
-        df = (batch_df
-              .withColumn("data_stream.type", F.lit("logs"))
-              .withColumn("data_stream.dataset",
-                          F.when(F.col("event_type") == "error", "ev.error")
-                          .otherwise("ev.std"))
-              .withColumn("data_stream.namespace", F.lit("default")))
-        out = _events_router(spark).execute(df)
-        rows = (out.groupBy("__sink", "severity")
+        rows = (batch_df.groupBy("__sink", "severity")
                 .agg(F.count(F.lit(1)).alias("n")).collect())
         acc.extend((r["__sink"], r["severity"], int(r["n"])) for r in rows)
 

@@ -73,6 +73,14 @@ def get_spark(
         # shared conf mid-session (the strict duplicate REJECTION is an
         # explicit conf-independent check in operators/parse.py)
         .config("spark.sql.variant.allowDuplicateKeys", "true")
+        # PySpark wraps every DataFrame/Column call in call-site capture
+        # (getActiveSession, a conf read, and a JVM PySparkCurrentOrigin
+        # set + clear per call) only to label error messages with the
+        # Python line.  The compiler makes thousands of such calls per
+        # pipeline chain: measured on a 4-core host at local[4], a warm
+        # flagship Router.execute went from 6,072 py4j round trips and
+        # ~1.1 s to 2,122 and ~0.8 s with capture off.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -3,10 +3,17 @@
 The reference is a pull-batch filter inside a running Logstash pipeline —
 continuous ingestion.  The Spark-native equivalent is Structured Streaming:
 ``readStream`` on the transcript table/directory, the IDENTICAL compiled
-processor-chain transform (it is a pure narrow projection, so it is
-streaming-safe with no watermark needed), and ``foreachBatch`` driving the
-same Router fan-out + per-sink aggregates per micro-batch — which also
-gives exactly-once sink writes via the checkpoint location.
+processor-chain transform (a narrow projection plus stream-static broadcast
+joins, so it is streaming-safe with no watermark needed), and
+``foreachBatch`` driving the same Router fan-out + per-sink aggregates per
+micro-batch — which also gives exactly-once sink writes via the checkpoint
+location.
+
+The chain is compiled once per query start, on the streaming frame, so a
+micro-batch pays only its own persist / fan-out write / aggregate; it is
+compiled per micro-batch only when a ``PipelineReloader`` is passed, since
+swapping definitions between micro-batches is the reloader's purpose and a
+running query's plan cannot change.
 
 Windowed per-sink aggregates in *continuous* mode (with late data) use the
 event-time watermark variant below.
@@ -75,17 +82,23 @@ def stream_pipeline(spark: SparkSession, source_dir: str, schema,
                     trigger_once: bool = True,
                     reloader: PipelineReloader | None = None):
     """File-source streaming run of a Router over arriving transcript
-    parquet files.  Returns the started StreamingQuery.  Pass a
-    ``PipelineReloader`` to re-resolve pipeline definitions on the ES
-    60s-reload contract while the stream runs."""
+    parquet files.  Returns the started StreamingQuery.  The router's
+    chain is compiled once here, onto the streaming frame; pass a
+    ``PipelineReloader`` instead to re-resolve pipeline definitions on the
+    ES 60s-reload contract while the stream runs (compiled per
+    micro-batch)."""
     stream = (spark.readStream.schema(schema)
               .option("maxFilesPerTrigger", 8)
               .parquet(source_dir))
+    if reloader is None:
+        stream = router.execute(stream)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        live = reloader.current() if reloader is not None else router
-        executed = live.execute(batch_df)
-        executed = executed.persist()
+        live = router
+        if reloader is not None:
+            live = reloader.current()
+            batch_df = live.execute(batch_df)
+        executed = batch_df.persist()
         try:
             live.write_fanout(executed, catalog,
                               table=f"sinks_stream/batch={batch_id}")
