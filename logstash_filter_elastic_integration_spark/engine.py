@@ -16,7 +16,7 @@ import re
 
 from pyspark.sql import DataFrame, functions as F
 
-from .plans.document import fcol
+from .plans.document import Step, fcol
 from .plans.pipeline import PipelineRegistry, run_pipeline
 from .router import Router
 
@@ -106,9 +106,14 @@ class SparkIngestFilter:
         (EventProcessor.java:128-139)."""
         from .plans.pipeline import compile_pipeline, finalize, prepare
 
-        name_col = sprintf_column(df, self.pipeline_name)
-        df = prepare(df.withColumn("__pipeline", name_col))
+        st = Step(df)
+        st.write("__pipeline", sprintf_column(df, self.pipeline_name))
+        prepare(st)
+        df = st.done()
         for name, pipe in self.registry.pipelines.items():
             gate = fcol("__pipeline") == name
             df = compile_pipeline(pipe, self.registry, extra_gate=gate)(df)
-        return finalize(df).drop("__pipeline")
+        st = Step(df)
+        finalize(st)
+        st.drop("__pipeline")
+        return st.done()

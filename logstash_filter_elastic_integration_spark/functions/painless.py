@@ -32,6 +32,8 @@ import re
 from pyspark.sql import Column, functions as F
 from pyspark.sql import types as T
 
+from .lru import LRU
+
 
 class UnsupportedScriptError(ValueError):
     pass
@@ -1004,8 +1006,10 @@ def _eval(node: ast.AST, c: _Ctx) -> tuple[Column, object]:
 # level: (source, params-repr) -> (resolved paths, {signature: Column}).
 # Unresolved Columns are frame-independent, so reuse across compiles is
 # safe whenever the signature matches; resolvers without a .signature
-# hook (none in-tree) skip the cache.
-_COND_CACHE: dict = {}
+# hook (none in-tree) skip the cache.  Both levels are LRU-capped, so a
+# long-lived driver compiling ever-new conditions stays bounded.
+_COND_CACHE = LRU(512)
+_COND_SIGS = 16  # cached schema signatures per condition
 
 
 def compile_condition(source: str, resolve, params: dict | None = None) -> Column:
@@ -1038,7 +1042,7 @@ def compile_condition(source: str, resolve, params: dict | None = None) -> Colum
     col = _compile_condition_p(src, lits, rec, params, regexes)
     paths = tuple(dict.fromkeys(recorded))
     if entry is None:
-        entry = _COND_CACHE[key0] = (paths, {})
+        entry = _COND_CACHE[key0] = (paths, LRU(_COND_SIGS))
     # paths are deterministic per source, so entry's path tuple matches
     entry[1][tuple(sig_fn(p) for p in paths)] = col
     return col

@@ -7,7 +7,7 @@ import re
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql import types as T
 
-from ..plans.document import fcol, field_type, guarded
+from ..plans.document import Step, fcol
 
 _MUSTACHE = re.compile(r"\{\{\{?([^}]+?)\}?\}\}")
 
@@ -64,25 +64,25 @@ def str_targets(df: DataFrame, spec, ctx, fn, elementwise: bool = True):
     target = cfg.get("target_field")
     ignore_missing = cfg.get("ignore_missing", False)
     active = ctx.active(df, spec)
+    st = Step(df)
     for f_name in fields:
         dst = target or f_name
-        dt = field_type(df, f_name)
+        dt = st.field_type(f_name)
+        # rows an earlier field failed keep their values (the processor
+        # stopped there)
+        live = st.alive(active)
         if dt is None:
             if not ignore_missing:
-                df = ctx.fail(df, active, spec,
-                              f"field [{f_name}] not present as part of path [{f_name}]")
+                ctx.fail(st, active, spec,
+                         f"field [{f_name}] not present as part of path [{f_name}]")
             continue
-        src = fcol(f_name)
+        src = st.col(f_name)
         if isinstance(dt, T.ArrayType) and elementwise:
             new = F.transform(src, fn)
         else:
             new = fn(src)
-        cond = active
         if not ignore_missing:
-            df = ctx.fail(df, active & src.isNull(), spec,
-                          f"field [{f_name}] is null, cannot be processed")
-            cond = cond & src.isNotNull()
-        else:
-            cond = cond & src.isNotNull()
-        df = guarded(df, cond, {dst: new})
-    return df
+            ctx.fail(st, active & src.isNull(), spec,
+                     f"field [{f_name}] is null, cannot be processed")
+        st.guarded(live & src.isNotNull(), {dst: new})
+    return st.done()

@@ -15,6 +15,7 @@ from __future__ import annotations
 import re as _re
 
 from pyspark.sql import Column, functions as F
+from pyspark.sql import types as T
 
 
 def _unquoted(fmt: str) -> str:
@@ -22,7 +23,7 @@ def _unquoted(fmt: str) -> str:
     -letter scans don't false-positive on literal text."""
     return _re.sub(r"'[^']*'", "", fmt)
 
-from ..plans.document import fcol, guarded
+from ..plans.document import Step, fcol
 from .common import template_column
 
 
@@ -163,13 +164,17 @@ def p_date(df, spec, ctx):
         df = df.withColumn(drop_tmp, src)
         src = fcol(drop_tmp)
     parsed = F.coalesce(*[_parse_one(src, fmt, tz) for fmt in formats])
-    df = ctx.fail(df, active & src.isNotNull() & parsed.isNull(), spec,
-                  f"unable to parse date [{f_name}]")
+    st = Step(df)
+    ctx.fail(st, active & src.isNotNull() & parsed.isNull(), spec,
+             f"unable to parse date [{f_name}]")
     out_fmt = cfg.get("output_format")
     value = (F.date_format(F.convert_timezone(F.lit("UTC"), F.lit(tz), parsed), out_fmt)
              if out_fmt else _iso_with_offset(parsed, tz))
-    out = guarded(df, active & parsed.isNotNull(), {target: value})
-    return out.drop(drop_tmp) if drop_tmp else out
+    st.guarded(active & parsed.isNotNull(), {target: value},
+               {target: T.StringType()})
+    if drop_tmp:
+        st.drop(drop_tmp)
+    return st.done()
 
 
 _ROUND_TRUNC = {"y": "year", "M": "month", "w": "week", "d": "day",
@@ -200,8 +205,9 @@ def p_date_index_name(df, spec, ctx):
         df = df.withColumn(drop_tmp, src)
         src = fcol(drop_tmp)
     parsed = F.coalesce(*[_parse_one(src, f, tz) for f in formats])
-    df = ctx.fail(df, active & parsed.isNull(), spec,
-                  f"unable to parse date [{f_name}]")
+    st = Step(df)
+    ctx.fail(st, active & parsed.isNull(), spec,
+             f"unable to parse date [{f_name}]")
     prefix_col = template_column(df, prefix)
     # ES formats the ORIGINAL date; the rounding lives in the date-math
     # suffix ('...||/M{...}') resolved by the consumer
@@ -210,5 +216,8 @@ def p_date_index_name(df, spec, ctx):
     index_expr = F.concat(
         F.lit("<"), prefix_col, F.lit("{"), formatted,
         F.lit("||/" + rounding + "{" + fmt + "|" + tz + "}}>"))
-    out = guarded(df, active & parsed.isNotNull(), {"_index": index_expr})
-    return out.drop(drop_tmp) if drop_tmp else out
+    st.guarded(active & parsed.isNotNull(), {"_index": index_expr},
+               {"_index": T.StringType()})
+    if drop_tmp:
+        st.drop(drop_tmp)
+    return st.done()

@@ -20,7 +20,7 @@ from pyspark.sql import Window, functions as F
 
 from pyspark.sql import types as T
 
-from ..plans.document import fcol, field_type, guarded
+from ..plans.document import Step, fcol, field_type, guarded
 
 
 def _lookup_key(df, cfg, f_name):
@@ -54,7 +54,8 @@ def _multi_emit(df, active, target, looked):
                    {target: looked})
 
 
-def _multi_exact(df, cfg, dim, key_col, props, f_name, target, active):
+def _multi_exact(df, cfg, dim, rows, key_col, props, f_name, target,
+                 active):
     """first_only=false over an exact-key dim: per-element resolution.
 
     Literal-sized dims compile to a map literal + ``transform`` — pure
@@ -63,8 +64,6 @@ def _multi_exact(df, cfg, dim, key_col, props, f_name, target, active):
     UDF — the reference's shape exactly (ES loads the whole lookup
     database into memory on every node) and still zero shuffle; only
     rows taking the multi path pay the Python hop."""
-    rows = dim.collect()  # dim already deduped + localized (tiny or
-    # broadcast-sized by contract)
     arr = fcol(f_name).cast("array<string>")
     struct_t = T.StructType(
         [T.StructField(p, dim.schema[p].dataType) for p in props])
@@ -92,13 +91,14 @@ def _multi_exact(df, cfg, dim, key_col, props, f_name, target, active):
     return _multi_emit(df, active, target, looked)
 
 
-def _multi_range(df, cfg, dim, lo, hi, props, f_name, target, active):
+def _multi_range(df, cfg, dim, rows, lo, hi, props, f_name, target,
+                 active):
     """first_only=false over a range dim (disjoint segments): literal
     segment-array + per-element filter for small dims; numpy
     searchsorted over broadcast sorted bounds for real .mmdb-sized ones."""
     from .net import _ip4_to_long
 
-    rows = sorted(dim.collect(), key=lambda r: int(r[lo]))
+    rows = sorted(rows, key=lambda r: int(r[lo]))
     arr = fcol(f_name).cast("array<string>")
     struct_t = T.StructType(
         [T.StructField(p, dim.schema[p].dataType) for p in props])
@@ -166,13 +166,13 @@ def _multi_range(df, cfg, dim, lo, hi, props, f_name, target, active):
 
 
 def _prepared_dim(ctx, cache_key, dim, build):
-    """Compile-time cache of prepared (deduped/segmented, localized) dims.
+    """Registry-local memo of prepared (deduped/segmented, localized) dims.
 
-    Dim preparation collects the dim to the driver (tiny by contract), but
-    doing it on EVERY Router.execute() call re-pays two Spark jobs per
-    lookup — measured ~1s of the flagship's plan-construction time.  The
+    Dim preparation runs one Spark job that collects the dim to the
+    driver (tiny by contract); a compile that looks the same dim up twice
+    (e.g. a pipeline inlined at two router hops) pays it once.  The
     prepared local relation only depends on the registered dim object, so
-    key the cache by (name, id(dim), config) on the registry itself;
+    key the memo by (name, id(dim), config) on the registry itself;
     re-registering a dim naturally invalidates via id()."""
     cache = getattr(ctx.registry, "_dim_cache", None)
     if cache is None:
@@ -186,12 +186,15 @@ def _prepared_dim(ctx, cache_key, dim, build):
 
 def _localize(df):
     """Materialize a (tiny, broadcast-sized) dim preparation as a driver-
-    side local relation.  The dedupe/segmentation below needs a groupBy or
-    window — running it lazily would put an Exchange inside the fact
-    query's broadcast subtree and break the engine's zero-shuffle plan
-    guarantee.  Collecting once at compile time mirrors the reference,
-    which loads entire lookup databases (.mmdb) into memory on every node."""
-    return df.sparkSession.createDataFrame(df.collect(), df.schema)
+    side local relation -> (frame, collected rows).  The dedupe/segmentation
+    below needs a groupBy or window — running it lazily would put an
+    Exchange inside the fact query's broadcast subtree and break the
+    engine's zero-shuffle plan guarantee.  Collecting once at compile time
+    mirrors the reference, which loads entire lookup databases (.mmdb) into
+    memory on every node; the literal-map and per-element paths build from
+    the same rows instead of collecting the local frame again."""
+    rows = df.collect()
+    return df.sparkSession.createDataFrame(rows, df.schema), rows
 
 
 def _dedupe_dim(dim, key_col: str, props: list[str]):
@@ -231,11 +234,11 @@ def _disjoint_narrowest(dim, lo: str, hi: str, props: list[str]):
                 F.col("__seg_hi").alias(hi), *props))
 
 
-def _literal_map_entry(dim, key_col: str, props: list[str]):
+def _literal_map_entry(dim, rows, key_col: str, props: list[str]):
     """(map-literal Column | None-if-empty, value struct type) for the
     literal-map lookup fast path, or None when the dim exceeds the
     literal cap (caller falls back to the broadcast join)."""
-    rows = [r for r in dim.collect() if r[key_col] is not None]
+    rows = [r for r in rows if r[key_col] is not None]
     if len(rows) > _MULTI_LITERAL_CAP:
         return None
     struct_t = T.StructType(
@@ -274,12 +277,12 @@ def _broadcast_lookup(df, spec, ctx, dim_name: str, default_target: str,
     dim = dims[dim_name]
     key_col = cfg.get("lookup_key", dim.columns[0])
     props = cfg.get("properties") or [c for c in dim.columns if c != key_col]
-    dim = _prepared_dim(
+    dim, rows = _prepared_dim(
         ctx, ("exact", dim_name, id(dim), key_col, tuple(props)), dim,
         lambda: _dedupe_dim(dim, key_col, props))
     if _is_multi(df, cfg, f_name):
-        return _multi_exact(df, cfg, dim, key_col, props, f_name, target,
-                            active)
+        return _multi_exact(df, cfg, dim, rows, key_col, props, f_name,
+                            target, active)
     # literal-map fast path (r6, guide §2.4/§3.1): a tiny string-keyed dim
     # compiles to ONE map literal probed per row — no BroadcastExchange, no
     # hash-join output-row copy, and the probe fuses into the surrounding
@@ -299,7 +302,7 @@ def _broadcast_lookup(df, spec, ctx, dim_name: str, default_target: str,
         entry = _prepared_dim(
             ctx, ("exact_lit", dim_name, id(dims[dim_name]), key_col,
                   tuple(props)), dims[dim_name],
-            lambda: _literal_map_entry(dim, key_col, props))
+            lambda: _literal_map_entry(dim, rows, key_col, props))
         if entry is not None:
             m, struct_t = entry
             tmp = "__lkv_" + dim_name.replace(".", "_")
@@ -308,10 +311,13 @@ def _broadcast_lookup(df, spec, ctx, dim_name: str, default_target: str,
                     m, _lookup_key(df, cfg, f_name).cast("string"))
             else:
                 looked = F.lit(None).cast(struct_t)
-            df = df.withColumn(tmp, looked)
-            updates = {f"{target}.{p}": fcol(tmp)[p] for p in props}
-            df = guarded(df, active, updates)
-            return df.drop(tmp)
+            # staged: each property reads the probe, which runs once per row
+            st = Step(df.withColumn(tmp, looked))
+            st.guarded(active,
+                       {f"{target}.{p}": fcol(tmp)[p] for p in props},
+                       {f"{target}.{p}": struct_t[p].dataType for p in props})
+            st.drop(tmp)
+            return st.done()
     joined = "__lk_" + dim_name
     renamed = dim.select(
         F.col(key_col).alias(joined),
@@ -319,9 +325,12 @@ def _broadcast_lookup(df, spec, ctx, dim_name: str, default_target: str,
     df = df.join(F.broadcast(renamed),
                  _lookup_key(df, cfg, f_name).cast("string") == fcol(joined),
                  "left")
-    updates = {f"{target}.{p}": fcol(f"{joined}.{p}") for p in props}
-    df = guarded(df, active, updates)
-    return df.drop(joined, *[f"{joined}.{p}" for p in props])
+    st = Step(df)
+    st.guarded(active,
+               {f"{target}.{p}": fcol(f"{joined}.{p}") for p in props},
+               {f"{target}.{p}": dim.schema[p].dataType for p in props})
+    st.drop(joined, *[f"{joined}.{p}" for p in props])
+    return st.done()
 
 
 def _broadcast_range_lookup(df, spec, ctx, dim_name: str, default_target: str):
@@ -349,12 +358,12 @@ def _broadcast_range_lookup(df, spec, ctx, dim_name: str, default_target: str):
     key_long = F.when(key.rlike(r"^(\d{1,3}\.){3}\d{1,3}$"), _ip4_to_long(key)) \
         .otherwise(key.try_cast("long"))
     props = cfg.get("properties") or [c for c in dim.columns if c not in (lo, hi)]
-    dim = _prepared_dim(
+    dim, rows = _prepared_dim(
         ctx, ("range", dim_name, id(dim), lo, hi, tuple(props)), dim,
         lambda: _disjoint_narrowest(dim, lo, hi, props))
     if _is_multi(df, cfg, f_name):
-        return _multi_range(df, cfg, dim, lo, hi, props, f_name, target,
-                            active)
+        return _multi_range(df, cfg, dim, rows, lo, hi, props, f_name,
+                            target, active)
     joined = "__rlk_" + dim_name.replace(".", "_")
     renamed = dim.select(
         F.col(lo).alias(f"{joined}_lo"), F.col(hi).alias(f"{joined}_hi"),
@@ -363,10 +372,13 @@ def _broadcast_range_lookup(df, spec, ctx, dim_name: str, default_target: str):
     df = df.join(F.broadcast(renamed),
                  (fcol(f"{joined}_key") >= fcol(f"{joined}_lo"))
                  & (fcol(f"{joined}_key") <= fcol(f"{joined}_hi")), "left")
-    updates = {f"{target}.{p}": fcol(f"{joined}.{p}") for p in props}
-    df = guarded(df, active, updates)
-    return df.drop(f"{joined}_key", f"{joined}_lo", f"{joined}_hi",
-                   *[f"{joined}.{p}" for p in props])
+    st = Step(df)
+    st.guarded(active,
+               {f"{target}.{p}": fcol(f"{joined}.{p}") for p in props},
+               {f"{target}.{p}": dim.schema[p].dataType for p in props})
+    st.drop(f"{joined}_key", f"{joined}_lo", f"{joined}_hi",
+            *[f"{joined}.{p}" for p in props])
+    return st.done()
 
 
 def p_lookup(df, spec, ctx):

@@ -12,9 +12,9 @@ from __future__ import annotations
 from pyspark.sql import Column, functions as F
 from pyspark.sql import types as T
 
-from ..plans.document import (DROPPED, SCALARSET, TERMINATED, fcol,
-                              field_type, guarded, nullset_update,
-                              present_expr, resolver_for, scalarset_update)
+from ..plans.document import (DROPPED, NULLSET, SCALARSET, TERMINATED, Step,
+                              fcol, field_type, guarded, present_expr,
+                              resolve_field, resolver_for)
 from ..functions.painless import UnsupportedScriptError, compile_script
 from .common import str_targets, template_column
 
@@ -33,17 +33,22 @@ def p_set(df, spec, ctx):
             f"text/plain, application/x-www-form-urlencoded], found "
             f"[{media_type}]")
     if "copy_from" in cfg:
-        from ..plans.document import resolve_field
         # resolve_field: static column, else the _extras dynamic-field map
-        value, _ = resolve_field(df, cfg["copy_from"])
+        # (a missing path reads as a string-typed null)
+        value, dt = resolve_field(df, cfg["copy_from"])
+        dt = dt or T.StringType()
     else:
         value = template_column(df, cfg.get("value"))
+        # a string value renders (mustache) to a string
+        dt = T.StringType() if isinstance(cfg.get("value"), str) else None
     if not cfg.get("override", True) and field in df.columns:
         active = active & fcol(field).isNull()
     if cfg.get("ignore_empty_value", False):
         # ES: quietly skip when the (rendered) value is null or ""
         active = active & value.isNotNull() & (value.cast("string") != "")
-    df = guarded(df, active, {field: value})
+    st = Step(df)
+    st.guarded(active, {field: value},
+               None if dt is None else {field: dt})
     # ES SetProcessor always puts the key into the document map — a null
     # value is PRESENT-null, not missing.  Literal non-null scalars can
     # never evaluate null, so skip the registry there (plan stability).
@@ -51,10 +56,9 @@ def p_set(df, spec, ctx):
     # so only copy_from / literal-null values can store an explicit null)
     may_be_null = "copy_from" in cfg or cfg.get("value") is None
     if may_be_null:
-        df = nullset_update(df, field,
-                            added=active & fcol(field).isNull(),
-                            cleared=active & fcol(field).isNotNull())
-    return df
+        st.nullset_update(field, added=active & st.col(field).isNull(),
+                          cleared=active & st.col(field).isNotNull())
+    return st.done()
 
 
 def p_remove(df, spec, ctx):
@@ -79,6 +83,7 @@ def p_remove(df, spec, ctx):
                 "_ingest"}
         active = ctx.active(df, spec)
         updates = {}
+        dtypes = {}
         for col_name in df.columns:
             if (col_name in keep or col_name in meta
                     or col_name.startswith("__") or col_name == "_extras"):
@@ -87,14 +92,14 @@ def p_remove(df, spec, ctx):
             if any(col_name.startswith(k + ".") or k.startswith(col_name + ".")
                    for k in keep):
                 continue
-            updates[col_name] = F.lit(None).cast(field_type(df, col_name))
+            dtypes[col_name] = field_type(df, col_name)
+            updates[col_name] = F.lit(None).cast(dtypes[col_name])
         if "_extras" in df.columns:
             kept = sorted(keep)
             updates["_extras"] = F.map_filter(
                 fcol("_extras"),
                 (lambda k, _: k.isin(*kept)) if kept
                 else (lambda k, _: F.lit(False)))
-        from ..plans.document import NULLSET
         if NULLSET in df.columns:
             # removed fields must read as MISSING, not present-null
             kept = sorted(keep)
@@ -102,35 +107,40 @@ def p_remove(df, spec, ctx):
                 fcol(NULLSET),
                 (lambda x: x.isin(*kept)) if kept
                 else (lambda x: F.lit(False)))
-        return guarded(df, active, updates)
+        return guarded(df, active, updates, dtypes)
     fields = cfg["field"] if isinstance(cfg["field"], list) else [cfg["field"]]
     ignore_missing = cfg.get("ignore_missing", False)
     active = ctx.active(df, spec)
+    st = Step(df)
     for f_name in fields:
+        # rows an earlier field failed keep their values (the processor
+        # stopped there)
+        live = st.alive(active)
         if f_name not in df.columns:
             if "_extras" in df.columns:
                 present = F.map_contains_key(fcol("_extras"), F.lit(f_name))
                 if not ignore_missing:
-                    df = ctx.fail(
-                        df, active & ~F.coalesce(present, F.lit(False)), spec,
+                    ctx.fail(
+                        st, active & ~F.coalesce(present, F.lit(False)), spec,
                         f"field [{f_name}] not present as part of path [{f_name}]")
-                df = guarded(df, active, {"_extras": F.map_filter(
-                    fcol("_extras"), lambda k, _: k != f_name)})
+                st.guarded(live, {"_extras": F.map_filter(
+                    st.col("_extras"), lambda k, _: k != f_name)},
+                    {"_extras": st.field_type("_extras")})
                 continue
             if not ignore_missing:
-                df = ctx.fail(df, active, spec,
-                              f"field [{f_name}] not present as part of path [{f_name}]")
+                ctx.fail(st, active, spec,
+                         f"field [{f_name}] not present as part of path [{f_name}]")
             continue
         if not ignore_missing:
             # explicit-null fields are PRESENT (removable without error) —
             # only truly-missing rows fail, per the reference's map model
-            df = ctx.fail(df, active & ~present_expr(df, f_name), spec,
-                          f"field [{f_name}] not present as part of path [{f_name}]")
-        df = guarded(df, active, {f_name: F.lit(None).cast(field_type(df, f_name))})
-        from ..plans.document import NULLSET
-        if NULLSET in df.columns:  # removal also clears present-null status
-            df = nullset_update(df, f_name, added=F.lit(False), cleared=active)
-    return df
+            ctx.fail(st, active & ~present_expr(df, f_name), spec,
+                     f"field [{f_name}] not present as part of path [{f_name}]")
+        dt = st.field_type(f_name)
+        st.guarded(live, {f_name: F.lit(None).cast(dt)}, {f_name: dt})
+        if NULLSET in st.columns:  # removal also clears present-null status
+            st.nullset_update(f_name, added=F.lit(False), cleared=live)
+    return st.done()
 
 
 def p_rename(df, spec, ctx):
@@ -139,26 +149,31 @@ def p_rename(df, spec, ctx):
     src_name, dst = cfg["field"], cfg["target_field"]
     ignore_missing = cfg.get("ignore_missing", False)
     active = ctx.active(df, spec)
+    st = Step(df)
     if src_name not in df.columns:
         if not ignore_missing:
-            df = ctx.fail(df, active, spec,
-                          f"field [{src_name}] doesn't exist")
-        return df
+            ctx.fail(st, active, spec, f"field [{src_name}] doesn't exist")
+        return st.done()
     src = fcol(src_name)
     if dst in df.columns and not cfg.get("override", False):
         # ES: override=true renames onto an existing target (8.x option)
-        df = ctx.fail(df, active & fcol(dst).isNotNull(), spec,
-                      f"field [{dst}] already exists")
+        ctx.fail(st, active & fcol(dst).isNotNull(), spec,
+                 f"field [{dst}] already exists")
     if not ignore_missing:
-        df = ctx.fail(df, active & src.isNull(), spec,
-                      f"field [{src_name}] doesn't exist")
-    move = active & src.isNotNull()
-    df = guarded(df, move, {dst: src})
-    return guarded(df, move, {src_name: F.lit(None).cast(field_type(df, src_name))})
+        ctx.fail(st, active & src.isNull(), spec,
+                 f"field [{src_name}] doesn't exist")
+    move = st.alive(active & src.isNotNull())
+    st.guarded(move, {dst: src}, {dst: field_type(df, src_name)})
+    dt = st.field_type(src_name)
+    st.guarded(move, {src_name: F.lit(None).cast(dt)}, {src_name: dt})
+    return st.done()
 
 
 _CONVERT_TYPES = {"integer": "int", "long": "bigint", "float": "float",
                   "double": "double", "string": "string", "boolean": "boolean"}
+_CONVERT_DT = {"int": T.IntegerType(), "bigint": T.LongType(),
+               "float": T.FloatType(), "double": T.DoubleType(),
+               "string": T.StringType()}
 _IP_RX = (r"^((25[0-5]|2[0-4]\d|1\d\d|[1-9]?\d)\.){3}"
           r"(25[0-5]|2[0-4]\d|1\d\d|[1-9]?\d)$|^[0-9A-Fa-f:]+:[0-9A-Fa-f:.]*$")
 
@@ -171,29 +186,34 @@ def p_convert(df, spec, ctx):
     dst = cfg.get("target_field", f_name)
     ignore_missing = cfg.get("ignore_missing", False)
     active = ctx.active(df, spec)
+    st = Step(df)
     if f_name not in df.columns:
         if not ignore_missing:
-            df = ctx.fail(df, active, spec,
-                          f"field [{f_name}] not present as part of path [{f_name}]")
-        return df
+            ctx.fail(st, active, spec,
+                     f"field [{f_name}] not present as part of path [{f_name}]")
+        return st.done()
     src = fcol(f_name)
-    if isinstance(field_type(df, f_name), T.ArrayType) and typ == "ip":
+    dt = field_type(df, f_name)
+    if isinstance(dt, T.ArrayType) and typ == "ip":
         # ES validates each element; one bad element fails the whole row
         bad = F.exists(src, lambda x: x.isNotNull()
                        & ~x.cast("string").rlike(_IP_RX))
-        df = ctx.fail(df, active & src.isNotNull() & bad, spec,
-                      f"[{f_name}] is not an IP string literal.")
-        return guarded(df, active & src.isNotNull() & ~bad,
-                       {dst: F.transform(src, lambda x: x.cast("string"))})
-    if isinstance(field_type(df, f_name), T.ArrayType) and typ in _CONVERT_TYPES:
+        ctx.fail(st, active & src.isNotNull() & bad, spec,
+                 f"[{f_name}] is not an IP string literal.")
+        st.guarded(active & src.isNotNull() & ~bad,
+                   {dst: F.transform(src, lambda x: x.cast("string"))})
+        return st.done()
+    if isinstance(dt, T.ArrayType) and typ in _CONVERT_TYPES:
         # ES converts each element when the field holds an array
         new = F.transform(src, lambda x: x.cast(_CONVERT_TYPES[typ]))
-        return guarded(df, active & src.isNotNull(), {dst: new})
+        st.guarded(active & src.isNotNull(), {dst: new})
+        return st.done()
     if typ == "ip":
         ok = src.rlike(_IP_RX)
-        df = ctx.fail(df, active & src.isNotNull() & ~ok, spec,
-                      f"[{f_name}] is not an IP string literal.")
-        return guarded(df, active & ok, {dst: src})
+        ctx.fail(st, active & src.isNotNull() & ~ok, spec,
+                 f"[{f_name}] is not an IP string literal.")
+        st.guarded(active & ok, {dst: src}, {dst: dt})
+        return st.done()
     if typ == "auto":
         new = F.coalesce(
             src.try_cast("bigint").cast("string"),
@@ -201,24 +221,27 @@ def p_convert(df, spec, ctx):
             src.try_cast("boolean").cast("string"),
             src.cast("string"),
         )
-        return guarded(df, active & src.isNotNull(), {dst: new})
+        st.guarded(active & src.isNotNull(), {dst: new},
+                   {dst: T.StringType()})
+        return st.done()
     sql_t = _CONVERT_TYPES[typ]
-    dt = field_type(df, f_name)
     if typ == "boolean":
         lowered = F.lower(src.cast("string"))
         ok_bool = lowered.isin("true", "false")
-        df = ctx.fail(df, active & src.isNotNull() & ~ok_bool, spec,
-                      f"[{src}] is not a boolean value, cannot convert to boolean")
-        new = lowered == "true"
-        return guarded(df, active & src.isNotNull() & ok_bool, {dst: new})
+        ctx.fail(st, active & src.isNotNull() & ~ok_bool, spec,
+                 f"[{src}] is not a boolean value, cannot convert to boolean")
+        st.guarded(active & src.isNotNull() & ok_bool,
+                   {dst: lowered == "true"}, {dst: T.BooleanType()})
+        return st.done()
     # ES integer conversion of "1.5" fails (no truncation): go via string
     new = src.cast("string").try_cast(sql_t)
     if not isinstance(dt, T.StringType):
         new = src.cast(sql_t)
     err = active & src.isNotNull() & new.isNull()
-    df = ctx.fail(df, err, spec,
-                  f"unable to convert [{f_name}] to {typ}")
-    return guarded(df, active & new.isNotNull(), {dst: new})
+    ctx.fail(st, err, spec, f"unable to convert [{f_name}] to {typ}")
+    st.guarded(active & new.isNotNull(), {dst: new},
+               {dst: _CONVERT_DT[sql_t]})
+    return st.done()
 
 
 def p_append(df, spec, ctx):
@@ -249,18 +272,19 @@ def p_append(df, spec, ctx):
         new = F.concat(existing, add)
     else:
         new = F.array_union(existing, add)
+    st = Step(df)
     if dt is not None and not isinstance(dt, T.ArrayType):
         keep = F.when(fcol(f_name).isNotNull(), F.array(fcol(f_name)))
-        df = df.withColumn(f_name, F.when(active, new).otherwise(keep))
-        return scalarset_update(df, f_name,
-                                added=~F.coalesce(active, F.lit(False)),
-                                cleared=active)
-    df = guarded(df, active, {f_name: new})
+        st.write(f_name, F.when(active, new).otherwise(keep))
+        st.scalarset_update(f_name, added=~F.coalesce(active, F.lit(False)),
+                            cleared=active)
+        return st.done()
+    st.guarded(active, {f_name: new})
     if SCALARSET in df.columns:
         # appending onto a previously-promoted column makes the touched
         # rows genuinely lists again
-        df = scalarset_update(df, f_name, added=F.lit(False), cleared=active)
-    return df
+        st.scalarset_update(f_name, added=F.lit(False), cleared=active)
+    return st.done()
 
 
 def p_trim(df, spec, ctx):
@@ -649,7 +673,6 @@ def _script_interpreted(df, spec, ctx, active):
         return pd.DataFrame(out, columns=writes
                             + ["__perr", "__asg", "__nulled"])
 
-    from ..plans.document import NULLSET
     udf = F.pandas_udf(kernel, schema)
     in_struct = F.struct(
         *[fcol(p).alias(p) for p in in_paths],
@@ -660,21 +683,23 @@ def _script_interpreted(df, spec, ctx, active):
         *([fcol(SCALARSET).alias("__scalarset")]
           if SCALARSET in df.columns else []),
         F.coalesce(active, F.lit(False)).alias("__active"))
-    df = df.withColumn("__script", udf(in_struct))
+    # the UDF result is read by every write: staged once, then one step
+    st = Step(df.withColumn("__script", udf(in_struct)))
     err = fcol("__script")["__perr"]
     asg = fcol("__script")["__asg"]
     nld = fcol("__script")["__nulled"]
     for i, w in enumerate(writes):
         applied = (active & err.isNull()
                    & F.coalesce(F.element_at(asg, i + 1), F.lit(False)))
-        df = guarded(df, applied, {w: fcol("__script")[w]})
-        if w in df.columns and not w.startswith("_"):
+        st.guarded(applied, {w: fcol("__script")[w]}, {w: schema[w].dataType})
+        if not w.startswith("_"):
             # ctx.f = null -> present-null; ctx.remove('f') -> absent
             was_nulled = F.coalesce(F.element_at(nld, i + 1), F.lit(False))
-            df = nullset_update(df, w, added=applied & was_nulled,
-                                cleared=applied & ~was_nulled)
-    df = ctx.fail(df, active & err.isNotNull(), spec, err)
-    return df.drop("__script")
+            st.nullset_update(w, added=applied & was_nulled,
+                              cleared=applied & ~was_nulled)
+    ctx.fail(st, active & err.isNotNull(), spec, err)
+    st.drop("__script")
+    return st.done()
 
 
 def p_script(df, spec, ctx):
@@ -711,13 +736,12 @@ def p_script(df, spec, ctx):
         except UnsupportedScriptError as e:
             return ctx.fail(df, active, spec,
                             f"unsupported painless script: {e}")
+    st = Step(df)
     for path, col in assignments:
-        path = "_index" if path == "_index" else path
-        df = guarded(df, active, {path: col})
+        st.guarded(active, {path: col})
         # any ctx write puts the key into the document map: a null result
         # is PRESENT-null (ES parity), tracked in the __nullset registry
-        if path in df.columns and not path.startswith("_"):
-            df = nullset_update(df, path,
-                               added=active & fcol(path).isNull(),
-                               cleared=active & fcol(path).isNotNull())
-    return df
+        if not path.startswith("_"):
+            st.nullset_update(path, added=active & st.col(path).isNull(),
+                              cleared=active & st.col(path).isNotNull())
+    return st.done()

@@ -16,7 +16,8 @@ import re
 from pyspark.sql import Column, functions as F
 from pyspark.sql import types as T
 
-from ..plans.document import fcol, field_type, guarded
+from ..functions.lru import LRU
+from ..plans.document import Step, fcol, field_type, guarded, staging_name
 from .common import str_targets
 
 # ---------------------------------------------------------------- bytes ----
@@ -50,9 +51,11 @@ def p_bytes(df, spec, ctx):
         return df
     src = F.trim(fcol(f_name).cast("string"))
     value = bytes_expr(src)
-    df = ctx.fail(df, active & src.isNotNull() & value.isNull(), spec,
-                  f"failed to parse setting [{f_name}] with value [?] as a size in bytes")
-    return guarded(df, active & value.isNotNull(), {dst: value})
+    st = Step(df)
+    ctx.fail(st, active & src.isNotNull() & value.isNull(), spec,
+             f"failed to parse setting [{f_name}] with value [?] as a size in bytes")
+    st.guarded(active & value.isNotNull(), {dst: value})
+    return st.done()
 
 
 # ------------------------------------------------------------ urldecode ----
@@ -90,14 +93,17 @@ def p_uri_parts(df, spec, ctx):
     }
     if cfg.get("keep_original", True):
         updates[f"{target}.original"] = src
+    dtypes = {k: T.StringType() for k in updates}
+    dtypes[f"{target}.port"] = T.IntegerType()
     ok = F.parse_url(src, F.lit("HOST")).isNotNull()
-    df = ctx.fail(df, active & src.isNotNull() & ~ok, spec,
-                  f"unable to parse URI [{f_name}]")
-    df = guarded(df, active & ok, updates)
+    st = Step(df)
+    ctx.fail(st, active & src.isNotNull() & ~ok, spec,
+             f"unable to parse URI [{f_name}]")
+    st.guarded(active & ok, updates, dtypes)
     if cfg.get("remove_if_successful", False) and f_name not in (target,):
-        df = guarded(df, active & ok,
-                     {f_name: F.lit(None).cast(field_type(df, f_name))})
-    return df
+        dt = st.field_type(f_name)
+        st.guarded(active & ok, {f_name: F.lit(None).cast(dt)}, {f_name: dt})
+    return st.done()
 
 
 # ------------------------------------------------------------ html_strip ---
@@ -239,8 +245,9 @@ def _segmented_first_match(pairs, barrier=False, seg=_UA_SEG):
 # the fixed __ua_act/__ua_src staging columns, so the unresolved Column
 # trees are reusable across every p_user_agent compile in the session.
 # Building them fresh cost ~0.3s of driver time per query build (py4j +
-# JVM-side parse of three multi-KB SQL expressions).
-_UA_CHAIN_CACHE: dict = {}
+# JVM-side parse of three multi-KB SQL expressions).  Keyed per Spark
+# application and bank; LRU-capped for long-lived drivers.
+_UA_CHAIN_CACHE = LRU(8)
 
 
 def p_user_agent(df, spec, ctx):
@@ -438,13 +445,13 @@ def p_user_agent(df, spec, ctx):
             # against the ~350 the per-row chain pays.  `dedup_parse:
             # false` forces the per-row chain (near-unique-UA inputs, or
             # an upstream too expensive to re-derive).
-            dim = (df.where(F.col(gate_col)).select("__ua_src")
-                   .where(F.col("__ua_src").isNotNull())
-                   .distinct()
+            dim = (df.where(F.col(gate_col) & F.col("__ua_src").isNotNull())
                    # every dim row came from a gated row: the chain's
                    # per-segment short-circuit gate is constant-true here
-                   .withColumn(gate_col, F.lit(True))
-                   .withColumns(chains).drop(gate_col))
+                   .select("__ua_src", F.lit(True).alias(gate_col))
+                   .distinct()
+                   .select("__ua_src", *[c.alias(n)
+                                         for n, c in chains.items()]))
             df = df.join(dim, on="__ua_src", how="left")
         else:
             df = df.withColumns(chains)
@@ -489,7 +496,10 @@ def p_user_agent(df, spec, ctx):
             head = suffix.split(".")[0]
             return head in allowed or suffix in allowed
         updates = {k: v for k, v in updates.items() if keep(k)}
-    return guarded(df, F.col(gate_col), updates).drop(*temps)
+    st = Step(df)
+    st.guarded(F.col(gate_col), updates, {k: T.StringType() for k in updates})
+    st.drop(*temps)
+    return st.done()
 
 
 # ----------------------------------------------------- network_direction ---
@@ -678,9 +688,11 @@ def p_network_direction(df, spec, ctx):
                  .when(dst_in, "inbound")
                  .otherwise("external"))
     ok = src.isNotNull() & dst.isNotNull()
+    st = Step(df)
     if not cfg.get("ignore_missing", True):
-        df = ctx.fail(df, active & ~ok, spec, "missing source/destination ip")
-    return guarded(df, active & ok, {target: direction})
+        ctx.fail(st, active & ~ok, spec, "missing source/destination ip")
+    st.guarded(active & ok, {target: direction}, {target: T.StringType()})
+    return st.done()
 
 
 # ---------------------------------------------------- registered_domain ----
@@ -865,12 +877,13 @@ def p_registered_domain(df, spec, ctx):
         f"{tprefix}top_level_domain": tld,
         f"{tprefix}subdomain": subdomain,
     }
-    df = guarded(df, active & domain.isNotNull() & registered.isNotNull(),
-                 updates)
-    drops = (["__rd_domain", "__rd_tld", "__rd_reg"]
-             + [f"__rd_{p}{k}" for k in range(1, _PSL_MAX_DEPTH + 1)
-                for p in ("c", "w", "e")])
-    return df.drop(*drops)
+    st = Step(df)
+    st.guarded(active & domain.isNotNull() & registered.isNotNull(),
+               updates, {k: T.StringType() for k in updates})
+    st.drop("__rd_domain", "__rd_tld", "__rd_reg",
+            *[f"__rd_{p}{k}" for k in range(1, _PSL_MAX_DEPTH + 1)
+              for p in ("c", "w", "e")])
+    return st.done()
 
 
 # -------------------------------------------------------- community_id -----
@@ -982,7 +995,7 @@ def p_community_id(df, spec, ctx):
     # per-row cost of a single processor).  Multi-referenced non-cheap
     # producers stay staged (SPARK-36718), so each tree now exists — and
     # runs — once per row.
-    hx = "__cidhex_" + str(abs(hash(target)) % 10**6)
+    hx = staging_name("__cidhex_", target)
     df = df.withColumns({
         f"{hx}s": F.when(active, _ip_hex_any(src_ip)),
         f"{hx}d": F.when(active, _ip_hex_any(dst_ip)),
@@ -1008,9 +1021,12 @@ def p_community_id(df, spec, ctx):
     cid = F.concat(F.lit("1:"), F.base64(F.unhex(F.sha1(F.unhex(hexstr)))))
     ok = (src_hex.isNotNull() & dst_hex.isNotNull() & proto.isNotNull()
           & p1.isNotNull() & p2.isNotNull())
-    df = ctx.fail(df, active & ~ok, spec,
-                  "unable to compute community id: missing required fields")
-    return guarded(df, active & ok, {target: cid}).drop(f"{hx}s", f"{hx}d")
+    st = Step(df)
+    ctx.fail(st, active & ~ok, spec,
+             "unable to compute community id: missing required fields")
+    st.guarded(active & ok, {target: cid}, {target: T.StringType()})
+    st.drop(f"{hx}s", f"{hx}d")
+    return st.done()
 
 
 # ---------------------------------------------------------- fingerprint ----
@@ -1128,4 +1144,5 @@ def p_fingerprint(df, spec, ctx):
     else:
         hex_hash = _FP_METHODS[method](canonical)
         value = F.base64(F.unhex(hex_hash))
-    return guarded(df, active & present, {target: value})
+    return guarded(df, active & present, {target: value},
+                   {target: T.StringType()})

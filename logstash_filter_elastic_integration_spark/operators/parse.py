@@ -23,7 +23,7 @@ from pyspark.sql import types as T
 
 from ..functions.dissect import compile_dissect
 from ..functions.grok import GrokCompiler
-from ..plans.document import fcol, field_type, guarded
+from ..plans.document import Step, fcol, field_type, guarded
 from .common import template_column
 
 _SPARK_TYPE = {"string": T.StringType(), "long": T.LongType(),
@@ -116,6 +116,7 @@ def p_grok(df, spec, ctx):
                 f"[{f_name}] not present as part of path [{f_name}]")
         return df
     src = fcol(f_name).cast("string")
+    interrupted = None
 
     if engine == "jvm" and len(compiled.regexes) == 1:
         # -- JVM lowering ---------------------------------------------------
@@ -185,28 +186,26 @@ def p_grok(df, spec, ctx):
         # stage 1 — the parts land in ONE array column, multi-referenced
         # downstream, so CollapseProject keeps the stage (see note above)
         df = df.withColumn("__grok_parts", F.when(matched_src, raw_parts))
+        st = Step(df)
         pcol = fcol("__grok_parts")
         matched = pcol.isNotNull()
 
-        def _typed(g, fname, raw):
-            gtype = compiled.fields[fname]
+        # stage 2 — typed captures from cheap attribute accesses (element
+        # 1 is the "" before the leading sentinel; captures start at 2)
+        updates, dtypes = {}, {}
+        for i, (g, fname) in enumerate(groups):
+            raw = F.element_at(pcol, i + 2)
             v = F.when(raw != "", raw)
+            gtype = compiled.fields[fname]
             if gtype != "string":
                 v = v.cast(_SPARK_TYPE[gtype])
-            return v.alias(g)
-
-        # stage 2 — typed struct built from cheap attribute accesses
-        # (element 1 is the "" before the leading sentinel; captures
-        # start at 2)
-        vals = F.struct(*[
-            _typed(g, fname, F.element_at(pcol, i + 2))
-            for i, (g, fname) in enumerate(groups)])
-        df = df.withColumn("__grok_packed", F.when(matched, vals))
-        updates = {fname: fcol("__grok_packed")[g] for g, fname in groups}
+            updates[fname] = v
+            dtypes[fname] = _SPARK_TYPE[gtype]
         if cfg.get("trace_match", False):
             # single pattern: the matching index is always 0
             updates["_ingest._grok_match_index"] = F.lit("0")
-        df = guarded(df, active & matched, updates)
+            dtypes["_ingest._grok_match_index"] = T.StringType()
+        st.guarded(active & matched, updates, dtypes)
     else:
         # -- vectorized pandas UDF path ------------------------------------
         out_fields = list(compiled.fields)
@@ -244,50 +243,46 @@ def p_grok(df, spec, ctx):
         # the Arrow transfer and the Python-side work proportional to the
         # rows the processor actually applies to (extract() skips
         # non-strings via its valid mask).
-        df = df.withColumn("__grok", udf(F.when(active, src)))
-        df = df.withColumn("__grok_matched",
-                           F.coalesce(fcol("__grok")["__matched"], F.lit(False)))
-        df = df.withColumn("__grok_interrupted",
-                           F.coalesce(fcol("__grok")["__interrupted"],
-                                      F.lit(False)))
-        matched = fcol("__grok_matched")
-        updates = {}
+        # the UDF result is read by every capture: staged once
+        st = Step(df.withColumn("__grok", udf(F.when(active, src))))
+        matched = F.coalesce(fcol("__grok")["__matched"], F.lit(False))
+        interrupted = F.coalesce(fcol("__grok")["__interrupted"],
+                                 F.lit(False))
+        updates, dtypes = {}, {}
         for fname in out_fields:
             gtype = compiled.fields[fname]
             val = fcol("__grok")[fname]
             if gtype != "string":
                 val = val.cast(_SPARK_TYPE[gtype])
             updates[fname] = val
+            dtypes[fname] = _SPARK_TYPE[gtype]
         if cfg.get("trace_match", False):
             # ES trace_match: record WHICH pattern matched (string index,
             # GrokProcessor stores it under _ingest._grok_match_index)
             updates["_ingest._grok_match_index"] = \
                 fcol("__grok")["__midx"].cast("string")
-        df = guarded(df, active & matched, updates).drop("__grok")
+            dtypes["_ingest._grok_match_index"] = T.StringType()
+        st.guarded(active & matched, updates, dtypes)
         # watchdog parity (EventProcessorBuilder.java:224-225): interrupted
         # rows fail with the reference's MatcherWatchdog message, distinct
         # from a plain no-match
-        df = ctx.fail(df, active & fcol("__grok_interrupted"), spec,
-                      "grok pattern matching was interrupted after "
-                      f"[{max_exec_ms}] ms")
+        ctx.fail(st, active & interrupted, spec,
+                 "grok pattern matching was interrupted after "
+                 f"[{max_exec_ms}] ms")
 
     if not ignore_missing:
-        df = ctx.fail(
-            df, active & src.isNull(), spec,
+        ctx.fail(
+            st, active & src.isNull(), spec,
             "java.lang.IllegalArgumentException: field "
             f"[{f_name}] not present as part of path [{f_name}]")
     no_match = active & src.isNotNull() & ~matched
-    if "__grok_interrupted" in df.columns:
-        no_match = no_match & ~fcol("__grok_interrupted")
-    df = ctx.fail(df, no_match,
-                  spec,
-                  "Provided Grok expressions do not match field value: ["
-                  + f_name + "]")
-    for c in ("__grok_matched", "__grok_interrupted", "__grok_packed",
-              "__grok_parts", "__grok_packed_src"):
-        if c in df.columns:
-            df = df.drop(c)
-    return df
+    if interrupted is not None:
+        no_match = no_match & ~interrupted
+    ctx.fail(st, no_match, spec,
+             "Provided Grok expressions do not match field value: ["
+             + f_name + "]")
+    st.drop("__grok", "__grok_parts", "__grok_packed_src")
+    return st.done()
 
 
 def p_dissect(df, spec, ctx):
@@ -329,14 +324,16 @@ def p_dissect(df, spec, ctx):
                              ~F.map_contains_key(new_map, k)), new_map)
             new_map = F.when(old.isNotNull(), merged).otherwise(new_map)
         updates["_extras"] = new_map
-    df = guarded(df, active & matched, updates)
+    st = Step(df)
+    st.guarded(active & matched, updates,
+               {f: T.StringType() for f in updates if f != "_extras"})
     if not ignore_missing:
-        df = ctx.fail(df, active & src.isNull(), spec,
-                      f"field [{f_name}] is null, cannot process it.")
-    return ctx.fail(
-        df, active & src.isNotNull() & ~matched, spec,
-        f"Unable to find match for dissect pattern: {cfg['pattern']} "
-        f"against source: [{f_name}]")
+        ctx.fail(st, active & src.isNull(), spec,
+                 f"field [{f_name}] is null, cannot process it.")
+    ctx.fail(st, active & src.isNotNull() & ~matched, spec,
+             f"Unable to find match for dissect pattern: {cfg['pattern']} "
+             f"against source: [{f_name}]")
+    return st.done()
 
 
 def p_kv(df, spec, ctx):
@@ -385,6 +382,7 @@ def p_kv(df, spec, ctx):
     if include_keys:
         updates = {f"{target + '.' if target else ''}{prefix}{k}":
                    F.element_at(m, k) for k in include_keys}
+        dtypes = {f: T.StringType() for f in updates}
     else:
         keyfix = (f"{target}." if target else "") + prefix
         new_map = (F.transform_keys(
@@ -397,11 +395,13 @@ def p_kv(df, spec, ctx):
                              ~F.map_contains_key(new_map, k)), new_map)
             new_map = F.when(old.isNotNull(), merged).otherwise(new_map)
         updates = {"_extras": new_map}
-    df = guarded(df, active & src.isNotNull(), updates)
+        dtypes = None
+    st = Step(df)
+    st.guarded(active & src.isNotNull(), updates, dtypes)
     if not ignore_missing:
-        df = ctx.fail(df, active & src.isNull(), spec,
-                      f"field [{f_name}] is null, cannot extract key-value pairs.")
-    return df
+        ctx.fail(st, active & src.isNull(), spec,
+                 f"field [{f_name}] is null, cannot extract key-value pairs.")
+    return st.done()
 
 
 def p_csv(df, spec, ctx):
@@ -434,11 +434,14 @@ def p_csv(df, spec, ctx):
         return c
 
     updates = {t: cell(i) for i, t in enumerate(targets)}
-    df = guarded(df, active & src.isNotNull(), updates)
+    st = Step(df)
+    st.guarded(active & src.isNotNull(), updates,
+               None if empty_value is not None
+               else {t: T.StringType() for t in targets})
     if not ignore_missing:
-        df = ctx.fail(df, active & src.isNull(), spec,
-                      f"field [{f_name}] is null, cannot process it.")
-    return df
+        ctx.fail(st, active & src.isNull(), spec,
+                 f"field [{f_name}] is null, cannot process it.")
+    return st.done()
 
 
 def p_json(df, spec, ctx):
@@ -518,8 +521,9 @@ def p_json(df, spec, ctx):
             ok = ok & no_dup
     if strict_ok is not None:
         ok = ok & strict_ok
-    df = ctx.fail(df, active & src.isNotNull() & ~ok, spec,
-                  f"Unable to parse field [{f_name}] as JSON")
+    st = Step(df)
+    ctx.fail(st, active & src.isNotNull() & ~ok, spec,
+             f"Unable to parse field [{f_name}] as JSON")
     if add_to_root:
         # ES add_to_root: merge the object's top-level keys into the doc
         # root (default replace strategy — new keys win).  With a declared
@@ -556,7 +560,7 @@ def p_json(df, spec, ctx):
                             F.coalesce(new_v, old_v))
                 else:
                     updates[sf.name] = new_v
-            df = guarded(df, active & ok, updates)
+            st.guarded(active & ok, updates)
         else:
             new_map = F.from_json(src, "map<string,string>")
             root_ok = ok & new_map.isNotNull()
@@ -582,13 +586,13 @@ def p_json(df, spec, ctx):
                     F.map_filter(old, lambda k, _:
                                  ~F.map_contains_key(new_map, k)), new_map)
                 new_map = F.when(old.isNotNull(), merged).otherwise(new_map)
-            df = guarded(df, active & root_ok, {"_extras": new_map})
+            st.guarded(active & root_ok, {"_extras": new_map})
     else:
-        df = guarded(df, active & ok, {target: parsed})
+        st.guarded(active & ok, {target: parsed})
     if not ignore_missing:
-        df = ctx.fail(df, active & src.isNull(), spec,
-                      f"field [{f_name}] is null, cannot parse JSON.")
-    return df
+        ctx.fail(st, active & src.isNull(), spec,
+                 f"field [{f_name}] is null, cannot parse JSON.")
+    return st.done()
 
 
 def p_redact(df, spec, ctx):

@@ -17,8 +17,9 @@ re-runs, with index-history cycle detection.
 from __future__ import annotations
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from ..plans.document import INDEX_HISTORY, REROUTED, fcol, guarded
+from ..plans.document import INDEX_HISTORY, REROUTED, Step, fcol
 from .common import _MUSTACHE, template_column
 
 
@@ -104,10 +105,14 @@ def p_reroute(df, spec, ctx):
             "data_stream.dataset": dataset,
             "data_stream.namespace": namespace,
         }
-    df = guarded(df, active, updates)
-    df = df.withColumn(
-        INDEX_HISTORY,
-        F.when(active, F.concat(
-            F.coalesce(fcol(INDEX_HISTORY), F.array().cast("array<string>")),
-            F.array(new_index))).otherwise(fcol(INDEX_HISTORY)))
-    return df.withColumn(REROUTED, fcol(REROUTED) | active)
+    # string options render to strings, and concat_ws is one
+    texts = all(isinstance(cfg.get(k, ""), str)
+                for k in ("destination", "dataset", "namespace"))
+    st = Step(df)
+    st.guarded(active, updates,
+               {k: T.StringType() for k in updates} if texts else None)
+    st.write(INDEX_HISTORY, F.when(active, F.concat(
+        F.coalesce(fcol(INDEX_HISTORY), F.array().cast("array<string>")),
+        F.array(new_index))).otherwise(fcol(INDEX_HISTORY)))
+    st.write(REROUTED, fcol(REROUTED) | active)
+    return st.done()

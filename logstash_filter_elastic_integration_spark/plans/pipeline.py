@@ -33,7 +33,7 @@ from pyspark.sql import types as T
 
 from .document import (
     DROPPED, FAILURE, FAILURE_TYPE, INDEX_HISTORY, PRISTINE, REROUTED,
-    RESERVED, TERMINATED, fcol, guarded, resolver_for, scalarset_update,
+    RESERVED, TERMINATED, Step, fcol, resolver_for, staging_name,
 )
 from ..functions.painless import compile_condition
 
@@ -160,26 +160,38 @@ class CompileContext:
                 spec.if_, resolver_for(df), spec.config.get("params"))
         return cond
 
-    def fail(self, df: DataFrame, cond: Column, spec: ProcessorSpec,
-             message: Column | str) -> DataFrame:
-        """Row-level processor failure.  Honors ignore_failure / on_failure;
-        otherwise stamps __failure (first failure wins)."""
+    def fail(self, target, cond: Column, spec: ProcessorSpec,
+             message: Column | str):
+        """Row-level processor failure, folded into the :class:`Step`
+        ``target`` (a DataFrame ``target`` gets a step of its own and comes
+        back as a DataFrame).  Honors ignore_failure / on_failure; otherwise
+        stamps __failure (first failure wins)."""
+        if isinstance(target, DataFrame):
+            st = Step(target)
+            self.fail(st, cond, spec, message)
+            return st.done()
+        st = target
         if spec.ignore_failure:
-            return df
+            return st
         msg = F.lit(message) if isinstance(message, str) else message
         handlers = spec.on_failure
         if handlers:
-            # run the on_failure sub-chain only on the rows that just failed
-            marker = f"__pfail_{abs(hash((spec.type, id(spec)))) % 10**8}"
-            df = df.withColumn(marker, F.coalesce(cond, F.lit(False)))
-            df = guarded(df, fcol(marker), {
+            # run the on_failure sub-chain only on the rows that just failed:
+            # the marker and the step so far must be real columns first
+            marker = staging_name("__pfail_", self.compile_stack,
+                                  self.pipeline_name, spec.type, spec.config)
+            st.flush()
+            hit = F.coalesce(cond, F.lit(False))
+            st.write(marker, hit)
+            meta = {
                 "_ingest.on_failure_message": msg,
                 "_ingest.on_failure_processor_type": F.lit(spec.type),
                 "_ingest.on_failure_processor_tag": F.lit(spec.tag),
                 # ES IngestDocument ON_FAILURE_PIPELINE_FIELD: the
                 # pipeline the failing processor belonged to
                 "_ingest.on_failure_pipeline": F.lit(self.pipeline_name),
-            })
+            }
+            st.guarded(hit, meta)
             sub_ctx = CompileContext(
                 registry=self.registry,
                 pipeline_name=self.pipeline_name,
@@ -187,22 +199,16 @@ class CompileContext:
                 extra_gate=(fcol(marker) if self.extra_gate is None
                             else self.extra_gate & fcol(marker)),
             )
-            df = _compile_chain(df, handlers, sub_ctx)
-            return df.drop(marker, "_ingest.on_failure_message",
-                           "_ingest.on_failure_processor_type",
-                           "_ingest.on_failure_processor_tag",
-                           "_ingest.on_failure_pipeline")
-        failure = F.struct(
+            st.rebase(_compile_chain(st.flush(), handlers, sub_ctx))
+            st.drop(marker, *meta)
+            return st
+        st.fail(cond, F.struct(
             F.lit(self.pipeline_name).alias("pipeline"),
             F.lit(spec.type).alias("processor_type"),
             F.lit(spec.tag).alias("processor_tag"),
             msg.alias("message"),
-        )
-        return df.withColumn(
-            FAILURE,
-            F.when(fcol(FAILURE).isNull() & F.coalesce(cond, F.lit(False)), failure)
-            .otherwise(fcol(FAILURE)),
-        )
+        ))
+        return st
 
 
 def _compile_chain(df: DataFrame, specs: list[ProcessorSpec],
@@ -240,30 +246,30 @@ def compile_pipeline(pipeline: IngestPipeline, registry: PipelineRegistry,
             # The marker MUST be materialized into a column before FAILURE
             # is cleared (a lazy expression would re-evaluate against the
             # cleared column and never fire).
-            out = out.withColumn(
-                "__plf",
-                fcol(FAILURE).isNotNull()
-                & (fcol(FAILURE)["pipeline"] == pipeline.name))
-            out = out.withColumn("__pl_fail_msg", fcol(FAILURE)["message"])
-            out = out.withColumn(
-                FAILURE, F.when(fcol("__plf"), F.lit(None).cast(FAILURE_TYPE))
-                .otherwise(fcol(FAILURE)))
+            st = Step(out)
+            plf = (fcol(FAILURE).isNotNull()
+                   & (fcol(FAILURE)["pipeline"] == pipeline.name))
+            st.write("__plf", plf)
+            st.write(FAILURE, F.when(plf, F.lit(None).cast(FAILURE_TYPE))
+                     .otherwise(fcol(FAILURE)))
             gate = fcol("__plf")
             hctx = CompileContext(
                 registry=registry, pipeline_name=pipeline.name,
                 compile_stack=compile_stack + (pipeline.name,),
                 extra_gate=(gate if extra_gate is None else extra_gate & gate))
-            out = _compile_chain(out, pipeline.on_failure, hctx)
-            out = out.drop("__pl_fail_msg", "__plf")
+            out = _compile_chain(st.done(), pipeline.on_failure, hctx)
+            out = out.drop("__plf")
         return out
 
     return transform
 
 
-def prepare(df: DataFrame) -> DataFrame:
+def prepare(st: Step) -> None:
     """Add engine state columns + pristine snapshot (the analogue of keeping
     the original Event alive while the IngestDocument mutates —
-    EventProcessor.java:176-184 needs it back on failure).
+    EventProcessor.java:176-184 needs it back on failure).  Written into
+    the caller's step, so columns the caller wrote before (the router's
+    ``_index``) are part of the snapshot.
 
     Input ``tags`` shape enforcement (IngestDuplexMarshaller.java:486-509
     sanitizeEventOptionalTags): a string becomes a one-element list, a
@@ -271,102 +277,92 @@ def prepare(df: DataFrame) -> DataFrame:
     ``_tags`` (the engine's required tags column is recreated empty) —
     BEFORE the pristine snapshot, so failure-restore keeps the sanitized
     view."""
-    if "tags" in df.columns:
-        dt = df.schema["tags"].dataType
+    if "tags" in st.columns:
+        dt = st.field_type("tags")
         if isinstance(dt, T.StringType):
-            df = df.withColumn("tags", F.array(fcol("tags")))
+            st.write("tags", F.array(st.col("tags")))
         elif not (isinstance(dt, T.ArrayType)
                   and isinstance(dt.elementType, T.StringType)):
-            df = df.withColumn("_tags", fcol("tags")) \
-                   .withColumn("tags", F.lit(None).cast("array<string>"))
-    user_cols = [c for c in df.columns if c not in RESERVED]
-    df = df.withColumn(PRISTINE, F.struct(*[fcol(c).alias(c) for c in user_cols]))
-    if "tags" not in df.columns:
-        df = df.withColumn("tags", F.lit(None).cast("array<string>"))
-        user_cols.append("tags")
-    return (
-        df.withColumn(FAILURE, F.lit(None).cast(FAILURE_TYPE))
-        .withColumn(TERMINATED, F.lit(False))
-        .withColumn(DROPPED, F.lit(False))
-        .withColumn(REROUTED, F.lit(False))
-        .withColumn(INDEX_HISTORY,
-                    F.array(fcol("_index")) if "_index" in df.columns
-                    else F.lit(None).cast("array<string>"))
-    )
+            st.write("_tags", st.col("tags"), dt)
+            st.write("tags", F.lit(None).cast("array<string>"))
+    user_cols = [c for c in st.columns if c not in RESERVED]
+    st.write(PRISTINE, F.struct(*[st.col(c).alias(c) for c in user_cols]))
+    if "tags" not in st.columns:
+        st.write("tags", F.lit(None).cast("array<string>"))
+    st.write(FAILURE, F.lit(None).cast(FAILURE_TYPE), FAILURE_TYPE)
+    for flag in (TERMINATED, DROPPED, REROUTED):
+        st.write(flag, F.lit(False), T.BooleanType())
+    st.write(INDEX_HISTORY,
+             F.array(st.col("_index")) if "_index" in st.columns
+             else F.lit(None).cast("array<string>"))
 
 
-def finalize(df: DataFrame) -> DataFrame:
+def finalize(st: Step) -> None:
     """Post-pipeline failure restoration: failed rows revert to the pristine
     snapshot, gain tag `_ingest_pipeline_failure` and the failure metadata
     struct (EventProcessor.java:246-252; docs/index.asciidoc metadata table).
     Success rows get `target_ingest_pipeline = _none`
-    (EventProcessor.java:60-61,233-234)."""
+    (EventProcessor.java:60-61,233-234).  Written into the caller's step;
+    later writes read the restored values through ``st.col``."""
     failed = fcol(FAILURE).isNotNull()
-    pristine_dt = {f.name: f.dataType for f in df.schema[PRISTINE].dataType.fields}
-    current_dt = {f.name: f.dataType for f in df.schema.fields}
-    updates: dict[str, Column] = {}
+    pristine_dt = {f.name: f.dataType
+                   for f in st.field_type(PRISTINE).fields}
     rewrapped: list[str] = []
-    for c in df.columns:
+    for c in st.columns:
         if c in RESERVED or c == "tags":
             continue
+        cur = st.field_type(c)
         if c in pristine_dt:
             restored = fcol(PRISTINE)[c]
             # a processor may have retyped the column (e.g. append's
             # scalar->array promotion): coerce the pristine value to match
-            if pristine_dt[c] != current_dt[c]:
-                cur = current_dt[c]
+            if pristine_dt[c] != cur:
                 if (isinstance(cur, T.ArrayType)
                         and cur.elementType == pristine_dt[c]):
                     restored = F.when(restored.isNotNull(), F.array(restored))
                     rewrapped.append(c)
                 else:
                     restored = restored.cast(cur)
-            updates[c] = F.when(failed, restored).otherwise(fcol(c))
+            st.write(c, F.when(failed, restored).otherwise(fcol(c)), cur)
         else:
-            updates[c] = F.when(failed, F.lit(None)).otherwise(fcol(c))
+            st.write(c, F.when(failed, F.lit(None)).otherwise(fcol(c)), cur)
     pristine_tags = (fcol(PRISTINE)["tags"] if "tags" in pristine_dt
                      else F.lit(None).cast("array<string>"))
-    updates["tags"] = F.when(
+    st.write("tags", F.when(
         failed,
         F.array_union(F.coalesce(pristine_tags, F.array()),
                       F.array(F.lit("_ingest_pipeline_failure"))),
-    ).otherwise(fcol("tags"))
-    df = df.withColumns(updates)
+    ).otherwise(fcol("tags")))
     for c in rewrapped:
         # restored pristine value is a wrapped scalar — per-row registry
         # keeps it rendering/reading as the scalar it was
-        df = scalarset_update(df, c, added=failed, cleared=F.lit(False))
-    df = df.withColumn(
-        "_ingest_pipeline_failure",
-        F.when(failed, F.struct(
-            fcol(FAILURE)["pipeline"].alias("pipeline"),
-            fcol(FAILURE)["message"].alias("message"),
-            fcol(FAILURE)["processor_type"].alias("exception"),
-        )),
-    )
-    df = df.withColumn(
-        "target_ingest_pipeline", F.when(~failed, F.lit("_none")))
-    df = sanitize_reserved(df)
-    df = surface_ingest_document_metadata(df)
-    return df.drop(PRISTINE)
+        st.scalarset_update(c, added=failed, cleared=F.lit(False))
+    st.write("_ingest_pipeline_failure", F.when(failed, F.struct(
+        fcol(FAILURE)["pipeline"].alias("pipeline"),
+        fcol(FAILURE)["message"].alias("message"),
+        fcol(FAILURE)["processor_type"].alias("exception"),
+    )))
+    st.write("target_ingest_pipeline", F.when(~failed, F.lit("_none")))
+    sanitize_reserved(st)
+    surface_ingest_document_metadata(st)
+    st.drop(PRISTINE)
 
 
-def _ts_fallback(df: DataFrame):
+def _ts_fallback(st: Step):
     """@timestamp fallback chain (IngestDuplexMarshaller.java
     sanitizeEventRequiredTimestamp): `event.created` -> ingest timestamp
     (current_timestamp is evaluated once per query — the Spark analogue of
     the document's init/ingest time)."""
     now_s = F.date_format(F.current_timestamp(), "yyyy-MM-dd'T'HH:mm:ss.SSSXXX")
     chain = []
-    if "event.created" in df.columns and isinstance(
-            df.schema["event.created"].dataType, T.StringType):
-        ec = fcol("event.created")
+    if isinstance(st.field_type("event.created"), T.StringType):
+        ec = st.col("event.created")
         chain.append(F.when(F.try_to_timestamp(ec).isNotNull(), ec))
     chain.append(now_s)
     return F.coalesce(*chain)
 
 
-def sanitize_reserved(df: DataFrame) -> DataFrame:
+def sanitize_reserved(st: Step) -> None:
     """Reserved-field sanitization on the way out (SURVEY §1.3;
     IngestDuplexMarshaller.java:237-252,357-509 + docs/index.asciidoc
     fallback table):
@@ -380,43 +376,37 @@ def sanitize_reserved(df: DataFrame) -> DataFrame:
     - ``@metadata`` must be map-shaped (MapType/StructType in the static
       model) else it moves to ``_@metadata`` and an empty map applies.
     """
-    if "@timestamp" in df.columns:
-        dt = df.schema["@timestamp"].dataType
+    if "@timestamp" in st.columns:
+        dt = st.field_type("@timestamp")
+        v = st.col("@timestamp")
         if isinstance(dt, T.StringType):
-            v = fcol("@timestamp")
             coercible = F.coalesce(
                 F.try_to_timestamp(v),
                 F.try_to_timestamp(v, F.lit("yyyy-MM-dd'T'HH:mm:ss.SSSXXX")),
                 F.try_to_timestamp(v, F.lit("yyyy-MM-dd'T'HH:mm:ssXXX")),
             ).isNotNull()
-            df = df.withColumn("_@timestamp",
-                               F.when(v.isNotNull() & ~coercible, v))
-            df = df.withColumn(
-                "@timestamp",
-                F.when(coercible, v).otherwise(_ts_fallback(df)))
+            st.write("_@timestamp", F.when(v.isNotNull() & ~coercible, v))
+            st.write("@timestamp",
+                     F.when(coercible, v).otherwise(_ts_fallback(st)))
         elif not isinstance(dt, (T.TimestampType, T.DateType)):
             # non-string, non-temporal: the reference brute-forces
             # toString -> Timestamp(...), which fails for these shapes ->
             # original to _@timestamp, required value from the fallbacks
-            df = df.withColumn("_@timestamp", fcol("@timestamp"))
-            df = df.withColumn("@timestamp", _ts_fallback(df))
-    if "@version" in df.columns:
-        v = fcol("@version").cast("string")
+            st.write("_@timestamp", v, dt)
+            st.write("@timestamp", _ts_fallback(st))
+    if "@version" in st.columns:
+        v = st.col("@version").cast("string")
         ok = v.rlike("^[0-9]+$")
-        df = df.withColumn("_@version", F.when(v.isNotNull() & ~ok, v))
-        df = df.withColumn("@version",
-                           F.when(ok, v).otherwise(F.lit("1")))
-    if "@metadata" in df.columns:
-        dt = df.schema["@metadata"].dataType
+        st.write("_@version", F.when(v.isNotNull() & ~ok, v))
+        st.write("@version", F.when(ok, v).otherwise(F.lit("1")))
+    if "@metadata" in st.columns:
+        dt = st.field_type("@metadata")
         if not isinstance(dt, (T.MapType, T.StructType)):
-            df = df.withColumn("_@metadata", fcol("@metadata"))
-            df = df.withColumn(
-                "@metadata",
-                F.create_map().cast("map<string,string>"))
-    return df
+            st.write("_@metadata", st.col("@metadata"), dt)
+            st.write("@metadata", F.create_map().cast("map<string,string>"))
 
 
-def surface_ingest_document_metadata(df: DataFrame) -> DataFrame:
+def surface_ingest_document_metadata(st: Step) -> None:
     """``[@metadata][_ingest_document]`` surfacing
     (IngestDuplexMarshaller.java:331-346 normalizeIngestDocumentMetadata):
     the document's index/id/version/version_type/routing plus the ingest
@@ -429,15 +419,15 @@ def surface_ingest_document_metadata(df: DataFrame) -> DataFrame:
     for out_name, col_name in (("index", "_index"), ("id", "_id"),
                                ("version_type", "_version_type"),
                                ("routing", "_routing")):
-        if col_name in df.columns:
-            parts.append(fcol(col_name).alias(out_name))
-    version = (fcol("_version").cast("long") if "_version" in df.columns
+        if col_name in st.columns:
+            parts.append(st.col(col_name).alias(out_name))
+    version = (st.col("_version").cast("long") if "_version" in st.columns
                else F.lit(1).cast("long"))
     parts.append(version.alias("version"))
     parts.append(F.date_format(
         F.current_timestamp(),
         "yyyy-MM-dd'T'HH:mm:ss.SSSXXX").alias("timestamp"))
-    return df.withColumn("@metadata._ingest_document", F.struct(*parts))
+    st.write("@metadata._ingest_document", F.struct(*parts))
 
 
 def run_pipeline(df: DataFrame, name: str, registry: PipelineRegistry,
@@ -446,8 +436,11 @@ def run_pipeline(df: DataFrame, name: str, registry: PipelineRegistry,
     reroute fixpoint use the pieces directly (router.py keeps state across
     iterations)."""
     pipeline = registry.pipelines[name]
-    out = compile_pipeline(pipeline, registry)(prepare(df))
-    out = finalize(out)
+    st = Step(df)
+    prepare(st)
+    out = compile_pipeline(pipeline, registry)(st.done())
+    st = Step(out)
+    finalize(st)
     if not keep_state:
-        out = out.drop(FAILURE, TERMINATED, REROUTED, INDEX_HISTORY)
-    return out
+        st.drop(FAILURE, TERMINATED, REROUTED, INDEX_HISTORY)
+    return st.done()

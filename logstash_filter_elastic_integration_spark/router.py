@@ -26,14 +26,18 @@ that defuses hot-conversation / hot-sink skew in output file sizes.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field as dc_field
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import types as T
 
 from .plans.document import (
-    DROPPED, FAILURE, INDEX_HISTORY, REROUTED, fcol,
+    DROPPED, FAILURE, INDEX_HISTORY, REROUTED, TERMINATED, Step, fcol,
 )
-from .plans.pipeline import PipelineRegistry, compile_pipeline, finalize, prepare
+from .plans.pipeline import (
+    CompileContext, PipelineRegistry, ProcessorSpec, compile_pipeline,
+    finalize, prepare,
+)
 
 
 @dataclass
@@ -54,45 +58,31 @@ class Router:
     # the reference's reroute loop.
     pipeline_name: str | None = None
     pipeline_field: str | None = None
-    # compiled-plan cache: (analyzed input LogicalPlan, compiled output
-    # DataFrame).  Keyed by Catalyst ``sameResult`` — the exact identity
-    # Spark's own CacheManager uses for cross-query cache reuse — so a hit
-    # is PROVABLY the same input relation and the compiled (lazy, never
-    # executed here) plan is reusable verbatim.  This removes the repeated
-    # driver-side pipeline compile (~0.5-1.5 s of py4j round-trips per
-    # call) when the same Router executes over the same input more than
-    # once (bench passes, resumed jobs, per-sink re-reads); no data or
-    # results are cached — every action on the returned frame recomputes
-    # from the source.
-    _exec_cache: list = dc_field(default_factory=list, repr=False,
-                                 compare=False)
-
-    def resolve_index(self, df: DataFrame) -> DataFrame:
-        if "_index" in df.columns:
-            return df
+    def _index_expr(self, st: Step) -> Column:
+        """``_index`` from ``data_stream.{type,dataset,namespace}``."""
         parts = []
         for c, default in (("data_stream.type", "logs"),
                            ("data_stream.dataset", "generic"),
                            ("data_stream.namespace", "default")):
-            parts.append(F.coalesce(fcol(c).cast("string"), F.lit(default))
-                         if c in df.columns else F.lit(default))
-        return df.withColumn("_index", F.concat_ws("-", *parts))
+            parts.append(F.coalesce(st.col(c).cast("string"), F.lit(default))
+                         if c in st.columns else F.lit(default))
+        return F.concat_ws("-", *parts)
 
-    def _resolve_pipeline_name(self, df: DataFrame) -> Column:
+    def _resolve_pipeline_name(self, st: Step) -> Column:
         """Initial per-row pipeline name: override resolvers first
         (sprintf template / field value), else the index routing table.
         Null = unresolved -> the row passes through unmodified."""
         if self.pipeline_name is not None:
-            return self._sprintf_expr(self.pipeline_name, df)
+            return self._sprintf_expr(self.pipeline_name, st)
         if self.pipeline_field is not None:
-            if self.pipeline_field not in df.columns:
+            if self.pipeline_field not in st.columns:
                 return F.lit(None).cast("string")
-            return fcol(self.pipeline_field).cast("string")
-        return self._pipeline_for_index(fcol("_index"))
+            return st.col(self.pipeline_field).cast("string")
+        return self._pipeline_for_index(st.col("_index"))
 
     _SPRINTF = __import__("re").compile(r"%\{([^}]+)\}")
 
-    def _sprintf_expr(self, template: str, df: DataFrame) -> Column:
+    def _sprintf_expr(self, template: str, st: Step) -> Column:
         """Logstash sprintf template -> Column.  Field refs ``%{name}`` /
         ``%{[a][b]}`` map to (dotted) flat columns; a reference to a
         missing column or a null value leaves the template unresolved for
@@ -106,8 +96,8 @@ class Router:
                 parts.append(F.lit(template[pos:m.start()]))
             ref = m.group(1)
             name = ref.strip("[]").replace("][", ".")
-            if name in df.columns:
-                col = fcol(name).cast("string")
+            if name in st.columns:
+                col = st.col(name).cast("string")
                 unresolved = unresolved | col.isNull()
                 parts.append(F.coalesce(col, F.lit("")))
             else:
@@ -205,31 +195,21 @@ class Router:
         routing table can reach; hop k>0 inlines only pipelines reachable
         via hop k-1's reroute targets (static analysis above), and the loop
         stops as soon as no reroute-capable pipeline remains — so a
-        reroute-free routing table compiles to exactly one narrow pass."""
-        try:
-            jplan = df._jdf.queryExecution().analyzed()
-            for cached_plan, cached_out in self._exec_cache:
-                if cached_plan.sameResult(jplan):
-                    return cached_out
-        except Exception:
-            jplan = None
-        out = self._execute_impl(df)
-        if jplan is not None:
-            self._exec_cache.append((jplan, out))
-            del self._exec_cache[:-4]
-        return out
-
-    def _execute_impl(self, df: DataFrame) -> DataFrame:
-        df = self.resolve_index(df)
-        df = prepare(df)
-        df = df.withColumn("__pipeline", self._resolve_pipeline_name(df))
+        reroute-free routing table compiles to exactly one narrow pass.
+        Every call compiles afresh against the current configuration and
+        the input's current file listing."""
+        st = Step(df)
+        if "_index" not in st.columns:
+            st.write("_index", self._index_expr(st), T.StringType())
+        prepare(st)
+        st.write("__pipeline", self._resolve_pipeline_name(st))
+        df = st.done()
 
         hop_pipelines = self._reachable_pipelines()
         if self.pipeline_name is not None or self.pipeline_field is not None:
             # dynamic override can resolve to names no static analysis can
             # enumerate: rows naming an unregistered pipeline fail with the
             # reference's "pipeline not loaded" (EventProcessor.java:160-168)
-            from .plans.pipeline import CompileContext, ProcessorSpec
             known = set(self.registry.pipelines) | {"_none"}
             unknown = (fcol("__pipeline").isNotNull()
                        & ~fcol("__pipeline").isin(*known))
@@ -248,7 +228,6 @@ class Router:
                     # resolved to an unregistered pipeline: reference emits
                     # original + failure "pipeline not loaded"
                     # (EventProcessor.java:160-168)
-                    from .plans.pipeline import CompileContext, ProcessorSpec
                     ctx = CompileContext(self.registry, name)
                     df = ctx.fail(df, ctx.base_active(df) & gate,
                                   ProcessorSpec("pipeline", {}),
@@ -265,27 +244,28 @@ class Router:
             seen_before = (F.size(F.filter(
                 hist, lambda x: x == fcol("_index"))) > 1)
             cycle = rer & seen_before
-            from .plans.pipeline import CompileContext, ProcessorSpec
+            st = Step(df)
             ctx = CompileContext(self.registry, "_reroute")
-            df = ctx.fail(df, cycle & fcol(FAILURE).isNull(),
-                          ProcessorSpec("reroute", {}),
-                          "index cycle detected while processing event")
+            ctx.fail(st, cycle & fcol(FAILURE).isNull(),
+                     ProcessorSpec("reroute", {}),
+                     "index cycle detected while processing event")
             # rows that completed this hop (not rerouted) are done; only
             # healthy rerouted rows get a pipeline for the next hop.
             # TERMINATED/REROUTED reset per hop — each hop is a fresh
             # pipeline execution (IngestDocument resets between executions).
-            from .plans.document import TERMINATED
-            df = df.withColumn(
-                "__pipeline",
-                F.when(rer & fcol(FAILURE).isNull(),
-                       self._pipeline_for_index(fcol("_index")))
+            st.write("__pipeline", F.when(
+                rer & st.col(FAILURE).isNull(),
+                self._pipeline_for_index(fcol("_index")))
                 .otherwise(F.lit(None).cast("string")))
-            df = df.withColumn(REROUTED, F.lit(False))
-            df = df.withColumn(TERMINATED, F.lit(False))
+            st.write(REROUTED, F.lit(False))
+            st.write(TERMINATED, F.lit(False))
+            df = st.done()
 
-        df = finalize(df)
-        df = df.withColumn("__sink", F.coalesce(fcol("_index"), F.lit("_unrouted")))
-        return df.drop("__pipeline")
+        st = Step(df)
+        finalize(st)
+        st.write("__sink", F.coalesce(st.col("_index"), F.lit("_unrouted")))
+        st.drop("__pipeline")
+        return st.done()
 
     def _reachable_pipelines(self) -> list[str]:
         """Pipelines hop 0 can assign.  With a constant pipeline_name

@@ -67,3 +67,61 @@ def test_painless_containskey(spark):
     by = {r["maybe"]: r for r in out}
     assert by["v"]["has_it"] == "yes"
     assert by[None]["has_it"] is None
+
+
+# Dataset-creating JVM calls: each one re-analyses the whole plan, so
+# their count is what a compile costs (py4j round trips besides these are
+# cheap).  Counted, not timed, so the pin is deterministic on a noisy host.
+_DATASET_CALLS = {"withColumn", "withColumns", "select", "drop", "join",
+                  "filter"}
+
+
+def test_warm_facade_compile_budget(spark, tmp_path):
+    """A warm facade compile of examples/pipelines (the integration-mix
+    shape: routing table, reroute hop, grok, user_agent, painless loop,
+    lookup) stays within 40 Dataset-creating calls and collects the lookup
+    dim exactly once."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from logstash_filter_elastic_integration_spark.sources.datagen import (
+        tool_dim, transcripts)
+
+    src = str(tmp_path / "mix")
+    (transcripts(spark, 200)
+     .withColumn("ua", F.lit("curl/8.4.0")).write.parquet(src))
+    frame = (spark.read.parquet(src)
+             .withColumn("data_stream.type", F.lit("logs"))
+             .withColumn("data_stream.dataset", F.lit("web.access"))
+             .withColumn("data_stream.namespace", F.lit("default")))
+    pipelines = os.path.join(os.path.dirname(__file__), "..", "examples",
+                             "pipelines")
+    dims = {"tool_dim": tool_dim(spark)}
+
+    def compile_once():
+        return SparkIngestFilter(
+            pipelines=pipelines, dims=dims,
+            routing={"logs-web.access-default": "logs-web",
+                     "logs-web.tools-*": "logs-tools"}).filter(frame)
+
+    compile_once()  # cold
+    client = spark.sparkContext._gateway._gateway_client
+    orig = client.send_command
+    calls: list[str] = []
+
+    def send_command(command, *a, **kw):
+        parts = command.split("\n")
+        if len(parts) > 2 and parts[0] == "c" and parts[1].startswith("o"):
+            calls.append(parts[2])
+        return orig(command, *a, **kw)
+
+    client.send_command = send_command
+    try:
+        out = compile_once()
+    finally:
+        client.send_command = orig
+    dataset = [c for c in calls if c in _DATASET_CALLS]
+    assert len(dataset) <= 40, sorted(dataset)
+    assert calls.count("collectToPython") == 1
+    assert out.count() == 200

@@ -1,8 +1,9 @@
-"""Focused pins for the r6 compile caches: every cache is PLAN-level
-(lazy frames, keyed/gated by Catalyst sameResult) and never result-level.
+"""Focused pins for the compile caches: every cache is PLAN-level (lazy
+frames, keyed/gated by Catalyst sameResult) and never result-level.
 
-- Router.execute returns the SAME compiled frame for a provably-identical
-  input relation and a DIFFERENT one when the input changes;
+- Router.execute caches nothing: files appended to its input directory
+  and routing changes made after a first call both show on the next call;
+- the compiled-condition cache stays under its cap;
 - _pipe's compiled-pipeline cache hits on identical (spec, input) and
   misses when the processor spec changes;
 - the pure-plan query memo wraps exactly the whitelisted builders —
@@ -36,38 +37,55 @@ def _mini_router():
     return Router(registry=reg, routing={"logs-a-default": "p"})
 
 
-def test_router_exec_cache_hits_on_same_plan(spark):
-    r = _mini_router()
-    df = spark.range(10).select(
-        F.col("id"), F.lit("logs-a-default").alias("_index"))
-    out1 = r.execute(df)
-    out2 = r.execute(spark.range(10).select(
-        F.col("id"), F.lit("logs-a-default").alias("_index")))
-    assert out1 is out2  # sameResult plan -> compiled frame reused
-    # a different input relation must NOT hit
-    out3 = r.execute(spark.range(11).select(
-        F.col("id"), F.lit("logs-a-default").alias("_index")))
-    assert out3 is not out1
-    assert out1.count() == 10 and out3.count() == 11
-
-
-def test_router_exec_cache_holds_no_materialized_data(spark, tmp_path):
-    """A cache hit is a PLAN reuse, not a result: the cached frame's plan
-    still roots at the source scan (no InMemoryRelation / LogicalRDD
-    snapshot), so every action recomputes from the source files."""
+def test_router_sees_files_appended_between_executes(spark, tmp_path):
+    """Router.execute compiles afresh per call, so a re-read of a parquet
+    directory after new files land returns every row (a plan cache keyed
+    on Catalyst sameResult matched the old file listing here)."""
     p = str(tmp_path / "src")
     spark.range(5).withColumn("_index", F.lit("logs-a-default")) \
         .write.mode("overwrite").parquet(p)
     r = _mini_router()
-    df1 = spark.read.parquet(p)
-    out = r.execute(df1)
-    assert out is r.execute(spark.read.parquet(p))  # hit
-    plan = out._jdf.queryExecution().analyzed().toString()
-    assert "Relation" in plan and "parquet" in plan
-    for snapshot_node in ("InMemoryRelation", "LogicalRDD",
-                          "Scan ExistingRDD"):
-        assert snapshot_node not in plan
-    assert out.count() == 5
+    assert r.execute(spark.read.parquet(p)).count() == 5
+    spark.range(5, 8).withColumn("_index", F.lit("logs-a-default")) \
+        .write.mode("append").parquet(p)
+    out = r.execute(spark.read.parquet(p))
+    assert out.count() == 8
+    assert {row["mark"] for row in out.collect()} == {"x"}
+
+
+def test_router_routing_change_after_execute_takes_effect(spark):
+    r = _mini_router()
+    r.registry.register("q", {"processors": [
+        {"set": {"field": "mark", "value": "y"}}]})
+
+    def frame():
+        return spark.range(3).select(
+            F.col("id"), F.lit("logs-a-default").alias("_index"))
+
+    assert {row["mark"] for row in r.execute(frame()).collect()} == {"x"}
+    r.routing["logs-a-default"] = "q"
+    assert {row["mark"] for row in r.execute(frame()).collect()} == {"y"}
+
+
+def test_condition_cache_is_bounded(spark):
+    """The compiled-condition cache is LRU-capped: compiling more distinct
+    `if` conditions than the cap keeps it at the cap, and every compiled
+    condition still evaluates right."""
+    from logstash_filter_elastic_integration_spark.functions import painless
+    from logstash_filter_elastic_integration_spark.plans.document import (
+        resolver_for)
+    cap = painless._COND_CACHE.cap
+    df = spark.createDataFrame([(7,)], "n int")
+    resolve = resolver_for(df)
+    conds = [painless.compile_condition(f"ctx.n > {i}", resolve)
+             for i in range(cap + 20)]
+    assert len(painless._COND_CACHE) <= cap
+    picks = [0, 6, 7, cap + 19]
+    row = df.select(*[conds[i].alias(f"c{i}") for i in picks]).first()
+    assert [row[f"c{i}"] for i in picks] == [True, True, False, False]
+    # an evicted condition recompiles to the same answer
+    again = painless.compile_condition("ctx.n > 0", resolve)
+    assert df.select(again.alias("c")).first()["c"] is True
 
 
 def test_pipe_cache_hit_and_spec_miss(spark):

@@ -307,3 +307,61 @@ def test_user_agent_codegen_compiles_full_scale_bank(spark, tmp_path):
     assert last["user_agent.device.name"] == "Device 79"
     assert got["SynthAgent0000/1.0"]["user_agent.name"] == "SynthAgent0000"
     assert got["nothing-matches"]["user_agent.name"] == "Other"
+
+
+# ------------------------------------------------ plan determinism --------
+_NESTED_DEFINITION = {"processors": [
+    {"community_id": {}},
+    {"convert": {"field": "a", "type": "integer", "on_failure": [
+        {"set": {"field": "err", "value": "{{_ingest.on_failure_message}}"}},
+        {"convert": {"field": "b", "type": "integer", "on_failure": [
+            {"set": {"field": "err2", "value": "inner"}}]}}]}},
+]}
+
+
+def test_plans_identical_across_registries(spark):
+    """Staging-column names derive from the pipeline content, never from
+    object ids or the per-process str hash: two separately parsed
+    registries of a pipeline with nested on_failure and community_id
+    compile to the same analyzed plan (expression ids and the counter
+    suffix of lambda variable names, both session-global, masked)."""
+    import json
+    import re
+
+    from logstash_filter_elastic_integration_spark.plans import (
+        PipelineRegistry, run_pipeline)
+    from logstash_filter_elastic_integration_spark.plans.document import (
+        staging_name)
+    df = spark.createDataFrame(
+        [("10.0.0.1", "10.0.0.2", 1000, 80, "tcp", "x", "y")],
+        "`source.ip` string, `destination.ip` string, `source.port` int, "
+        "`destination.port` int, `network.transport` string, a string, "
+        "b string")
+    plans = []
+    for _ in range(2):
+        reg = PipelineRegistry()
+        reg.register("p", json.dumps(_NESTED_DEFINITION))
+        out = run_pipeline(df, "p", reg)
+        plans.append(re.sub(r"(_\d+)?#\d+L?", "#",
+                            out._jdf.queryExecution().analyzed().toString()))
+    assert plans[0] == plans[1]
+    assert staging_name("__cidhex_", "network.community_id") in plans[0]
+    assert "__pfail_" in plans[0]
+    row = out.first()
+    assert row["err2"] == "inner" and row["network.community_id"]
+
+
+def test_staging_names_do_not_depend_on_the_hash_seed():
+    import os
+    import subprocess
+    import sys
+    code = ("from logstash_filter_elastic_integration_spark.plans.document "
+            "import staging_name; "
+            "print(staging_name('__pfail_', ('p',), 'p', 'convert', "
+            "{'field': 'a'}))")
+    names = {subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True,
+        cwd=os.path.join(os.path.dirname(__file__), ".."),
+        env={**os.environ, "PYTHONHASHSEED": seed}, check=True).stdout
+        for seed in ("1", "2")}
+    assert len(names) == 1
