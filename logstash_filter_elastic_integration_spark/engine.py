@@ -4,47 +4,19 @@ lands on when switching to Spark.
 Mirrors the plugin's configuration surface (lib/logstash/filters/
 elastic_integration.rb): pipeline definitions (a dict or a local directory
 of JSON files — the LocalDirectoryPipelineConfigurationResolver shape),
-an event->pipeline resolution strategy (sprintf template with `_none`
-bypass, SprintfTemplateEventToPipelineNameResolver.java:32-60, OR the
-datastream index routing table), lookup dims (geoip databases analogue),
-and a ``filter`` method standing in for ``multi_filter``.
+lookup dims (geoip databases analogue), and a ``filter`` method standing
+in for ``multi_filter``.  Event->pipeline resolution is the ``Router``'s,
+the one path behind every entry point: the ``pipeline_name`` option (a
+constant or sprintf template, SprintfTemplateEventToPipelineNameResolver.
+java:32-60) or else the datastream index routing table.
 """
 
 from __future__ import annotations
 
-import re
+from pyspark.sql import DataFrame
 
-from pyspark.sql import DataFrame, functions as F
-
-from .plans.document import Step, fcol
-from .plans.pipeline import PipelineRegistry, run_pipeline
+from .plans.pipeline import PipelineRegistry
 from .router import Router
-
-_SPRINTF = re.compile(r"%\{\[?([^}\]]+)\]?\}")
-
-
-def sprintf_column(df: DataFrame, template: str):
-    """Logstash sprintf template ('pipe-%{[service]}') -> Column; returns
-    None for any row with an unresolved field (the reference SKIPS such
-    events — SprintfTemplateEventToPipelineNameResolver contract)."""
-    parts = []
-    pos = 0
-    missing = F.lit(False)
-    for m in _SPRINTF.finditer(template):
-        if m.start() > pos:
-            parts.append(F.lit(template[pos:m.start()]))
-        ref = m.group(1).replace("][", ".")
-        if ref in df.columns:
-            parts.append(fcol(ref).cast("string"))
-            missing = missing | fcol(ref).isNull()
-        else:
-            missing = F.lit(True)
-            parts.append(F.lit(""))
-        pos = m.end()
-    if pos < len(template):
-        parts.append(F.lit(template[pos:]))
-    col = F.concat(*parts) if parts else F.lit(template)
-    return F.when(~missing, col)
 
 
 class SparkIngestFilter:
@@ -52,15 +24,19 @@ class SparkIngestFilter:
     DataFrame (the ``multi_filter`` analogue — every input row comes back,
     transformed / failure-tagged / cancelled-flagged).
 
-    Plugin-option parity (docs/index.asciidoc:375-396): ``pipeline_name``
-    (sprintf/field templates), ``geoip_database_directory``, and the
-    pipeline/template sources map 1:1.  The remaining reference options —
-    ``hosts``/``cloud_id``/``api_key``/``username``/``password``/
-    ``proxy``/``ssl_*`` — exist only to FETCH pipeline definitions and
-    databases from a live Elasticsearch cluster; this engine takes those
-    same artifacts locally (``pipelines=`` dir/dict, ``dims=``,
-    ``geoip_database_directory=``), so connectivity/auth options have no
-    analogue by construction rather than as a gap."""
+    Plugin-option parity (docs/index.asciidoc:375-396): ``pipeline_name``,
+    ``geoip_database_directory``, and the pipeline/template sources map
+    1:1.  ``pipeline_name`` is handed to the ``Router`` as is, so it
+    resolves exactly as the reference does (EventProcessor.java:113-168):
+    an unresolved template passes the row through, ``_none`` bypasses, and
+    a name that is not loaded returns the original row tagged
+    ``_ingest_pipeline_failure`` ("pipeline not loaded").  The remaining
+    reference options — ``hosts``/``cloud_id``/``api_key``/``username``/
+    ``password``/``proxy``/``ssl_*`` — exist only to FETCH pipeline
+    definitions and databases from a live Elasticsearch cluster; this
+    engine takes those same artifacts locally (``pipelines=`` dir/dict,
+    ``dims=``, ``geoip_database_directory=``), so connectivity/auth options
+    have no analogue by construction rather than as a gap."""
 
     def __init__(self,
                  pipelines: dict | str | None = None,
@@ -82,9 +58,8 @@ class SparkIngestFilter:
         # FILENAME — exactly how the reference matches a processor's
         # database_file.  Loaded lazily on first filter() (needs a session).
         self._geoip_dir = geoip_database_directory
-        self.pipeline_name = pipeline_name  # sprintf template override
         self.router = Router(registry=self.registry, routing=routing or {},
-                             max_hops=max_hops)
+                             max_hops=max_hops, pipeline_name=pipeline_name)
 
     def filter(self, df: DataFrame) -> DataFrame:
         if self._geoip_dir is not None:
@@ -96,24 +71,4 @@ class SparkIngestFilter:
                     self.registry.dims[fn] = load_mmdb_dim(
                         df.sparkSession, os.path.join(self._geoip_dir, fn))
             self._geoip_dir = None
-        if self.pipeline_name is not None:
-            return self._filter_by_template(df)
         return self.router.execute(df)
-
-    def _filter_by_template(self, df: DataFrame) -> DataFrame:
-        """Template resolution path: resolve per-row pipeline name; `_none`
-        or unresolved rows pass through untouched
-        (EventProcessor.java:128-139)."""
-        from .plans.pipeline import compile_pipeline, finalize, prepare
-
-        st = Step(df)
-        st.write("__pipeline", sprintf_column(df, self.pipeline_name))
-        prepare(st)
-        df = st.done()
-        for name, pipe in self.registry.pipelines.items():
-            gate = fcol("__pipeline") == name
-            df = compile_pipeline(pipe, self.registry, extra_gate=gate)(df)
-        st = Step(df)
-        finalize(st)
-        st.drop("__pipeline")
-        return st.done()

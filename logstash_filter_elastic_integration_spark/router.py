@@ -51,11 +51,13 @@ class Router:
     # pipeline-name override resolvers (plugin `pipeline_name` option).
     # pipeline_name: a constant or sprintf template ("logs-%{[svc]}") that
     # BYPASSES index-based resolution (SprintfTemplateEventToPipelineName-
-    # Resolver.java:32-60); a row whose template doesn't fully resolve
-    # passes through unmodified (reference :128-132).  pipeline_field: take
-    # the name from a field's string value (FieldValueEventToPipelineName-
-    # Resolver.java).  Reroute hops still re-resolve via the index, like
-    # the reference's reroute loop.
+    # Resolver.java:32-60).  Per row, as the reference (EventProcessor.java:
+    # 113-168): a template that doesn't fully resolve passes the row
+    # through unmodified, `_none` bypasses, and a name that is not loaded
+    # returns the original row failure-tagged "pipeline not loaded [name]".
+    # pipeline_field: take the name from a field's string value (FieldValue-
+    # EventToPipelineNameResolver.java), same semantics.  Reroute hops still
+    # re-resolve via the index, like the reference's reroute loop.
     pipeline_name: str | None = None
     pipeline_field: str | None = None
     def _index_expr(self, st: Step) -> Column:
@@ -209,8 +211,10 @@ class Router:
         if self.pipeline_name is not None or self.pipeline_field is not None:
             # dynamic override can resolve to names no static analysis can
             # enumerate: rows naming an unregistered pipeline fail with the
-            # reference's "pipeline not loaded" (EventProcessor.java:160-168)
-            known = set(self.registry.pipelines) | {"_none"}
+            # reference's "pipeline not loaded" (EventProcessor.java:160-168).
+            # Sorted: a set's order follows PYTHONHASHSEED, and the plan
+            # must not differ between driver processes.
+            known = sorted(set(self.registry.pipelines) | {"_none"})
             unknown = (fcol("__pipeline").isNotNull()
                        & ~fcol("__pipeline").isin(*known))
             ctx = CompileContext(self.registry, "_resolver")

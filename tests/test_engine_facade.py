@@ -5,17 +5,25 @@ def test_sprintf_template_resolution_and_none_bypass(spark):
     eng = SparkIngestFilter(
         pipelines={"svc-a": {"processors": [
             {"set": {"field": "handled", "value": "a"}}]}},
-        pipeline_name="svc-%{[service]}")
+        pipeline_name="%{[service]}")
     df = spark.createDataFrame(
-        [("a", "x"), ("b", "y"), (None, "z")], "service string, payload string")
-    out = {r["payload"]: r.asDict() for r in eng.filter(df).collect()}
+        [("svc-a", "x"), ("svc-b", "y"), (None, "z"), ("_none", "n")],
+        "service string, payload string")
+    out = {r["payload"]: r.asDict(recursive=True)
+           for r in eng.filter(df).collect()}
     assert out["x"]["handled"] == "a"
-    # resolved to unregistered 'svc-b' -> passthrough (template path does
-    # not hard-fail; the reference skips unresolvable pipelines)
+    # resolved to unregistered 'svc-b' -> the original event, failed with
+    # "pipeline not loaded" (EventProcessor.java:160-168)
     assert out["y"]["handled"] is None
-    assert (out["y"]["tags"] or []) == []
-    # unresolved field -> skip
+    assert "_ingest_pipeline_failure" in (out["y"]["tags"] or [])
+    assert (out["y"]["_ingest_pipeline_failure"]["message"]
+            == "pipeline not loaded [svc-b]")
+    # unresolved field -> skip: passes through, untagged
     assert out["z"]["handled"] is None
+    assert (out["z"]["tags"] or []) == []
+    # `_none` -> bypass, untagged
+    assert out["n"]["handled"] is None
+    assert (out["n"]["tags"] or []) == []
 
 
 def test_directory_registration(spark, tmp_path):
@@ -33,6 +41,7 @@ def test_cli_end_to_end(spark, tmp_path):
     """python -m logstash_filter_elastic_integration_spark — the spark-submit deployment
     surface, run as a subprocess over real data."""
     import json
+    import os
     import subprocess
     import sys
 
@@ -48,7 +57,8 @@ def test_cli_end_to_end(spark, tmp_path):
          "--routing", "logs-generic-default=p1",
          "--warehouse", str(tmp_path / "wh"),
          "--run-dir", str(tmp_path / "run"), "--cores", "4"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=300)
+        capture_output=True, text=True,
+        cwd=os.path.join(os.path.dirname(__file__), ".."), timeout=300)
     line = [ln for ln in out.stdout.splitlines() if ln.startswith("{")][-1]
     res = json.loads(line)
     assert res["status"] == "ok" and res["files"] == 2, out.stderr[-500:]

@@ -365,3 +365,40 @@ def test_staging_names_do_not_depend_on_the_hash_seed():
         env={**os.environ, "PYTHONHASHSEED": seed}, check=True).stdout
         for seed in ("1", "2")}
     assert len(names) == 1
+
+
+_PLAN_CHILD = """
+import re, sys
+from logstash_filter_elastic_integration_spark import get_spark
+from logstash_filter_elastic_integration_spark.engine import SparkIngestFilter
+from logstash_filter_elastic_integration_spark.router import Router
+spark = get_spark(app_name="plan-dump", cores=1)
+df = spark.createDataFrame([("web", "GET / 200", "curl/8.4.0", "logs-web")],
+                           "svc string, text string, ua string, p string")
+facade = SparkIngestFilter(pipelines=sys.argv[1], pipeline_name="logs-%{svc}")
+by_field = Router(facade.registry, {}, pipeline_field="p")
+for out in (facade.filter(df), by_field.execute(df)):
+    print(re.sub(r"(_\\d+)?#\\d+L?", "#",
+                 out._jdf.queryExecution().analyzed().toString()))
+"""
+
+
+def test_resolver_plans_identical_across_driver_processes():
+    """Two driver processes with PYTHONHASHSEEDs under which a set of
+    examples/pipelines' names plus '_none' iterates in different orders
+    compile those pipelines behind a sprintf template (facade) and behind
+    a field resolver (Router) to the same analyzed plans, expression ids
+    and lambda-variable counter suffixes masked."""
+    import os
+    import subprocess
+    import sys
+    root = os.path.join(os.path.dirname(__file__), "..")
+    pipelines = os.path.join(root, "examples", "pipelines")
+    plans = [subprocess.run(
+        [sys.executable, "-c", _PLAN_CHILD, pipelines],
+        capture_output=True, text=True, cwd=root, timeout=300, check=True,
+        env={**os.environ, "PYTHONHASHSEED": seed,
+             "SPARK_DRIVER_MEM": "1g"}).stdout
+        for seed in ("1", "3")]
+    assert "pipeline not loaded [" in plans[0]
+    assert plans[0] == plans[1]
