@@ -23,6 +23,8 @@ import re
 import time
 from dataclasses import dataclass, field
 
+from .lru import LRU
+
 try:  # the `regex` module supports atomic groups (?>...) AND per-call
     # timeouts — both halves of the reference's joni + watchdog pairing
     # (EventProcessorBuilder.java:224-225).  Optional: plain `re` fallback.
@@ -405,8 +407,10 @@ class GrokCompiler:
 # a real cluster, once per task forever).  Executors reuse worker
 # processes, so a module-level cache keyed by the pattern/bank content
 # compiles once per WORKER instead: the closure captures only strings.
+# LRU-capped: a reloaded pipeline with edited patterns adds a key per
+# edit, on the driver and on every worker.
 # ---------------------------------------------------------------------------
-_COMPILE_CACHE: dict = {}
+_COMPILE_CACHE = LRU(128)
 
 
 def cached_compile(patterns: tuple[str, ...],

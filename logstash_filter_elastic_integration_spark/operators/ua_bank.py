@@ -17,6 +17,8 @@ Entry shape: ``(family, regex)``.
     no inline flags, no named groups, no possessive quantifiers.
 """
 
+from ..functions.lru import LRU
+
 # --------------------------------------------------------------- browsers --
 UA_BROWSERS: list[tuple[str, str]] = [
     # --- explicit crawlers / bots (before everything: crawler UAs embed
@@ -415,7 +417,8 @@ def load_uap_regexes(path: str) -> dict:
 #                                          defaults, reference parity)
 #   3. the curated ~300-family bank above (UA_BROWSERS/UA_OS/UA_DEVICES)
 # A per-processor ``regex_file`` config always wins over all three.
-_BANK_CACHE: dict = {}
+# One bank live at a time.
+_BANK_CACHE = LRU(1)
 
 
 def default_regex_file() -> str | None:
@@ -436,7 +439,7 @@ def load_uap_regexes_cached(path: str) -> dict:
     on every query construction."""
     import os
     key = (path, os.path.getmtime(path))
-    if key not in _BANK_CACHE:
-        _BANK_CACHE.clear()   # one bank live at a time
-        _BANK_CACHE[key] = load_uap_regexes(path)
-    return _BANK_CACHE[key]
+    banks = _BANK_CACHE.get(key)
+    if banks is None:
+        banks = _BANK_CACHE[key] = load_uap_regexes(path)
+    return banks

@@ -30,64 +30,12 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{table}.parquet")
 
 
-#: compiled-pipeline cache for the demo queries: (appId, processor-spec
-#: JSON, dim names) -> (analyzed input plan, analyzed dim plans, compiled
-#: lazy output).  A hit requires Catalyst ``sameResult`` on the input AND
-#: every dim plan — the plan-identity test Spark's own CacheManager uses —
-#: so reuse is provably over the same relations.  Only the driver-side
-#: pipeline COMPILE (py4j round-trips) is skipped; the returned frame is
-#: lazy and every action recomputes from the parquet source.  Dims here
-#: are driver-literal config tables (createDataFrame over constants), so
-#: nothing data-derived is memoized.
-_PIPE_CACHE: dict = {}
-
-
-#: per-application memo for the demo queries' tiny CONFIG-LITERAL dim
-#: tables (createDataFrame over in-code constants).  PySpark's
-#: createDataFrame yields a LogicalRDD plan whose sameResult compares RDD
-#: identity, so a per-call rebuild could never hit the compiled-pipeline
-#: cache below; reusing the one DataFrame object restores plan identity.
-#: Config data only — nothing derived from the input tables lives here.
-_DIM_MEMO: dict = {}
-
-
-def _memo_dim(spark, key, build):
-    app = spark.sparkContext.applicationId
-    ent = _DIM_MEMO.get((app, key))
-    if ent is None:
-        if any(k[0] != app for k in _DIM_MEMO):
-            _DIM_MEMO.clear()
-        ent = _DIM_MEMO[(app, key)] = build()
-    return ent
-
-
 def _pipe(spark, df, processors, dims=None):
-    import json
-    try:
-        key = (spark.sparkContext.applicationId,
-               json.dumps(processors, sort_keys=True, default=str),
-               tuple(sorted(dims)) if dims else ())
-        jplan = df._jdf.queryExecution().analyzed()
-        dim_plans = [d._jdf.queryExecution().analyzed()
-                     for _, d in sorted((dims or {}).items())]
-        ent = _PIPE_CACHE.get(key)
-        if (ent is not None and ent[0].sameResult(jplan)
-                and len(ent[1]) == len(dim_plans)
-                and all(a.sameResult(b)
-                        for a, b in zip(ent[1], dim_plans))):
-            return ent[2]
-    except Exception:
-        key = None
     reg = PipelineRegistry()
     reg.register("q", {"processors": processors})
     if dims:
         reg.dims.update(dims)
-    out = run_pipeline(df, "q", reg)
-    if key is not None:
-        _PIPE_CACHE[key] = (jplan, dim_plans, out)
-        while len(_PIPE_CACHE) > 64:
-            _PIPE_CACHE.pop(next(iter(_PIPE_CACHE)))
-    return out
+    return run_pipeline(df, "q", reg)
 
 
 # --------------------------------------------------------------- parse -----
@@ -354,11 +302,11 @@ def q_enrich_geoip_range(spark, sf_dir):
     def ip2long(a, b):
         return (a << 24) | (b << 16)
 
-    dim = _memo_dim(spark, "geoip_range", lambda: spark.createDataFrame(
+    dim = spark.createDataFrame(
         [(ip2long(10, 0), ip2long(10, 100) - 1, "low"),
          (ip2long(10, 100), ip2long(10, 200) - 1, "high"),
          (ip2long(10, 42), ip2long(10, 43) - 1, "answer")],  # overlaps 'low'
-        "lo long, hi long, zone string"))
+        "lo long, hi long, zone string")
     df = ev.withColumn(
         "ip", F.format_string("10.%d.0.1", (F.col("user_id") % 200).cast("int")))
     out = _pipe(spark, df, [
@@ -822,8 +770,8 @@ _EV_CATEGORY = [("click", "ui"), ("view", "ui"), ("purchase", "commerce"),
 
 def q_enrich_lookup(spark, sf_dir):
     ev = load(spark, sf_dir, "events")
-    dim = _memo_dim(spark, "etype_dim", lambda: spark.createDataFrame(
-        _EV_CATEGORY, "event_type string, category string"))
+    dim = spark.createDataFrame(
+        _EV_CATEGORY, "event_type string, category string")
     out = _pipe(spark, ev, [
         {"lookup": {"field": "event_type", "table": "etype_dim",
                     "target_field": "et"}}],
@@ -840,18 +788,7 @@ FROM events
 """
 
 
-#: per-application Router memo for the routing demo queries: the Router
-#: (and its compiled-plan cache) is pure config — rebuilding it per call
-#: threw away the compiled WHEN-chains and pipeline Columns each bench
-#: pass.  Nothing data-derived lives on the Router.
-_EVENTS_ROUTER: dict = {}
-
-
 def _events_router(spark):
-    app = spark.sparkContext.applicationId
-    cached = _EVENTS_ROUTER.get(app)
-    if cached is not None:
-        return cached
     from .router import Router
     reg = PipelineRegistry()
     reg.register("err-pipe", {"processors": [
@@ -864,14 +801,11 @@ def _events_router(spark):
     reg.register("alert-pipe", {"processors": [
         {"set": {"field": "alerted", "value": "yes"}},
     ]})
-    router = Router(registry=reg, routing={
+    return Router(registry=reg, routing={
         "logs-ev.error-default": "err-pipe",
         "logs-ev.std-default": "std-pipe",
         "alerts-high": "alert-pipe",
     })
-    _EVENTS_ROUTER.clear()
-    _EVENTS_ROUTER[app] = router
-    return router
 
 
 def _events_datastream(ev):
@@ -1120,15 +1054,6 @@ def _shingles_expr():
         "i -> concat_ws(' ', slice(split(text, ' '), i + 1, 3))))")
 
 
-#: compiled-plan memo for the shared minhash-LSH subtree (3 queries build
-#: it per bench pass): (appId,) -> (analyzed documents plan, reps, pairs).
-#: sameResult-gated like the other compile caches — a hit is provably the
-#: same input relation; reps/pairs are lazy, so every downstream action
-#: (localCheckpoint, persist, noop write) recomputes from parquet exactly
-#: as a freshly built plan would.
-_MINHASH_MEMO: dict = {}
-
-
 def _minhash_reps_and_pairs(spark, sf_dir):
     """Shared minhash-LSH core: exact-dedup representatives (with their
     shingle sets) + in-bucket candidate pairs.  Expression-heavy steps are
@@ -1136,14 +1061,6 @@ def _minhash_reps_and_pairs(spark, sf_dir):
     trees) — the call-by-call Column builds were ~0.8 s of driver time
     per invocation at bench scale."""
     doc = load(spark, sf_dir, "documents")
-    try:
-        app = spark.sparkContext.applicationId
-        jplan = doc._jdf.queryExecution().analyzed()
-        ent = _MINHASH_MEMO.get(app)
-        if ent is not None and ent[0].sameResult(jplan):
-            return ent[1], ent[2]
-    except Exception:
-        app = jplan = None
     reps = _spread(doc.groupBy("text").agg(F.min("doc_id").alias("doc_id")),
                    "doc_id")
     reps = reps.withColumn("sh", _shingles_expr())
@@ -1171,9 +1088,6 @@ def _minhash_reps_and_pairs(spark, sf_dir):
         f"transform(slice(ds, i + 2, {_MH_CAP}), "
         "y -> named_struct('a', x, 'b', y))))")).alias("p"))
         .select("p.a", "p.b").distinct())
-    if app is not None:
-        _MINHASH_MEMO.clear()
-        _MINHASH_MEMO[app] = (jplan, reps, pairs)
     return reps, pairs
 
 
@@ -1381,11 +1295,15 @@ def q_dedup_ngram_jaccard(spark, sf_dir):
     # BOTH join sides, so checkpoint them too or the shingle computation
     # runs twice
     pairs = pairs.localCheckpoint(eager=True)
-    # reps carry corpus-sized shingle ARRAYS: single-compute guarantee via
-    # DISK_ONLY persist (localCheckpoint would pin the blow-up in executor
-    # memory — wrong storage tier at 100 TB)
+    # reps carry corpus-sized shingle ARRAYS: single compute on the
+    # DISK_ONLY tier (the default MEMORY_AND_DISK tier would pin the
+    # blow-up in executor memory — wrong tier at 100 TB).  A checkpoint,
+    # not a persist: it truncates lineage and registers nothing with the
+    # CacheManager, which would otherwise serve this frame to later builds
+    # over a changed file listing
     from pyspark import StorageLevel
-    reps = reps.persist(StorageLevel.DISK_ONLY)
+    reps = reps.localCheckpoint(eager=True,
+                                storageLevel=StorageLevel.DISK_ONLY)
     sa = reps.select(F.col("doc_id").alias("a"), F.col("sh").alias("sha"))
     sb = reps.select(F.col("doc_id").alias("b"), F.col("sh").alias("shb"))
     j = pairs.join(sa, "a").join(sb, "b")
@@ -2309,64 +2227,6 @@ FROM events GROUP BY 1, 2
 
 # ---------------------------------------------------------------- dicts ----
 
-#: queries whose builder is a PURE PLAN FUNCTION of the named input
-#: tables — no collect/checkpoint/persist during construction — mapped to
-#: the tables they read.  For these (and only these) the compiled lazy
-#: frame is reusable whenever the input relations are provably unchanged
-#: (Catalyst sameResult, the CacheManager's own plan-identity test), so
-#: repeated invocations skip the 0.2-0.4 s driver-side plan rebuild.
-#: Excluded by construction: ann_ivf/ann_ivf_kmeans (driver-state Lloyd
-#: training collects data-derived centroids), dedup_clusters (data-driven
-#: convergence loop over eager checkpoints), dedup_ngram_jaccard (eager
-#: checkpoint+persist in the builder), stream_* (per-call streaming
-#: machinery) — memoizing any of those would cache data-derived results,
-#: not a plan.  The returned frames are lazy: every action recomputes
-#: from parquet.
-_PURE_PLAN_TABLES = {
-    "agg_sink_counts": ("events",),
-    "sessionize": ("events",),
-    "conv_stats": ("events",),
-    "dedup_exact": ("documents",),
-    "doc_fingerprint": ("documents",),
-    "dedup_simhash": ("documents",),
-    "dedup_embedding_cosine": ("embeddings",),
-    "decontaminate_ngram": ("documents",),
-    "doc_quality": ("documents",),
-    "lang_id_trigram": ("documents",),
-    "token_rolling_hash": ("documents",),
-    "ann_cosine_topk": ("embeddings",),
-    "ann_lsh_bucketed": ("embeddings",),
-    "ann_recall": ("embeddings",),
-    "multimodal_av": ("documents",),
-    "multimodal_video": ("documents",),
-}
-_QPLAN_MEMO: dict = {}
-
-
-def _memo_pure_plan(name, fn, tables):
-    def wrapped(spark, sf_dir):
-        try:
-            app = spark.sparkContext.applicationId
-            plans = [load(spark, sf_dir, t)._jdf.queryExecution().analyzed()
-                     for t in tables]
-            ent = _QPLAN_MEMO.get((app, name, sf_dir))
-            if (ent is not None and len(ent[0]) == len(plans)
-                    and all(a.sameResult(b)
-                            for a, b in zip(ent[0], plans))):
-                return ent[1]
-        except Exception:
-            return fn(spark, sf_dir)
-        out = fn(spark, sf_dir)
-        _QPLAN_MEMO[(app, name, sf_dir)] = (plans, out)
-        while len(_QPLAN_MEMO) > 128:
-            _QPLAN_MEMO.pop(next(iter(_QPLAN_MEMO)))
-        return out
-    wrapped.__name__ = fn.__name__
-    wrapped.__doc__ = fn.__doc__
-    wrapped.__wrapped__ = fn
-    return wrapped
-
-
 QUERIES = {
     # exactly 50 entries: the driver's correctness gate records the first
     # 50 rows, so every exposed query sits inside the check window
@@ -2425,9 +2285,6 @@ QUERIES = {
     "stream_dedup": q_stream_dedup,
     "stream_flagship": q_stream_flagship,
 }
-
-for _qname, _qtables in _PURE_PLAN_TABLES.items():
-    QUERIES[_qname] = _memo_pure_plan(_qname, QUERIES[_qname], _qtables)
 
 ORACLES = {
     "pipe_grok_typed": O_GROK,

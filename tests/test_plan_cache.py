@@ -1,17 +1,15 @@
-"""Focused pins for the compile caches: every cache is PLAN-level (lazy
-frames, keyed/gated by Catalyst sameResult) and never result-level.
+"""Pins for the package's driver-side caches and their absence.
 
 - Router.execute caches nothing: files appended to its input directory
   and routing changes made after a first call both show on the next call;
+- the demo query builders cache nothing either: a QUERIES call after
+  files land in a table directory answers over the new listing, and
+  dedup_ngram_jaccard leaves nothing in Spark's CacheManager that a later
+  build could be served from;
 - the compiled-condition cache stays under its cap;
-- _pipe's compiled-pipeline cache hits on identical (spec, input) and
-  misses when the processor spec changes;
-- the pure-plan query memo wraps exactly the whitelisted builders —
-  queries with data-derived driver work (ann_ivf training, the
-  dedup_clusters convergence loop, dedup_ngram_jaccard's eager
-  checkpoint/persist, stream_*) must stay unwrapped;
-- a cache hit still RECOMPUTES on action: mutating the underlying data
-  between actions changes the result of the cached frame.
+- no package module gates a cache on Catalyst sameResult (it compares
+  file-source relations by root path, not by file listing), and every
+  module-level cache or memo is a size-capped LRU.
 """
 
 from __future__ import annotations
@@ -88,30 +86,69 @@ def test_condition_cache_is_bounded(spark):
     assert df.select(again.alias("c")).first()["c"] is True
 
 
-def test_pipe_cache_hit_and_spec_miss(spark):
-    df = spark.range(7).select(F.col("id").cast("string").alias("v"))
-    spec = [{"set": {"field": "m", "value": "a"}}]
-    out1 = Q._pipe(spark, df, spec)
-    out2 = Q._pipe(spark, df, [{"set": {"field": "m", "value": "a"}}])
-    assert out1 is out2  # equal spec + sameResult input
-    out3 = Q._pipe(spark, df, [{"set": {"field": "m", "value": "B"}}])
-    assert out3 is not out1
-    assert [r["m"] for r in out3.limit(1).collect()] == ["B"]
+def _write_part(sf, table, part, shift=0, texts=False):
+    """Write the test scale factor's ``table`` as part file ``part`` of
+    the table directory under ``sf``, keys shifted by ``shift`` and, when
+    ``texts`` is set, every text changed (identical texts collapse in the
+    exact-dedup pre-pass)."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    key = {"events": "event_id", "documents": "doc_id"}[table]
+    t = pq.read_table(f"{SF}/{table}.parquet")
+    t = t.set_column(t.schema.get_field_index(key), key,
+                     pc.add(t[key], shift))
+    if texts:
+        t = t.set_column(t.schema.get_field_index("text"), "text",
+                         pc.binary_join_element_wise(
+                             t["text"], "appended", " "))
+    d = sf / f"{table}.parquet"
+    d.mkdir(parents=True, exist_ok=True)
+    pq.write_table(t, str(d / f"part-{part}.parquet"))
 
 
-def test_pure_plan_memo_whitelist_is_exact():
-    wrapped = {n for n, f in Q.QUERIES.items() if hasattr(f, "__wrapped__")}
-    assert wrapped == set(Q._PURE_PLAN_TABLES)
-    # data-derived builders must never be memoized
-    for name in ("ann_ivf", "dedup_clusters", "dedup_ngram_jaccard",
-                 "stream_window", "stream_dedup", "stream_flagship"):
-        assert name not in wrapped
+@pytest.mark.parametrize("name, table, texts, before", [
+    ("pipe_grok_typed", "events", False, None),
+    ("dedup_exact", "documents", True, None),
+    ("route_fanout", "events", False, None),
+    ("dedup_minhash_lsh", "documents", True, "dedup_ngram_jaccard"),
+])
+def test_queries_see_files_appended_between_calls(
+        spark, tmp_path, name, table, texts, before):
+    """Each QUERIES call builds its plan over the table directory's
+    current listing: after a shifted-key part file is appended, the next
+    call returns what a fresh build over both parts returns."""
+    sf, ref = tmp_path / "sf", tmp_path / "ref"
+    _write_part(sf, table, 0)
+    if before:
+        Q.QUERIES[before](spark, str(sf)).count()
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    n1 = Q.QUERIES[name](spark, str(sf)).count()
+    _write_part(sf, table, 1, 10 ** 6, texts)
+    n2 = Q.QUERIES[name](spark, str(sf)).count()
+    _write_part(ref, table, 0)
+    _write_part(ref, table, 1, 10 ** 6, texts)
+    assert n2 == Q.QUERIES[name](spark, str(ref)).count()
+    assert n2 > n1
 
 
-@pytest.mark.parametrize("name", ["dedup_simhash", "doc_quality"])
-def test_pure_plan_memo_reuses_lazy_frame(spark, name):
-    d1 = Q.QUERIES[name](spark, SF)
-    d2 = Q.QUERIES[name](spark, SF)
-    assert d1 is d2
-    # the frame is lazy (an action still runs the full computation)
-    assert d1.count() > 0
+def test_no_same_result_gate_and_every_cache_is_bounded():
+    """Guard: no package source gates on sameResult, and every module
+    global named like a cache or memo is an LRU."""
+    import importlib
+    import pathlib
+    import pkgutil
+    import re
+    import logstash_filter_elastic_integration_spark as pkg
+    from logstash_filter_elastic_integration_spark.functions.lru import LRU
+    root = pathlib.Path(pkg.__file__).parent
+    gated = [str(p.relative_to(root)) for p in sorted(root.rglob("*.py"))
+             if "sameResult" in p.read_text()]
+    unbounded = []
+    for m in pkgutil.walk_packages(pkg.__path__, pkg.__name__ + "."):
+        if m.name.endswith("__main__"):
+            continue
+        mod = importlib.import_module(m.name)
+        unbounded += [f"{m.name}.{k}" for k, v in vars(mod).items()
+                      if re.match(r"_\w*(CACHE|MEMO)", k)
+                      and not isinstance(v, LRU)]
+    assert (gated, unbounded) == ([], [])
