@@ -1,6 +1,6 @@
 """Minimal end-to-end example: directory-of-JSON pipelines (the reference's
 LocalDirectoryPipelineConfigurationResolver shape) + datastream routing +
-broadcast lookup dim, over a literal transcript batch.
+driver-local lookup dim, over a literal transcript batch.
 
     python examples/run_example.py
 """
@@ -11,9 +11,11 @@ import sys
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from logstash_filter_elastic_integration_spark import get_spark
 from logstash_filter_elastic_integration_spark.engine import SparkIngestFilter
+from logstash_filter_elastic_integration_spark.plans import LocalDim
 
 
 def main():
@@ -27,9 +29,11 @@ def main():
      .withColumn("data_stream.dataset", F.lit("web.access")) \
      .withColumn("data_stream.namespace", F.lit("default"))
 
-    tool_dim = spark.createDataFrame(
+    # a driver-local lookup dim: compiling the pipelines runs no Spark job
+    tool_dim = LocalDim(
         [("search", "retrieval"), ("code_exec", "compute")],
-        "tool string, tool_category string")
+        T.StructType([T.StructField("tool", T.StringType()),
+                      T.StructField("tool_category", T.StringType())]))
 
     engine = SparkIngestFilter(
         pipelines=os.path.join(os.path.dirname(__file__), "pipelines"),

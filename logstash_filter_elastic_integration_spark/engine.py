@@ -13,10 +13,13 @@ java:32-60) or else the datastream index routing table.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame
 
-from .plans.pipeline import PipelineRegistry
+from .plans.pipeline import LocalDim, PipelineRegistry
 from .router import Router
+from .sources.mmdb import load_mmdb_dim
 
 
 class SparkIngestFilter:
@@ -36,13 +39,16 @@ class SparkIngestFilter:
     definitions and databases from a live Elasticsearch cluster; this
     engine takes those same artifacts locally (``pipelines=`` dir/dict,
     ``dims=``, ``geoip_database_directory=``), so connectivity/auth options
-    have no analogue by construction rather than as a gap."""
+    have no analogue by construction rather than as a gap.  Lookup dims
+    are driver-local (``LocalDim``, or a DataFrame that the first compile
+    collects once), so ``filter`` only builds a plan and runs no Spark
+    job."""
 
     def __init__(self,
                  pipelines: dict | str | None = None,
                  routing: dict[str, str] | None = None,
                  pipeline_name: str | None = None,
-                 dims: dict[str, DataFrame] | None = None,
+                 dims: dict[str, LocalDim | DataFrame] | None = None,
                  geoip_database_directory: str | None = None,
                  max_hops: int = 3):
         self.registry = PipelineRegistry()
@@ -56,19 +62,15 @@ class SparkIngestFilter:
         # plugin option geoip_database_directory (elastic_integration.rb:99):
         # every *.mmdb in the directory becomes a lookup dim keyed by its
         # FILENAME — exactly how the reference matches a processor's
-        # database_file.  Loaded lazily on first filter() (needs a session).
-        self._geoip_dir = geoip_database_directory
+        # database_file.  Parsed here, on the driver, like the reference's
+        # load at plugin start.
+        if geoip_database_directory is not None:
+            for fn in sorted(os.listdir(geoip_database_directory)):
+                if fn.endswith(".mmdb") and fn not in self.registry.dims:
+                    self.registry.dims[fn] = load_mmdb_dim(
+                        os.path.join(geoip_database_directory, fn))
         self.router = Router(registry=self.registry, routing=routing or {},
                              max_hops=max_hops, pipeline_name=pipeline_name)
 
     def filter(self, df: DataFrame) -> DataFrame:
-        if self._geoip_dir is not None:
-            import os
-
-            from .sources.mmdb import load_mmdb_dim
-            for fn in sorted(os.listdir(self._geoip_dir)):
-                if fn.endswith(".mmdb") and fn not in self.registry.dims:
-                    self.registry.dims[fn] = load_mmdb_dim(
-                        df.sparkSession, os.path.join(self._geoip_dir, fn))
-            self._geoip_dir = None
         return self.router.execute(df)

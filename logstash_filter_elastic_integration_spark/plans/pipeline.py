@@ -85,13 +85,31 @@ class IngestPipeline:
         )
 
 
+@dataclass(frozen=True)
+class LocalDim:
+    """A lookup dim held on the driver: ``rows`` are tuples in ``schema``
+    order.  Compiling a lookup against it runs no Spark job — the
+    reference likewise loads its databases once, at startup
+    (geoip/IpDatabaseProvider.java:36-99), and never queries a cluster to
+    compile a pipeline."""
+
+    rows: list[tuple]
+    schema: T.StructType
+
+    @property
+    def columns(self) -> list[str]:
+        return self.schema.fieldNames()
+
+
 class PipelineRegistry:
     """Named pipelines + processor implementations (the Spark analogue of
     the resolver/factory pair EventProcessorBuilder.java:242-266)."""
 
     def __init__(self):
         self.pipelines: dict[str, IngestPipeline] = {}
-        # broadcast lookup dimensions (geoip/lookup processors): name -> DataFrame
+        # lookup dims (geoip/lookup processors): name -> LocalDim, or a
+        # DataFrame that the first compile reading it collects and
+        # replaces with its LocalDim (a snapshot from then on)
         self.dims: dict[str, object] = {}
         # stored scripts (ES _scripts store analogue): the script
         # processor's `id` option resolves here instead of `source`

@@ -1,6 +1,6 @@
 """Deterministic synthetic transcript generator (BASELINE.json input_hint:
 ``conv_id:string, turn_idx:int, role:string, text:string, tool:string,
-ts:timestamp``) plus the role/tool broadcast dimensions (FIXTURES.md §1-2).
+ts:timestamp``) plus the role/tool lookup dims (FIXTURES.md §1-2).
 
 Fully distributed: every column is a pure function of ``spark.range`` ids
 (xxhash64-derived), so generation scales to any row count with zero driver
@@ -18,6 +18,9 @@ Text mix (seeded by id hash):
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import types as T
+
+from ..plans.pipeline import LocalDim
 
 SEED = 42
 
@@ -102,23 +105,31 @@ def transcripts(spark: SparkSession, n_rows: int, n_convs: int | None = None,
         ts.alias("ts"))
 
 
-def role_dim(spark: SparkSession) -> DataFrame:
-    """Broadcast enrichment dim (FIXTURES.md §2): complete role cover."""
+def role_dim(spark: SparkSession) -> LocalDim:
+    """Lookup dim (FIXTURES.md §2): complete role cover.  Driver-local:
+    ``spark`` is unused, and kept so that callers need not change."""
     rows = [
         ("user", "human", True),
         ("assistant", "model", False),
         ("system", "control", False),
         ("tool", "machine", False),
     ]
-    return spark.createDataFrame(rows, "role string, role_group string, is_human boolean")
+    return LocalDim(rows, T.StructType([
+        T.StructField("role", T.StringType()),
+        T.StructField("role_group", T.StringType()),
+        T.StructField("is_human", T.BooleanType())]))
 
 
-def tool_dim(spark: SparkSession) -> DataFrame:
-    """Broadcast dim with one transcript key ('vector_db') deliberately
-    absent -> exercises the lookup miss path."""
+def tool_dim(spark: SparkSession) -> LocalDim:
+    """Lookup dim with one transcript key ('vector_db') deliberately
+    absent -> exercises the lookup miss path.  ``spark`` is unused, as in
+    :func:`role_dim`."""
     rows = [
         ("search", "retrieval", "platform"),
         ("code_exec", "compute", "runtime"),
         ("browser", "retrieval", "platform"),
     ]
-    return spark.createDataFrame(rows, "tool string, tool_category string, tool_owner string")
+    return LocalDim(rows, T.StructType([
+        T.StructField("tool", T.StringType()),
+        T.StructField("tool_category", T.StringType()),
+        T.StructField("tool_owner", T.StringType())]))

@@ -1,12 +1,12 @@
 """MaxMind DB (.mmdb) ingestion: parse the binary format into the
-broadcast IP-range dimension the geoip processor joins against.
+IP-range lookup dim the geoip processor resolves against.
 
 The reference resolves IPs against .mmdb files loaded per node
 (geoip/IpDatabaseProvider.java:36-99).  The Spark-first equivalent keeps
-the *lookup* as a broadcast range join (operators/enrich.py) and moves the
-file parsing to the driver: this module walks the database's binary search
+the *lookup* in the query plan (operators/enrich.py) and moves the file
+parsing to the driver: this module walks the database's binary search
 tree once, enumerates every network with its (flattened) record, and
-returns rows ready for ``registry.dims[db] = spark.createDataFrame(...)``.
+returns a driver-local ``LocalDim`` for ``registry.dims[db]``.
 
 Format implemented from the public MaxMind DB specification
 (https://maxmind.github.io/MaxMind-DB/): metadata marker, 24/28/32-bit
@@ -17,6 +17,10 @@ bytes, uint16/32/64, int32, map, array, bool, float).
 from __future__ import annotations
 
 import struct
+
+from pyspark.sql import types as T
+
+from ..plans.pipeline import LocalDim
 
 _METADATA_MARKER = b"\xab\xcd\xefMaxMind.com"
 _DATA_SEPARATOR = 16  # 16 zero bytes between tree and data section
@@ -204,7 +208,7 @@ def _flatten(record: dict) -> dict:
     return out
 
 
-def load_mmdb_dim(spark, path: str, ipv4_only: bool = True):
+def load_mmdb_dim(path: str, ipv4_only: bool = True) -> LocalDim:
     """Parse a .mmdb file into the geoip range dimension: columns
     (lo, hi, <flattened properties>).  ipv4_only keeps the IPv4 view of a
     v6 tree (range values fit the processor's IPv4-long probe)."""
@@ -228,7 +232,6 @@ def load_mmdb_dim(spark, path: str, ipv4_only: bool = True):
                 keys.append(k)
         rows.append((first, last, flat))
     data = [(lo, hi, *[flat.get(k) for k in keys]) for lo, hi, flat in rows]
-    from pyspark.sql import types as T
     fields = [T.StructField("lo", T.LongType()),
               T.StructField("hi", T.LongType())]
     for k in keys:
@@ -243,7 +246,7 @@ def load_mmdb_dim(spark, path: str, ipv4_only: bool = True):
         else:
             dt = T.StringType()
         fields.append(T.StructField(k, dt))
-    return spark.createDataFrame(data, T.StructType(fields))
+    return LocalDim(data, T.StructType(fields))
 
 
 # --------------------------------------------------- fixture writer --------

@@ -89,8 +89,8 @@ _DATASET_CALLS = {"withColumn", "withColumns", "select", "drop", "join",
 def test_warm_facade_compile_budget(spark, tmp_path):
     """A warm facade compile of examples/pipelines (the integration-mix
     shape: routing table, reroute hop, grok, user_agent, painless loop,
-    lookup) stays within 40 Dataset-creating calls and collects the lookup
-    dim exactly once."""
+    lookup) stays within 40 Dataset-creating calls and collects nothing:
+    the lookup dim is driver-local rows."""
     import os
 
     from pyspark.sql import functions as F
@@ -133,5 +133,5 @@ def test_warm_facade_compile_budget(spark, tmp_path):
         client.send_command = orig
     dataset = [c for c in calls if c in _DATASET_CALLS]
     assert len(dataset) <= 40, sorted(dataset)
-    assert calls.count("collectToPython") == 1
+    assert calls.count("collectToPython") == 0
     assert out.count() == 200

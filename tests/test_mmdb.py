@@ -40,7 +40,7 @@ def test_mmdb_reader_round_trip(tmp_path):
 
 def test_mmdb_dim_feeds_geoip_processor(spark, registry, tmp_path):
     path = _fixture(tmp_path / "GeoTest.mmdb")
-    dim = load_mmdb_dim(spark, path)
+    dim = load_mmdb_dim(path)
     assert {"lo", "hi", "country_iso_code", "city_name", "net"} <= set(dim.columns)
     registry.dims["GeoTest.mmdb"] = dim
     out = run_one(

@@ -185,21 +185,25 @@ def test_geoip_first_only_takes_first_element(spark, registry):
 def test_geoip_first_only_false_exact_dim(spark, registry):
     # ES GeoIpProcessor list semantics: one entry per element, null
     # placeholder for misses, target unset when nothing resolved
+    # a null dim key never matches, not even the element "None"
     dim = spark.createDataFrame(
-        [("1.2.3.4", "US", "Dallas"), ("5.6.7.8", "DE", "Berlin")],
+        [("1.2.3.4", "US", "Dallas"), ("5.6.7.8", "DE", "Berlin"),
+         (None, "XX", "ghost")],
         "ip string, country string, city string")
     registry.dims["GeoLite2-City.mmdb"] = dim
     out = run_one(
         spark, registry,
         [{"geoip": {"field": "ips", "target_field": "geo",
                     "first_only": False}}],
-        [(["1.2.3.4", "9.9.9.9", "5.6.7.8"],), (["9.9.9.9"],), (None,)],
+        [(["1.2.3.4", "9.9.9.9", "5.6.7.8", "None"],), (["9.9.9.9"],),
+         (None,), (["None"],)],
         "ips array<string>")
     geos = out[0]["geo"]
-    assert [g and g["country"] for g in geos] == ["US", None, "DE"]
+    assert [g and g["country"] for g in geos] == ["US", None, "DE", None]
     assert geos[2]["city"] == "Berlin"
     assert out[1]["geo"] is None  # no element resolved -> target unset
     assert out[2]["geo"] is None
+    assert out[3]["geo"] is None
 
 
 def test_geoip_first_only_false_range_dim(spark, registry):
@@ -222,16 +226,18 @@ def test_geoip_first_only_false_range_dim(spark, registry):
 def test_geoip_first_only_false_big_dim_broadcast_path(spark, registry):
     # >_MULTI_LITERAL_CAP entries forces the broadcast-dict pandas path
     rows = [(f"10.0.{i // 256}.{i % 256}", f"C{i}") for i in range(1500)]
-    dim = spark.createDataFrame(rows, "ip string, country string")
+    dim = spark.createDataFrame(rows + [(None, "ghost")],
+                                "ip string, country string")
     registry.dims["GeoLite2-City.mmdb"] = dim
     out = run_one(
         spark, registry,
         [{"geoip": {"field": "ips", "target_field": "geo",
                     "first_only": False}}],
-        [(["10.0.1.44", "nope"],)], "ips array<string>")
+        [(["10.0.1.44", "nope", "None"],)], "ips array<string>")
     geos = out[0]["geo"]
     assert geos[0]["country"] == "C300"
     assert geos[1] is None
+    assert geos[2] is None  # the null dim key is not the string "None"
 
 
 # ---------------------------------------------------------------- redact --

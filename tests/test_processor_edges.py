@@ -267,6 +267,26 @@ def test_geoip_range_overlap_most_specific_wins(spark, registry):
     assert by_ip["11.0.0.1"]["geo.net"] is None
 
 
+def test_geoip_range_inference_leaves_registered_config_alone(spark,
+                                                              registry):
+    """Range mode inferred from a dim's lo/hi columns is decided per
+    compile, not written into the registered processor: after the dim is
+    replaced by an exact-key one, the same registry resolves by key, as a
+    fresh registry does."""
+    from logstash_filter_elastic_integration_spark.plans import run_pipeline
+    registry.dims["GeoLite2-City.mmdb"] = spark.createDataFrame(
+        [(0, 100, "a")], "lo long, hi long, zone string")
+    out = run_one(spark, registry,
+                  [{"geoip": {"field": "ip", "target_field": "geo"}}],
+                  [("0.0.0.7",)], "ip string")
+    assert out[0]["geo.zone"] == "a"
+    registry.dims["GeoLite2-City.mmdb"] = spark.createDataFrame(
+        [("1.2.3.4", "US")], "ip string, country string")
+    df = spark.createDataFrame([("1.2.3.4",)], "ip string")
+    r = run_pipeline(df, "test", registry).collect()[0]
+    assert r["geo.country"] == "US"
+
+
 def test_grok_watchdog_interrupts_pathological_pattern(spark, registry):
     """A catastrophically backtracking (pattern, input) pair must not stall
     the executor: the per-row watchdog interrupts it and the row fails with
