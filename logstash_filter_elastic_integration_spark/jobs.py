@@ -5,15 +5,16 @@ checkpoints with lineage + per-stage throughput metrics").
 One call = one incremental run:
   1. anti-join the checkpoint manifest -> only pending input files
   2. execute the compiled pipeline fixpoint (narrow, shuffle-free)
-  3. fan-out write + per-sink aggregate append
+  3. ``Router.commit``: fan-out + per-sink aggregate of only these files
   4. mark the processed files done; write lineage JSON
 
-Killing the process between (3) and (4) of a file group re-processes only
-those files on restart — sink writes are idempotent per run-id directory.
+Killing the process between (3) and (4) re-processes only those files on
+restart, and their re-commit replaces their first attempt whole.
 """
 
 from __future__ import annotations
 
+import hashlib
 import time
 
 from pyspark.sql import SparkSession, functions as F
@@ -38,15 +39,10 @@ def run_batch(spark: SparkSession, router: Router, input_path: str,
         return {"status": "up-to-date", "files": 0}
 
     # Tag every row with its source file's hash BEFORE any transform: the
-    # manifest's unit of resumability is the input file, so the sink table
-    # is partitioned (__run=file-hash, __sink) and written with dynamic
-    # partition overwrite — re-processing a file replaces exactly that
-    # file's output, never rows committed by other files/runs.  (Plain
-    # overwrite here used to wipe already-committed output whose files the
-    # manifest had marked done — permanent data loss on resume.)  On
-    # Iceberg this maps to a REPLACE-partitions commit per file.
+    # manifest's unit of resumability, the input file, is the commit's run.
     pending_df = pending_df.withColumn(
         "__run", F.substring(F.md5(F.input_file_name()), 1, 12))
+    runs = [hashlib.md5(f.encode()).hexdigest()[:12] for f in files]
     executed = router.execute(pending_df if prepare_df is None
                               else prepare_df(pending_df))
     observed = metrics.observe(executed, "pipeline",
@@ -54,12 +50,8 @@ def run_batch(spark: SparkSession, router: Router, input_path: str,
                                dropped_col="__dropped")
     t0 = time.time()
     with metrics.stage("pipeline"):
-        router.write_fanout(observed, catalog, table="sinks",
-                            salt_partitions=salt_partitions)
-    with metrics.stage("sink_counts"):
-        counts = router.sink_counts(catalog.read("sinks").drop("__run"),
-                                    dropped_filtered=True)
-        catalog.write(counts, "sink_counts")
+        router.commit(observed, catalog, runs,
+                      salt_partitions=salt_partitions)
     wall = time.time() - t0
     manifest.mark_done(files, {"wall_s": round(wall, 3)})
     lineage = metrics.write_lineage({

@@ -17,8 +17,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import types as T
 
-from .plans.pipeline import PipelineRegistry, run_pipeline
+from .plans.pipeline import LocalDim, PipelineRegistry, run_pipeline
 from .plans.document import fcol
 
 
@@ -302,11 +303,11 @@ def q_enrich_geoip_range(spark, sf_dir):
     def ip2long(a, b):
         return (a << 24) | (b << 16)
 
-    dim = spark.createDataFrame(
+    dim = LocalDim(
         [(ip2long(10, 0), ip2long(10, 100) - 1, "low"),
          (ip2long(10, 100), ip2long(10, 200) - 1, "high"),
          (ip2long(10, 42), ip2long(10, 43) - 1, "answer")],  # overlaps 'low'
-        "lo long, hi long, zone string")
+        T.StructType.fromDDL("lo long, hi long, zone string"))
     df = ev.withColumn(
         "ip", F.format_string("10.%d.0.1", (F.col("user_id") % 200).cast("int")))
     out = _pipe(spark, df, [
@@ -770,8 +771,8 @@ _EV_CATEGORY = [("click", "ui"), ("view", "ui"), ("purchase", "commerce"),
 
 def q_enrich_lookup(spark, sf_dir):
     ev = load(spark, sf_dir, "events")
-    dim = spark.createDataFrame(
-        _EV_CATEGORY, "event_type string, category string")
+    dim = LocalDim(_EV_CATEGORY, T.StructType.fromDDL(
+        "event_type string, category string"))
     out = _pipe(spark, ev, [
         {"lookup": {"field": "event_type", "table": "etype_dim",
                     "target_field": "et"}}],

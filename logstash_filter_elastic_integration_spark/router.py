@@ -16,7 +16,8 @@ Mirrors, Spark-first, the per-event orchestration of EventProcessor.java:
    shuffle-free plan: no driver-side data inspection, no per-hop jobs
  - fan-out: one pass computing the route column, one partitioned write
    (no per-sink re-scan), plus the per-sink aggregate table the north rule
-   verifies (counts by conv bucket / role / tool / ts window).
+   verifies (counts by conv bucket / role / tool / ts window).  ``commit``,
+   the one sink commit of batch jobs and streams, replaces both per run.
 
 Scale notes (100 TB): the processor chain is a narrow projection — the only
 shuffles in the whole job are (a) the per-sink aggregate (partial+final
@@ -295,12 +296,15 @@ class Router:
                     dropped_filtered: bool = False) -> DataFrame:
         """Per-sink aggregate table (north-rule verification shape,
         FIXTURES.md §5): counts by sink x conv bucket x role x tool x ts
-        window.  Partial+final hash aggregation; the xxhash64 bucket also
-        breaks up hot conversations on the shuffle.  Pass
-        dropped_filtered=True when reading back already-written sink data
-        (cancelled rows were excluded at write time)."""
+        window (and ``__run`` when present).  Partial+final hash
+        aggregation; the xxhash64 bucket also breaks up hot conversations
+        on the shuffle.  Pass dropped_filtered=True when reading back
+        already-written sink data (cancelled rows were excluded at write
+        time)."""
         data = executed if dropped_filtered else executed.filter(~fcol(DROPPED))
+        by_run = ["__run"] if "__run" in data.columns else []
         return (data.groupBy(
+            *by_run,
             F.col("__sink").alias("sink"),
             F.pmod(F.xxhash64("conv_id"), F.lit(self.bucket_count))
              .cast("int").alias("conv_bucket"),
@@ -308,36 +312,45 @@ class Router:
             F.window("ts", self.ts_window)["start"].alias("ts_window"))
             .agg(F.count(F.lit(1)).alias("n")))
 
-    def write_fanout(self, executed: DataFrame, catalog, table: str = "sinks",
-                     salt_partitions: int | None = None,
-                     run_id: str | None = None) -> None:
-        """Single-pass fan-out: route column computed once, ONE partitioned
-        write — never N filtered re-scans of the parse chain.  Optional
-        salted repartition: (sink, salt) so a hot sink/conversation cannot
-        pin one output task.
-
-        A ``__run`` column (tagged upstream, e.g. per input file by
-        ``jobs.run_batch``) or an explicit ``run_id`` adds a partition
-        level and switches to dynamic partition overwrite: a resumed or
-        incremental run replaces ONLY its own partitions, never output
-        already committed by earlier runs (plain overwrite on a shared
-        table silently dropped prior runs' rows — they were marked done
-        in the manifest and never redone)."""
-        data = executed.filter(~fcol(DROPPED))
-        drop_cols = [c for c in (FAILURE, DROPPED, REROUTED, INDEX_HISTORY)
-                     if c in data.columns]
-        data = data.drop(*drop_cols)
-        if run_id is not None:
-            data = data.withColumn("__run", F.lit(run_id))
+    @staticmethod
+    def _fanout_rows(executed: DataFrame, salt_partitions) -> DataFrame:
+        """Surviving rows without internal columns.  Optional salted
+        repartition: (sink, salt) so a hot sink/conversation cannot pin one
+        output task."""
+        data = executed.filter(~fcol(DROPPED)).drop(*[
+            c for c in (FAILURE, DROPPED, REROUTED, INDEX_HISTORY)
+            if c in executed.columns])
         if salt_partitions:
             data = data.repartition(
                 salt_partitions, F.col("__sink"),
                 F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(64)))
-        if "__run" in data.columns:
-            catalog.write(data, table, partition_by=["__run", "__sink"],
-                          dynamic=True)
-        else:
-            catalog.write(data, table, partition_by=["__sink"])
+        return data
+
+    def write_fanout(self, executed: DataFrame, catalog, table: str = "sinks",
+                     salt_partitions: int | None = None) -> None:
+        """Single-pass fan-out: route column computed once, ONE partitioned
+        write replacing ``table`` — never N filtered re-scans of the parse
+        chain."""
+        catalog.write(self._fanout_rows(executed, salt_partitions), table,
+                      partition_by=["__sink"])
+
+    def commit(self, executed: DataFrame, catalog, runs,
+               tables: tuple[str, str] = ("sinks", "sink_counts"),
+               salt_partitions: int | None = None) -> None:
+        """Replace ``runs`` — the values of ``executed``'s ``__run`` column:
+        a batch job's input files, a stream's micro-batch — in the fan-out
+        table ``tables[0]`` and its ``sink_counts`` table ``tables[1]``.
+        ``executed`` is persisted once, so each run accounts for its own
+        events once, from its own rows, as the reference does per batch
+        (EventProcessor.java:171-244); a re-commit doubles nothing."""
+        executed = executed.persist()
+        try:
+            catalog.overwrite_runs(self._fanout_rows(executed, salt_partitions),
+                                   tables[0], runs, ["__run", "__sink"])
+            catalog.overwrite_runs(self.sink_counts(executed), tables[1],
+                                   runs, ["__run"])
+        finally:
+            executed.unpersist()
 
     @staticmethod
     def ordered_turns(executed: DataFrame) -> DataFrame:

@@ -3,7 +3,7 @@
 Production target is Iceberg (``spark.read.format("iceberg")``, snapshot-
 based checkpointing, commit metadata for lineage) — the sandbox ships no
 Iceberg runtime jar, so the same API writes partitioned parquet directories
-and keeps snapshot/lineage metadata in a ``_meta.json`` sidecar.  Swapping
+and appends commit metadata to a ``_meta.jsonl`` sidecar.  Swapping
 ``FORMAT`` to "iceberg" (plus catalog conf) is the only change needed on a
 real cluster; all call sites go through this class.
 """
@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -33,34 +34,29 @@ class Catalog:
 
     def write(self, df: DataFrame, table: str, mode: str = "overwrite",
               partition_by: list[str] | None = None,
-              meta: dict | None = None, dynamic: bool = False) -> None:
-        """dynamic=True uses dynamic partition overwrite: only partitions
-        present in ``df`` are replaced, others are untouched — the parquet
-        stand-in for an Iceberg REPLACE-partitions commit.  This is what
-        makes incremental/resumed runs idempotent without clobbering
-        previously committed output."""
+              meta: dict | None = None) -> None:
         w = df.write.format(self.FORMAT).mode(mode)
-        if dynamic:
-            w = w.option("partitionOverwriteMode", "dynamic")
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.save(self.path(table))
         self._append_meta(table, {"mode": mode, "ts": time.time(),
                                   "partition_by": partition_by or [],
-                                  "dynamic": dynamic, **(meta or {})})
+                                  **(meta or {})})
+
+    def overwrite_runs(self, df: DataFrame, table: str, runs,
+                       partition_by: list[str]) -> None:
+        """Iceberg's ``df.writeTo(t).overwrite(F.col("__run").isin(runs))``:
+        delete each ``__run=<r>`` directory, whatever sinks it holds, then
+        append ``df``.  Not atomic on parquet; a crash is mended by
+        re-committing the runs."""
+        for r in runs:
+            shutil.rmtree(os.path.join(self.path(table), f"__run={r}"),
+                          ignore_errors=True)
+        self.write(df, table, mode="append", partition_by=partition_by,
+                   meta={"runs": list(runs)})
 
     def _append_meta(self, table: str, entry: dict) -> None:
-        """Commit-metadata sidecar (stand-in for Iceberg snapshot summary)."""
-        p = os.path.join(self.path(table), "_meta.json")
-        log = []
-        if os.path.exists(p):
-            with open(p) as f:
-                log = json.load(f)
-        log.append(entry)
-        with open(p, "w") as f:
-            json.dump(log, f, indent=1)
-
-    def exists(self, table: str) -> bool:
-        p = self.path(table)
-        return os.path.isdir(p) and any(
-            f.endswith(".parquet") or f == "_SUCCESS" for f in os.listdir(p))
+        """Commit-metadata sidecar (stand-in for Iceberg snapshot summary),
+        one JSON line per write: a long-lived writer never re-reads it."""
+        with open(os.path.join(self.path(table), "_meta.jsonl"), "a") as f:
+            f.write(json.dumps(entry) + "\n")

@@ -5,15 +5,15 @@ continuous ingestion.  The Spark-native equivalent is Structured Streaming:
 ``readStream`` on the transcript table/directory, the IDENTICAL compiled
 processor-chain transform (a narrow projection plus stream-static broadcast
 joins, so it is streaming-safe with no watermark needed), and
-``foreachBatch`` driving the same Router fan-out + per-sink aggregates per
-micro-batch — which also gives exactly-once sink writes via the checkpoint
-location.
+``foreachBatch`` committing each micro-batch as one run (``__run`` = batch
+id) through the batch job's ``Router.commit`` — a replayed micro-batch
+replaces its run, so with the checkpoint location writes are exactly-once.
 
 The chain is compiled once per query start, on the streaming frame, so a
-micro-batch pays only its own persist / fan-out write / aggregate; it is
-compiled per micro-batch only when a ``PipelineReloader`` is passed, since
-swapping definitions between micro-batches is the reloader's purpose and a
-running query's plan cannot change.
+micro-batch pays only its own commit; it is compiled per micro-batch only
+when a ``PipelineReloader`` is passed, since swapping definitions between
+micro-batches is the reloader's purpose and a running query's plan cannot
+change.
 
 Windowed per-sink aggregates in *continuous* mode (with late data) use the
 event-time watermark variant below.
@@ -98,14 +98,8 @@ def stream_pipeline(spark: SparkSession, source_dir: str, schema,
         if reloader is not None:
             live = reloader.current()
             batch_df = live.execute(batch_df)
-        executed = batch_df.persist()
-        try:
-            live.write_fanout(executed, catalog,
-                              table=f"sinks_stream/batch={batch_id}")
-            catalog.write(live.sink_counts(executed),
-                          f"sink_counts_stream/batch={batch_id}")
-        finally:
-            executed.unpersist()
+        live.commit(batch_df.withColumn("__run", F.lit(batch_id)), catalog,
+                    [batch_id], tables=("sinks_stream", "sink_counts_stream"))
 
     writer = (stream.writeStream.foreachBatch(process_batch)
               .option("checkpointLocation", checkpoint_dir))

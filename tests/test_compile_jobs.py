@@ -2,16 +2,18 @@
 
 Lookup dims are driver-local rows (``LocalDim``), so a compile — a fresh
 registry's ``Router.execute``, a facade's ``filter``, a geoip database
-directory — only builds a plan.  The reference likewise loads its lookup
+directory, the enrich demo queries' builds — only builds a plan.  The reference likewise loads its lookup
 databases once, at startup, and never queries a cluster to compile.
 Jobs are counted per call with a job group and the status tracker."""
 
 import os
 import uuid
 
+import pytest
 from pyspark.sql import functions as F
+from test_plan_cache import SF
 
-from logstash_filter_elastic_integration_spark import flagship
+from logstash_filter_elastic_integration_spark import flagship, queries
 from logstash_filter_elastic_integration_spark.engine import SparkIngestFilter
 from logstash_filter_elastic_integration_spark.sources.datagen import (
     tool_dim, transcripts)
@@ -71,3 +73,15 @@ def test_geoip_database_directory_facade_runs_no_job(spark, tmp_path):
     by = {r["ip"]: r for r in out.collect()}
     assert by["8.8.8.8"]["geo.country_iso_code"] == "US"
     assert by["10.1.1.1"]["geo.net"] == "corp"
+
+
+@pytest.mark.parametrize("name", ["enrich_lookup", "enrich_geoip_range"])
+def test_enrich_demo_query_build_runs_no_job(spark, monkeypatch, name):
+    """The lookup dims of the enrich demo queries are ``LocalDim``s.  The
+    table is loaded first: ``spark.read.parquet`` reads its footer schema
+    in a job of its own, before any pipeline is compiled."""
+    events = queries.load(spark, SF, "events")
+    monkeypatch.setattr(queries, "load", lambda *_: events)
+    out, jobs = _jobs(spark, lambda: queries.QUERIES[name](spark, SF))
+    assert jobs == []
+    assert out.count() > 0

@@ -1,11 +1,20 @@
 """Resumable batch runner: first run processes everything, second is a
-no-op, and a partially-completed manifest resumes only pending files."""
+no-op, and a partially-completed manifest resumes only pending files.
+Each input file is a run that ``Router.commit`` replaces whole, and an
+incremental run aggregates only its own rows."""
 
+import glob
+import hashlib
+import json
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from logstash_filter_elastic_integration_spark.flagship import (
     build_router, with_datastream)
 from logstash_filter_elastic_integration_spark.jobs import run_batch
+from logstash_filter_elastic_integration_spark.sources.catalog import Catalog
 from logstash_filter_elastic_integration_spark.sources.checkpoint import (
     CheckpointManifest)
 from logstash_filter_elastic_integration_spark.sources.datagen import transcripts
@@ -26,7 +35,6 @@ def test_run_batch_and_resume(spark, tmp_path):
     assert r2["status"] == "up-to-date"
 
     # simulate a partial run: forget two files, resume processes only them
-    import json
     m = CheckpointManifest(run)
     entries = json.load(open(m.path))
     json.dump(entries[:2], open(m.path, "w"))
@@ -34,8 +42,8 @@ def test_run_batch_and_resume(spark, tmp_path):
                    prepare_df=with_datastream)
     assert r3["status"] == "ok" and r3["files"] == 2
     # the resumed run must not clobber output of the files already done
-    # (ADVICE r1 high: plain overwrite lost them permanently): per-run
-    # dynamic partition overwrite keeps totals exact, no loss and no dupes
+    # (ADVICE r1 high: plain overwrite lost them permanently): replacing
+    # only the resumed files' runs keeps totals exact, no loss and no dupes
     assert spark.read.parquet(wh + "/sinks").count() == total_after_full
 
 
@@ -59,3 +67,127 @@ def test_run_batch_incremental_appends(spark, tmp_path):
     n2 = sinks.count()
     assert n2 > n1  # old rows kept, new rows added
     assert sinks.filter(~F.col("conv_id").startswith("late-")).count() == n1
+
+
+def _die_after_commit_once(monkeypatch):
+    """The next ``mark_done`` raises: the job dies after its commit, before
+    the manifest records the files."""
+    mark_done = CheckpointManifest.mark_done
+
+    def die(self, *a, **kw):
+        monkeypatch.setattr(CheckpointManifest, "mark_done", mark_done)
+        raise RuntimeError("killed between commit and mark_done")
+
+    monkeypatch.setattr(CheckpointManifest, "mark_done", die)
+
+
+def _sink_totals(spark, wh):
+    """(rows in ``sinks``, summed ``n`` in ``sink_counts``)."""
+    return (spark.read.parquet(wh + "/sinks").count(),
+            spark.read.parquet(wh + "/sink_counts").agg(F.sum("n")).first()[0])
+
+
+def test_recommit_replaces_whole_run(spark, tmp_path, monkeypatch):
+    """A resumed file whose rows now route to another sink keeps nothing of
+    its first attempt: the re-commit replaces the file's whole run, not
+    only the (run, sink) partitions it writes again."""
+    src = str(tmp_path / "in")
+    transcripts(spark, 600).repartition(2).write.parquet(src)
+    n_in = spark.read.parquet(src).count()
+    router = build_router(spark)
+    wh, run = str(tmp_path / "wh"), str(tmp_path / "run")
+
+    _die_after_commit_once(monkeypatch)
+    with pytest.raises(RuntimeError, match="killed"):
+        run_batch(spark, router, src, wh, run, prepare_df=with_datastream)
+    assert _sink_totals(spark, wh) == (n_in, n_in)
+
+    def elsewhere(df):
+        return with_datastream(df).withColumn("data_stream.namespace",
+                                              F.lit("other"))
+
+    r = run_batch(spark, router, src, wh, run, prepare_df=elsewhere)
+    assert r["status"] == "ok" and r["files"] == 2
+    assert _sink_totals(spark, wh) == (n_in, n_in)
+    sinks = {row["__sink"] for row in spark.read.parquet(wh + "/sinks")
+             .select("__sink").distinct().collect()}
+    assert sinks == {"logs-agent.turns-other"}
+
+
+def test_incremental_runs_aggregate_only_their_own_rows(
+        spark, tmp_path, monkeypatch):
+    """k = 3 one-file arrivals, the second killed between its commit and
+    ``mark_done`` and then resumed.  No run reads the sink tables back;
+    ``sink_counts`` holds one ``__run`` partition per input file, and its
+    counts sum to a from-scratch aggregate over the whole ``sinks`` table;
+    no row and no count is doubled."""
+    src = str(tmp_path / "in")
+    router = build_router(spark)
+    wh, run = str(tmp_path / "wh"), str(tmp_path / "run")
+    reads = []
+    read = Catalog.read
+
+    def spy(self, table):
+        reads.append(table)
+        return read(self, table)
+
+    monkeypatch.setattr(Catalog, "read", spy)
+    n_in = 0
+    for k in range(3):
+        arrival = transcripts(spark, 300).withColumn(
+            "conv_id", F.concat(F.lit(f"a{k}-"), "conv_id"))
+        arrival.coalesce(1).write.mode("append").parquet(src)
+        n_in += arrival.count()
+        if k == 1:
+            _die_after_commit_once(monkeypatch)
+            with pytest.raises(RuntimeError, match="killed"):
+                run_batch(spark, router, src, wh, run,
+                          prepare_df=with_datastream)
+        r = run_batch(spark, router, src, wh, run, prepare_df=with_datastream)
+        assert r["status"] == "ok" and r["files"] == 1
+    assert reads == []
+    monkeypatch.setattr(Catalog, "read", read)
+
+    def run_dirs(table):
+        return sorted(os.path.basename(p).removeprefix("__run=")
+                      for p in glob.glob(os.path.join(wh, table, "__run=*")))
+
+    # the driver's run ids are the ones Spark tagged the rows with
+    done = CheckpointManifest(run).completed_files()
+    assert len(done) == 3
+    python_runs = sorted(hashlib.md5(f.encode()).hexdigest()[:12]
+                         for f in done)
+    spark_runs = sorted(r[0] for r in spark.read.parquet(src).select(
+        F.substring(F.md5(F.input_file_name()), 1, 12)).distinct().collect())
+    assert python_runs == spark_runs
+    assert run_dirs("sink_counts") == run_dirs("sinks") == python_runs
+
+    catalog = Catalog(spark, wh)
+    sinks = catalog.read("sinks")
+    assert sinks.count() == n_in
+    assert sinks.select("conv_id", "turn_idx").distinct().count() == n_in
+    keys = ["sink", "conv_bucket", "role", "tool", "ts_window"]
+
+    def summed(df):
+        return {tuple(r[:-1]): r[-1] for r in
+                df.groupBy(*keys).agg(F.sum("n")).collect()}
+
+    incremental = summed(catalog.read("sink_counts"))
+    assert sum(incremental.values()) == n_in
+    assert incremental == summed(
+        router.sink_counts(sinks, dropped_filtered=True))
+
+
+def test_commit_sidecar_appends_one_line_per_write(spark, tmp_path):
+    src = str(tmp_path / "in")
+    router = build_router(spark)
+    wh, run = str(tmp_path / "wh"), str(tmp_path / "run")
+    for k in range(3):
+        transcripts(spark, 100).coalesce(1).write.mode("append").parquet(src)
+        run_batch(spark, router, src, wh, run, prepare_df=with_datastream)
+    for table in ("sinks", "sink_counts"):
+        with open(os.path.join(wh, table, "_meta.jsonl")) as f:
+            entries = [json.loads(line) for line in f]
+        assert len(entries) == 3
+        assert all(e["mode"] == "append" and len(e["runs"]) == 1
+                   for e in entries)

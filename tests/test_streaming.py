@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from logstash_filter_elastic_integration_spark.flagship import (
     build_router, with_datastream)
+from logstash_filter_elastic_integration_spark.jobs import run_batch
 from logstash_filter_elastic_integration_spark.plans import PipelineRegistry
 from logstash_filter_elastic_integration_spark.router import Router
 from logstash_filter_elastic_integration_spark.sources.catalog import Catalog
@@ -31,8 +32,7 @@ def test_stream_pipeline_availablenow(spark, tmp_path):
         """Adds datastream columns per micro-batch before routing."""
         def execute(self, batch_df):
             return router.execute(with_datastream(batch_df))
-        write_fanout = staticmethod(router.write_fanout)
-        sink_counts = staticmethod(router.sink_counts)
+        commit = staticmethod(router.commit)
 
     q = stream_pipeline(spark, src, schema, DSRouter(), catalog,
                         str(tmp_path / "ck"))
@@ -106,8 +106,7 @@ def test_stream_checkpoint_restart_no_dupes(spark, tmp_path):
     class DSRouter:
         def execute(self, batch_df):
             return router.execute(with_datastream(batch_df))
-        write_fanout = staticmethod(router.write_fanout)
-        sink_counts = staticmethod(router.sink_counts)
+        commit = staticmethod(router.commit)
 
     ck = str(tmp_path / "ck")
     q1 = stream_pipeline(spark, src, schema, DSRouter(), catalog, ck)
@@ -296,7 +295,7 @@ def test_stream_pipeline_reloads_definitions_between_microbatches(
     assert reloader.reloads == 1
     ids = _batch_ids(q)
     assert len(ids) == 2
-    before, after = (spark.read.parquet(str(wh / "sinks_stream" / f"batch={b}"))
+    before, after = (spark.read.parquet(str(wh / "sinks_stream" / f"__run={b}"))
                      for b in ids)
     assert before.count() == first.count()
     assert before.filter(F.col("stage") == "v1").count() == before.count()
@@ -333,11 +332,12 @@ def _value_hash(df) -> tuple[int, int]:
 
 
 def test_stream_matches_batch_on_example_pipelines(spark, tmp_path):
-    """No divergence between a batch Router.execute and the compiled-once
-    stream over the example pipelines (grok, user_agent — whose streaming
-    branch skips the distinct-parse join — the painless loop script as a
-    pandas UDF, lookup, reroute and pipeline-level on_failure): equal rows
-    per sink and equal output values, over two micro-batches."""
+    """No divergence between a batch job and the compiled-once stream, each
+    committing through ``Router.commit``, over the example pipelines (grok,
+    user_agent — whose streaming branch skips the distinct-parse join — the
+    painless loop script as a pandas UDF, lookup, reroute and pipeline-level
+    on_failure): equal rows and counts per sink and equal output values,
+    over two micro-batches and twelve one-file runs."""
     def router():
         reg = PipelineRegistry()
         reg.register_dir(EXAMPLES)
@@ -363,15 +363,14 @@ def test_stream_matches_batch_on_example_pipelines(spark, tmp_path):
     assert q.exception() is None
     assert len(_batch_ids(q)) == 2
 
-    batch = router()
-    executed = batch.execute(spark.read.parquet(src))
-    batch_catalog = Catalog(spark, str(tmp_path / "wh_batch"))
-    batch.write_fanout(executed, batch_catalog)
-    batch_catalog.write(batch.sink_counts(executed), "sink_counts")
+    r = run_batch(spark, router(), src, str(tmp_path / "wh_batch"),
+                  str(tmp_path / "run_batch"))
+    assert r["status"] == "ok" and r["files"] == 12
 
     streamed = spark.read.parquet(
-        str(tmp_path / "wh_stream" / "sinks_stream")).drop("batch")
-    batched = spark.read.parquet(str(tmp_path / "wh_batch" / "sinks"))
+        str(tmp_path / "wh_stream" / "sinks_stream")).drop("__run")
+    batched = spark.read.parquet(
+        str(tmp_path / "wh_batch" / "sinks")).drop("__run")
     assert sorted(streamed.columns) == sorted(batched.columns)
 
     def rows_per_sink(df):
