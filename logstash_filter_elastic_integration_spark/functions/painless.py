@@ -1,27 +1,26 @@
-"""Painless-subset compiler: condition / script source -> Spark Columns.
+"""Painless Column lowering: the validated AST -> Spark Columns.
 
 The reference embeds the full Painless script engine for processor ``if``
 conditions and ``script`` processors (reference:
 EventProcessorBuilder.java:233-240 wires the painless ScriptService; the
-supported-subset caveat is docs/index.asciidoc:192).  Full Painless is a JVM
-language — out of scope.  Following the reference's own pattern of failing
-loudly on unsupported processors (spec/integration/
-elastic_integration_spec.rb:1515-1570), we compile a *declared subset* to
-pure Catalyst Column expressions and raise ``UnsupportedScriptError`` for
-anything outside it, so unsupported pipelines fail at compile time, not
-silently at run time.
+supported-subset caveat is docs/index.asciidoc:192).  Both parse through
+one front end, :func:`painless_parse.parse`.  This module lowers a declared subset of
+that AST to pure Catalyst Column expressions (whole-stage codegen, no
+Python at run time) and raises ``UnsupportedScriptError`` for anything
+outside it.  A ``script`` then runs on the per-row interpreter
+(:mod:`painless_exec`); an ``if`` condition has no fallback, so an
+unsupported one fails the pipeline at compile time, following the
+reference's fail-loud pattern (spec/integration/
+elastic_integration_spec.rb:1515-1570).
 
-Subset: ctx field refs (``ctx.a.b``, ``ctx['x']``, null-safe ``ctx?.a``),
-literals, params refs, ``== != < <= > >= && || !``, arithmetic ``+ - * / %``
-(``+`` is concat when either side is a string), ternary ``c ? a : b``,
-method calls ``contains/startsWith/endsWith/length/isEmpty/toLowerCase/
-toUpperCase/trim``, ``Processors.lowercase/uppercase`` helpers, and
-assignment statements ``ctx.x = expr;`` in scripts.
-
-Strategy: textually rewrite Painless tokens to Python syntax, parse with the
-stdlib ``ast`` module, and fold the AST to Columns.  This keeps the entire
-conditional surface inside Catalyst (whole-stage codegen) — conditions never
-drop to Python at run time.
+Subset: statements ``ctx.x = expr;`` (later statements see earlier
+assignments) and ``if``/``else if``/``else`` at any depth (F.when-gated
+assignments); expressions over ctx field refs (``ctx.a.b``, ``ctx['x']``,
+null-safe ``ctx?.a``), literals, params refs, ``== != < <= > >= && || !``,
+arithmetic ``+ - * / %`` (``+`` is concat when either side is a string),
+ternaries at any depth, Elvis, ``=~``/``==~``, ``instanceof``, list/map
+literals, lambdas over arrays (streams-lite), Math and parse/render
+statics, String methods, ``Processors.*`` helpers and a java.time subset.
 """
 
 from __future__ import annotations
@@ -33,265 +32,9 @@ from pyspark.sql import Column, functions as F
 from pyspark.sql import types as T
 
 from .lru import LRU
-
-
-class UnsupportedScriptError(ValueError):
-    pass
-
-
-_REWRITES = [
-    (re.compile(r"&&"), " and "),
-    (re.compile(r"\|\|"), " or "),
-    (re.compile(r"!(?![=])"), " not "),
-    (re.compile(r"\bnull\b"), "None"),
-    (re.compile(r"\btrue\b"), "True"),
-    (re.compile(r"\bfalse\b"), "False"),
-    (re.compile(r"\?\."), "."),
-    # Java numeric-literal suffixes: 0L, 1.5f, 2.0d -> plain literals
-    (re.compile(r"\b(\d+)[Ll]\b"), r"\1"),
-    (re.compile(r"\b(\d+\.\d+)[FfDd]\b"), r"\1"),
-]
-_TERNARY = re.compile(r"^(?P<c>[^?]+)\?(?P<a>[^:]+):(?P<b>.+)$")
-
-# string literals must be lifted out BEFORE any token rewrite or statement
-# split: 'Hello && null' would otherwise compile to a comparison against
-# 'Hello  and  None', and ; = ? : { } inside literals would derail the
-# statement/ternary/if-block parsing (ADVICE r1)
-_STR_RX = re.compile(r"'(?:\\.|[^'\\])*'|\"(?:\\.|[^\"\\])*\"")
-_ESCAPES = {"n": "\n", "t": "\t", "r": "\r", "b": "\b", "f": "\f"}
-
-
-def _protect_literals(src: str) -> tuple[str, list[str]]:
-    """Replace every quoted literal with a ``__sN__`` placeholder token
-    (a plain identifier — inert under all rewrites) and return the
-    unescaped contents for later restoration."""
-    lits: list[str] = []
-
-    def sub(m):
-        raw = m.group(0)[1:-1]
-        content = re.sub(r"\\(.)",
-                         lambda e: _ESCAPES.get(e.group(1), e.group(1)), raw)
-        lits.append(content)
-        return f" __s{len(lits) - 1}__ "
-
-    return _STR_RX.sub(sub, src), lits
-
-
-def _restore_literals(src: str, lits: list[str]) -> str:
-    for i, s in enumerate(lits):
-        src = src.replace(f"__s{i}__", repr(s))
-    return src
-
-
-# Painless regex operators (run AFTER string protection, BEFORE token
-# rewrites): `expr =~ /pat/` is Matcher.find, `expr ==~ /pat/` is
-# Matcher.matches (entire string).  The regex literal becomes a placeholder
-# NAME on the right of a plain `==` so the stdlib ast can parse it; both
-# engines special-case `_rx[mf]<N>` names back into regex semantics.
-_RX_OP = re.compile(r"(==~|=~)\s*/((?:\\.|[^/\n])*)/")
-# standalone Pattern literal in expression position: /re/.matcher(x) etc.
-# (lookbehind rejects identifier/closing-bracket/digit before '/' so
-# division expressions never match)
-_RX_METHOD = re.compile(
-    r"(?<![\w)\]])/((?:\\.|[^/\n])*)/\s*\.\s*(matcher|split)\s*\(")
-
-# Elvis operator `a ?: b` (null-coalesce).  Rewritten to `a |_EV| b`:
-# after `||` -> `or`, the single `|` is unused in Painless, and `_EV`
-# resolves to a reflected-or sentinel in the interpreter / a coalesce
-# lowering in the Column compiler.  Must run BEFORE ternary handling
-# (`?` would otherwise split it) — both engines apply it right after
-# regex protection.
-_ELVIS_RX = re.compile(r"\?\s*:")
-
-_LHS_KEYWORD_RX = re.compile(r"^\s*(return|throw)\b")
-
-
-def _rewrite_elvis(src: str) -> str:
-    """``a ?: b`` -> ``(a) |_EV| (b)``.  Painless ?: binds LOOSER than
-    comparisons (`a ?: b == c` is `a ?: (b == c)`), while Python's `|`
-    binds tighter — so both operands are explicitly parenthesized out to
-    the enclosing expression boundary.  Chains (`a ?: b ?: c`) need no
-    special casing: left-assoc `|` coalescing is value-equivalent."""
-    while True:
-        m = _ELVIS_RX.search(src)
-        if not m:
-            return src
-        # left boundary: scan back at bracket-depth 0 for a statement /
-        # argument / ternary delimiter or an assignment `=`
-        i = m.start() - 1
-        depth = 0
-        lhs_start = 0
-        while i >= 0:
-            c = src[i]
-            if c in ")]":
-                depth += 1
-            elif c in "([":
-                if depth == 0:
-                    lhs_start = i + 1
-                    break
-                depth -= 1
-            elif depth == 0:
-                if c in ";{},?:":
-                    lhs_start = i + 1
-                    break
-                if c == "=":
-                    if i > 0 and src[i - 1] in "=!<>":
-                        i -= 1  # comparison ==/!=/<=/>= — inside the LHS
-                    else:
-                        lhs_start = i + 1  # (compound) assignment
-                        break
-            i -= 1
-        # right boundary: forward scan, same delimiter set
-        j = m.end()
-        depth = 0
-        rhs_end = len(src)
-        while j < len(src):
-            c = src[j]
-            if c in "([":
-                depth += 1
-            elif c in ")]":
-                if depth == 0:
-                    rhs_end = j
-                    break
-                depth -= 1
-            elif depth == 0 and c in ";}{,?:":
-                rhs_end = j
-                break
-            j += 1
-        lhs = src[lhs_start:m.start()]
-        kw = _LHS_KEYWORD_RX.match(lhs)
-        pre = lhs[:kw.end()] if kw else ""
-        lhs = lhs[kw.end():] if kw else lhs
-        src = (src[:lhs_start] + pre + " (" + lhs + ") |_EV| ("
-               + src[m.end():rhs_end] + ") " + src[rhs_end:])
-
-
-# Painless lambdas `(a, b) -> body` / `x -> body` -> Python `lambda`.
-# Runs BEFORE the elvis rewrite (the elvis boundary scan would otherwise
-# misparse an arrow's parameter list as part of its left operand).
-_MREF_RX = re.compile(r"\b([A-Za-z_]\w*)\s*::\s*([A-Za-z_]\w*)")
-
-_MREF_STATIC = {"Integer", "Long", "Double", "Float", "Boolean", "Math",
-                "Processors"}
-
-
-def _rewrite_method_refs(src: str, wrap: str | None = None) -> str:
-    """Method references: ``Integer::parseInt`` (static) -> the bound
-    function; ``String::toLowerCase`` (instance) -> a one-arg lambda.
-    Unknown owners are left untouched and fail loud downstream.
-    ``wrap`` (interpreter only) encloses the result in a functional-
-    interface wrapper so a STORED ref dispatches Java names
-    (``Function f = String::valueOf; f.apply(3)``)."""
-    def sub(m):
-        cls, meth = m.groups()
-        if cls in _MREF_STATIC or (cls == "String"
-                                   and meth in ("valueOf", "join")):
-            out = f"{cls}.{meth}"
-        elif cls in ("String", "Object"):
-            out = f"(lambda _mr: _mr.{meth}())"
-        else:
-            return m.group(0)
-        return f"{wrap}({out})" if wrap else out
-    return _MREF_RX.sub(sub, src)
-
-
-def _rewrite_lambdas(src: str) -> str:
-    """``(int a, String b) -> expr`` / ``x -> expr`` -> ``lambda a, b:
-    (expr)``.  The body extends to the first top-level ``,`` ``)`` ``]``
-    ``}`` ``;`` or ternary-unbalanced ``:`` (ternaries INSIDE the body are
-    tracked so their ``:`` doesn't cut it short)."""
-    while True:
-        k = src.find("->")
-        if k < 0:
-            return src
-        # params: back over whitespace; a ')' closes a parenthesized list,
-        # otherwise a single bare identifier
-        i = k - 1
-        while i >= 0 and src[i] in " \t":
-            i -= 1
-        if i >= 0 and src[i] == ")":
-            depth, j = 1, i - 1
-            while j >= 0 and depth:
-                depth += {")": 1, "(": -1}.get(src[j], 0)
-                j -= 1
-            pstart = j + 1
-            raw = src[pstart + 1:i]
-        else:
-            j = i
-            while j >= 0 and (src[j].isalnum() or src[j] == "_"):
-                j -= 1
-            pstart = j + 1
-            raw = src[pstart:i + 1]
-        # painless params may be typed: `(int a, def b)` -> last token each
-        params = ", ".join(p.strip().split()[-1]
-                           for p in raw.split(",") if p.strip())
-        # body: forward scan with bracket + ternary depth
-        m = k + 2
-        depth = tern = 0
-        end = len(src)
-        p2 = m
-        while p2 < len(src):
-            ch = src[p2]
-            if ch in "([":
-                depth += 1
-            elif ch in ")]":
-                if depth == 0:
-                    end = p2
-                    break
-                depth -= 1
-            elif depth == 0:
-                if ch in ",;}":
-                    end = p2
-                    break
-                if ch == "?":
-                    rest = src[p2 + 1:]
-                    stripped = rest.lstrip()
-                    if stripped.startswith(":"):
-                        # elvis `?:` — skip the pair entirely
-                        p2 += 1 + (len(rest) - len(stripped)) + 1
-                        continue
-                    tern += 1        # ternary opens
-                elif ch == ":":
-                    if tern == 0:
-                        end = p2
-                        break
-                    tern -= 1
-            p2 += 1
-        body = src[m:end].strip()
-        src = (src[:pstart] + " (lambda " + params + ": (" + body + ")) "
-               + src[end:])
-
-
-def _protect_regexes(src: str) -> tuple[str, list[tuple[str, str]]]:
-    pats: list[tuple[str, str]] = []
-
-    def sub_method(m):
-        # standalone Pattern literal: /re/.matcher(x) | /re/.split(x) —
-        # becomes a placeholder NAME the interpreter binds to a compiled
-        # java.util.regex.Pattern stand-in
-        pats.append(("p", m.group(1)))
-        return f"_rxp{len(pats) - 1}.{m.group(2)}("
-
-    src = _RX_METHOD.sub(sub_method, src)
-
-    def sub(m):
-        kind = "m" if m.group(1) == "==~" else "f"
-        pats.append((kind, m.group(2)))
-        return f" == _rx{kind}{len(pats) - 1} "
-
-    return _RX_OP.sub(sub, src), pats
-
+from .painless_parse import UnsupportedScriptError, parse
 
 _RX_NAME = re.compile(r"^_rx([mf])(\d+)$")
-
-# `x instanceof String` -> `x == _jtString` (reflected type-check object in
-# the interpreter; static-dtype lowering in the Column compiler)
-_INSTANCEOF_RX = re.compile(r"\binstanceof\s+([A-Za-z_]\w*)")
-
-
-def _rewrite_instanceof(src: str) -> str:
-    return _INSTANCEOF_RX.sub(r" == _jt\1", src)
-
 
 _JT_NAME = re.compile(r"^_jt(\w+)$")
 _JT_SPARK = {
@@ -308,82 +51,6 @@ _JT_SPARK = {
     "Number": (T.IntegerType, T.LongType, T.DoubleType, T.FloatType,
                T.ShortType, T.ByteType, T.DecimalType),
 }
-
-
-def _rewrite_collection_literals(src: str, wrap: bool = False) -> str:
-    """Painless collection literals -> Python: map ``['a': 1]`` -> ``{'a':
-    1}`` (empty map ``[:]`` -> ``{}``), list ``[1, 2]`` stays a list.
-    Only brackets in LITERAL position (after an operator/opener/start) are
-    touched — ``x[0]`` subscripts are untouched.  With ``wrap`` (the
-    interpreter engine) results are passed through ``_jmap(..)`` /
-    ``_jlist(..)`` so Java method names (put/add/size/...) work on them.
-    Runs after string protection, so quoted ``:``/brackets are inert."""
-    out: list[str] = []
-    i, n = 0, len(src)
-
-    def literal_pos(j: int) -> bool:
-        k = j - 1
-        while k >= 0 and src[k] in " \t\r\n":
-            k -= 1
-        return k < 0 or src[k] in "=(,+-*/%<>!&|?:;{["
-
-    while i < n:
-        ch = src[i]
-        if ch == "[" and literal_pos(i):
-            depth, j = 1, i + 1
-            while j < n and depth:
-                if src[j] == "[":
-                    depth += 1
-                elif src[j] == "]":
-                    depth -= 1
-                j += 1
-            if depth:  # unbalanced — leave untouched, parser will complain
-                out.append(ch)
-                i += 1
-                continue
-            inner = _rewrite_collection_literals(src[i + 1:j - 1], wrap)
-            d2, has_colon = 0, False
-            for c2 in inner:
-                if c2 in "([{":
-                    d2 += 1
-                elif c2 in ")]}":
-                    d2 -= 1
-                elif c2 == ":" and d2 == 0:
-                    has_colon = True
-            if inner.strip() == ":" or has_colon:
-                body = "" if inner.strip() == ":" else inner
-                rep = "{" + body + "}"
-                out.append(f"_jmap({rep})" if wrap else rep)
-            else:
-                rep = "[" + inner + "]"
-                out.append(f"_jlist({rep})" if wrap else rep)
-            i = j
-        else:
-            out.append(ch)
-            i += 1
-    return "".join(out)
-
-
-def _to_python(src: str, lits: list[str] | None = None) -> str:
-    if lits is None:
-        src, lits = _protect_literals(src)
-    # painless statements span lines freely (newlines are whitespace);
-    # python eval-mode is line-sensitive, so collapse them — string
-    # literals are already protected as placeholders
-    src = re.sub(r"\s*\n\s*", " ", src)
-    src = src.strip().rstrip(";")
-    for rx, rep in _REWRITES:
-        src = rx.sub(rep, src)
-    src = _rewrite_method_refs(src)
-    src = _rewrite_lambdas(src)
-    src = _rewrite_elvis(src)
-    src = _rewrite_instanceof(src)
-    src = _rewrite_collection_literals(src)
-    # painless ternary -> python conditional (single, non-nested)
-    m = _TERNARY.match(src)
-    if m and "==" not in src.split("?")[0][-2:]:
-        src = f"({m.group('a').strip()}) if ({m.group('c').strip()}) else ({m.group('b').strip()})"
-    return _restore_literals(src.strip(), lits)
 
 
 class _Ctx:
@@ -976,7 +643,11 @@ def _eval(node: ast.AST, c: _Ctx) -> tuple[Column, object]:
                     and "\\E" not in str(node.args[0].value):
                 # ES StringFunctionUtils.splitOnToken: LITERAL separator
                 # (\Q..\E quoting), trailing empties kept (limit -1),
-                # limit > 0 caps parts with the last keeping the rest
+                # limit > 0 caps parts with the last keeping the rest; an
+                # empty or null token gives [receiver] (an empty regex
+                # would split between every character)
+                if not node.args[0].value:
+                    return F.array(recv), T.ArrayType(T.StringType())
                 sep = "\\Q" + str(node.args[0].value) + "\\E"
                 lim = -1
                 if len(node.args) > 1:
@@ -1016,9 +687,7 @@ def compile_condition(source: str, resolve, params: dict | None = None) -> Colum
     """Painless ``if`` condition -> boolean Column (null-safe: null -> false)."""
     sig_fn = getattr(resolve, "signature", None)
     if sig_fn is None:
-        src, lits = _protect_literals(source)
-        src, regexes = _protect_regexes(src)
-        return _compile_condition_p(src, lits, resolve, params, regexes)
+        return _lower_condition(source, resolve, params)
     key0 = (source, repr(sorted(params.items())) if params else None)
     entry = _COND_CACHE.get(key0)
     if entry is not None:
@@ -1037,9 +706,7 @@ def compile_condition(source: str, resolve, params: dict | None = None) -> Colum
         return resolve.present(path)
 
     rec.present = rec_present
-    src, lits = _protect_literals(source)
-    src, regexes = _protect_regexes(src)
-    col = _compile_condition_p(src, lits, rec, params, regexes)
+    col = _lower_condition(source, rec, params)
     paths = tuple(dict.fromkeys(recorded))
     if entry is None:
         entry = _COND_CACHE[key0] = (paths, LRU(_COND_SIGS))
@@ -1048,104 +715,144 @@ def compile_condition(source: str, resolve, params: dict | None = None) -> Colum
     return col
 
 
-def _compile_condition_p(source: str, lits: list[str], resolve,
-                         params: dict | None = None,
-                         regexes: list[tuple[str, str]] | None = None) -> Column:
-    py = _to_python(source, lits)
-    try:
-        tree = ast.parse(py, mode="eval")
-    except SyntaxError as e:
-        raise UnsupportedScriptError(f"cannot parse condition {source!r}: {e}") from e
-    col, _ = _eval(tree.body, _Ctx(resolve, params, regexes))
-    return F.coalesce(col.cast("boolean"), F.lit(False))
-
-
-_IF_BLOCK = re.compile(
-    r"^\s*if\s*\((?P<cond>.*?)\)\s*\{(?P<body>[^{}]*)\}"
-    r"(?:\s*else\s*\{(?P<els>[^{}]*)\})?\s*$", re.S)
-
-
 def compile_script(source: str, resolve, params: dict | None = None) -> list[tuple[str, Column]]:
-    """Painless script body -> ordered [(field_path, value Column), ...].
-
-    Supported: sequences of ``ctx.<path> = <expr>;`` assignments — the
-    shape of the reference's script-processor fixture
-    (src/test/resources/.../script-processor-pipelines/pipeline.json) —
-    plus single-level ``if (cond) { ...assignments... } [else { ... }]``
-    blocks, which compile to F.when-gated assignments.
-
-    Literals are protected up-front, so ; = ? : { } && null etc. INSIDE
-    quoted strings never affect statement splitting or token rewrites.
-    """
-    src, lits = _protect_literals(source)
-    src, regexes = _protect_regexes(src)
-    return _compile_script_p(src, lits, resolve, params, regexes)
+    """Painless script body -> ordered [(field_path, value Column), ...]:
+    :func:`lower_script` without the presence Columns."""
+    return [(path, col) for path, col, _ in lower_script(source, resolve, params)]
 
 
-def _compile_script_p(source: str, lits: list[str], resolve,
-                      params: dict | None = None,
-                      regexes: list[tuple[str, str]] | None = None
-                      ) -> list[tuple[str, Column]]:
-    m = _IF_BLOCK.match(source.strip())
-    if m:
-        cond = _compile_condition_p(m.group("cond"), lits, resolve, params,
-                                    regexes)
-        body = dict(_compile_script_p(m.group("body"), lits, resolve, params,
-                                      regexes))
-        els = dict(_compile_script_p(m.group("els") or "", lits, resolve,
-                                     params, regexes))
-        out: list[tuple[str, Column]] = []
-        for path in {**body, **els}:
-            cur, _ = resolve(path)
-            out.append((path, F.when(cond, body.get(path, cur))
-                        .otherwise(els.get(path, cur))))
-        return out
-    # later statements see earlier in-script assignments (painless ctx is
-    # a live map: `ctx.r = ctx.i * 2; ctx.r2 = ctx.r + 1;`) — layer the
-    # accumulated assignments over the frame resolver
-    assigned: dict[str, tuple[Column, object]] = {}
-
-    def layered_resolve(path: str):
-        if path in assigned:
-            return assigned[path]
-        return resolve(path)
-
-    if hasattr(resolve, "present"):
-        # an in-script assignment makes the key present (even null)
-        layered_resolve.present = lambda path: (
-            F.lit(True) if path in assigned else resolve.present(path))
-
-    ctx = _Ctx(layered_resolve, params, regexes)
-    out: list[tuple[str, Column]] = []
-    for stmt in [s.strip() for s in source.split(";") if s.strip()]:
-        lhs, rhs = _split_assignment(stmt)
-        try:
-            target = ast.parse(_to_python(lhs, lits), mode="eval").body
-        except SyntaxError as e:
-            raise UnsupportedScriptError(f"cannot parse target {lhs!r}: {e}") from e
-        path = _field_path(target)
-        if not path or path == "__ctx__":
-            raise UnsupportedScriptError(f"assignment target must be ctx field: {stmt!r}")
-        py = _to_python(rhs, lits)
-        try:
-            tree = ast.parse(py, mode="eval")
-        except SyntaxError as e:
-            raise UnsupportedScriptError(f"cannot parse script stmt {stmt!r}: {e}") from e
-        col, dt = _eval(tree.body, ctx)
-        out.append((path, col))
-        assigned[path] = (col, dt)
+def lower_script(source: str, resolve, params: dict | None = None) -> list[tuple[str, Column, Column]]:
+    """Painless script body -> ordered [(field_path, value, present), ...],
+    one entry per assignment in statement order; an ``if`` contributes
+    one F.when-merged entry per path either branch assigns.  ``present``
+    is the path's per-row presence after that statement: true where the
+    script assigned it, the prior presence where an untaken branch left
+    it alone.  Raises UnsupportedScriptError for anything else, and the
+    script processor then runs the script on the per-row interpreter."""
+    tree, regexes = parse(source)
+    _Plain().visit(tree)
+    out: list[tuple[str, Column, Column]] = []
+    _lower(tree.body, _Ctx(_Scope(resolve), params, regexes), out)
     return out
 
 
-def _split_assignment(stmt: str) -> tuple[str, str]:
-    """Split on the FIRST top-level '=' that isn't ==/!=/<=/>= — so ternary
-    and comparison operators on the right side parse correctly."""
-    for i, ch in enumerate(stmt):
-        if ch != "=":
-            continue
-        prev = stmt[i - 1] if i else ""
-        nxt = stmt[i + 1] if i + 1 < len(stmt) else ""
-        if prev in "=!<>" or nxt == "=":
-            continue
-        return stmt[:i].strip(), stmt[i + 1:].strip()
-    raise UnsupportedScriptError(f"only assignments supported, got: {stmt!r}")
+def _lower_condition(source: str, resolve, params: dict | None) -> Column:
+    tree, regexes = parse(source)
+    _Plain().visit(tree)
+    if len(tree.body) != 1 or not isinstance(tree.body[0], ast.Expr):
+        raise UnsupportedScriptError(
+            f"condition must be one expression: {source!r}")
+    return _truth(_eval(tree.body[0].value, _Ctx(resolve, params, regexes)))
+
+
+def _truth(val: tuple[Column, object]) -> Column:
+    return F.coalesce(val[0].cast("boolean"), F.lit(False))
+
+
+class _Plain(ast.NodeTransformer):
+    """Drop the front end's interpreter-only wrappers: ``a?.b`` is plain
+    field access (Columns null-propagate already), and ``_jlist``/
+    ``_jmap``/``_jfn`` wrap literals and method refs that lower to arrays,
+    maps and lambdas as they are.  Every other helper (casts,
+    ``_jlist_new``, ``_USHR``, ...) is left for _eval to reject."""
+
+    def visit_Call(self, node):    # noqa: N802
+        self.generic_visit(node)
+        f = node.func
+        if not isinstance(f, ast.Name):
+            return node
+        if f.id in ("_jlist", "_jmap", "_jfn") and len(node.args) == 1:
+            return node.args[0]
+        if f.id in ("_nsget", "_nscall"):
+            attr = ast.Attribute(value=node.args[0], attr=node.args[1].value,
+                                 ctx=ast.Load())
+            if f.id == "_nsget":
+                return attr
+            return ast.Call(func=attr, args=node.args[2:], keywords=[])
+        return node
+
+
+class _Scope:
+    """ctx as the statements lowered so far leave it: in-script writes
+    layer over the outer resolver (painless ctx is a live map, so
+    ``ctx.r = ctx.i * 2; ctx.r2 = ctx.r + 1;`` reads the new ctx.r)."""
+
+    def __init__(self, outer):
+        self.outer = outer
+        self.root = outer.root if isinstance(outer, _Scope) else self
+        self.vals: dict[str, tuple[Column, object]] = {}
+        self.sizes: dict[str, int] = {}       # path -> its value's _sized
+        self.written: dict[str, Column] = {}  # path -> per-row presence
+        self.read = 0   # root only: sizes of the written values read
+
+    def __call__(self, path: str):
+        if path in self.vals:
+            self.root.read += self.sizes[path]
+            return self.vals[path]
+        return self.outer(path)
+
+    def present(self, path: str) -> Column:
+        if path in self.written:
+            return self.written[path]
+        present = getattr(self.outer, "present", None)
+        if present is not None:
+            return present(path)
+        return self.outer(path)[0].isNotNull()
+
+
+# An ``if`` inlines a path's prior value in both arms, so n sequential
+# ``if (c) { ctx.s = ctx.s + 1; }`` build a 2^n-node expression; past
+# this many (estimated) nodes the script runs on the interpreter instead.
+_MAX_NODES = 2000
+
+
+def _sized(node: ast.expr, c: _Ctx) -> tuple[tuple[Column, object], int]:
+    """-> (_eval(node, c), estimated expression size): the AST's nodes
+    plus the size of every in-script value it reads (inlined)."""
+    c.resolve.root.read = 0
+    val = _eval(node, c)
+    return val, sum(1 for _ in ast.walk(node)) + c.resolve.root.read
+
+
+def _bind(scope: _Scope, path: str, val, size: int, present: Column,
+          out: list) -> None:
+    if size > _MAX_NODES:
+        raise UnsupportedScriptError(
+            f"ctx.{path} lowers to ~{size} expression nodes")
+    scope.vals[path], scope.sizes[path] = val, size
+    scope.written[path] = present
+    out.append((path, val[0], present))
+
+
+def _lower(stmts: list[ast.stmt], c: _Ctx,
+           out: list[tuple[str, Column, Column]]) -> None:
+    """Lower statements in order into the _Scope ``c`` resolves through,
+    appending each write to ``out``."""
+    scope = c.resolve
+    for s in stmts:
+        if isinstance(s, ast.Assign) and len(s.targets) == 1:
+            path = _field_path(s.targets[0])
+            if not path or path == "__ctx__":
+                raise UnsupportedScriptError(
+                    f"assignment target must be a ctx field: "
+                    f"{ast.unparse(s)!r}")
+            val, size = _sized(s.value, c)
+            _bind(scope, path, val, size, F.lit(True), out)
+        elif isinstance(s, ast.If):
+            test, size = _sized(s.test, c)
+            cond = _truth(test)
+            yes, no = _Scope(scope), _Scope(scope)
+            for arm, body in ((yes, s.body), (no, s.orelse)):
+                _lower(body, _Ctx(arm, c.params, c.regexes), [])
+            for path in {**yes.vals, **no.vals}:
+                scope.root.read = 2   # the two arms' leaves
+                (a, adt), (b, bdt) = yes(path), no(path)
+                _bind(scope, path, (F.when(cond, a).otherwise(b), adt or bdt),
+                      1 + size + scope.root.read,
+                      F.when(cond, yes.present(path))
+                      .otherwise(no.present(path)), out)
+        elif not isinstance(s, ast.Pass):
+            # loops, locals and expression statements run on the
+            # interpreter; a fold-shaped ast.For would lower here
+            raise UnsupportedScriptError(
+                f"{type(s).__name__} statement not lowered to Columns")

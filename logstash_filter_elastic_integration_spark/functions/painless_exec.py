@@ -1,30 +1,16 @@
-"""Painless STATEMENT interpreter — the slow-path complement to the
-vectorized Column compiler in :mod:`painless`.
+"""Painless per-row interpreter: the back end for every script the
+Column lowering in :mod:`painless` rejects (loops, local variables,
+compound updates, casts, expression statements — the reference runs
+arbitrary Painless per event, docs/index.asciidoc:192).
 
-The Column compiler covers straight-line assignments and single-level
-``if`` blocks as pure Catalyst expressions (the fast path: whole-stage
-codegen, no Python).  Real integration pipelines also use loops, local
-variables, and compound updates (reference: the script processor executes
-arbitrary Painless per event, docs/index.asciidoc:192).  Those compile
-here instead:
-
-1. TRANSPILE Painless to Python source: literal protection, ``&&/||/!``,
-   ``null/true/false``, ``?.``; C-style ``for (int i = 0; i < n; i++)``
-   and for-each ``for (def x : xs)``; typed declarations (``int x = ..``)
-   to bare assignment; ``x++``/``x--``; braces to indentation; ternaries
-   to conditional expressions; ``while`` bodies get an injected iteration
-   cap (watchdog analogue — a runaway script fails the ROW, it cannot
-   stall an executor core).
-2. VALIDATE the parsed AST against a statement/expression whitelist (no
-   imports, no dunder access; lambdas allowed — painless arrows and
-   method references rewrite to them) — anything outside it raises
-   UnsupportedScriptError at COMPILE time, preserving the engine's
-   fail-loud contract.
-3. EXECUTE per row inside an Arrow-batched pandas UDF.  ``ctx`` bridges
-   the flat dotted-column document model; string/list values are wrapped
-   so Painless method names (``substring``/``indexOf``/``size``/...)
-   work naturally.  A per-row exception fails that row (script runtime
-   error -> failure channel), not the batch.
+Both back ends consume the same validated AST from
+:func:`painless_parse.parse`.  Here it is rewritten for Java semantics
+(String literals, ``/``/``%``, universal methods, functional-interface
+lambdas), compiled, and EXECUTED per row inside an Arrow-batched pandas
+UDF.  ``ctx`` bridges the flat dotted-column document model; string/list
+values are wrapped so Painless method names (``substring``/``indexOf``/
+``size``/...) work naturally.  A per-row exception fails that row (script
+runtime error -> failure channel), not the batch.
 
 Per-row Python is the documented exception for this operator: the
 reference itself runs scripts one event at a time, and every other
@@ -37,524 +23,7 @@ from __future__ import annotations
 import ast
 import re
 
-from .painless import (UnsupportedScriptError, _protect_literals,
-                       _protect_regexes, _restore_literals,
-                       _rewrite_collection_literals, _rewrite_elvis,
-                       _rewrite_instanceof, _rewrite_lambdas,
-                       _rewrite_method_refs)
-
-_TOKEN_REWRITES = [
-    (re.compile(r"&&"), " and "),
-    (re.compile(r"\|\|"), " or "),
-    (re.compile(r"!(?![=])"), " not "),
-    (re.compile(r"\bnull\b"), "None"),
-    (re.compile(r"\btrue\b"), "True"),
-    (re.compile(r"\bfalse\b"), "False"),
-    # null-safe `a?.b`: marker attribute the _NullSafe AST pass lowers to
-    # _nsget/_nscall (short-circuits to null like Java, instead of the old
-    # plain-`.` rewrite that NPE'd on a null receiver)
-    (re.compile(r"\?\."), ".NSAFE."),
-    # Java-method-capable wrappers, not bare []/{}: scripts call
-    # .add/.put/.size on these.  Constructors accept an optional source
-    # collection/capacity argument (`new ArrayList(other)`).
-    (re.compile(r"\bnew\s+(?:ArrayList|LinkedList|ArrayDeque|Stack|Vector)"
-                r"\s*\("), "_jlist_new("),
-    (re.compile(r"\bnew\s+(?:HashMap|LinkedHashMap)\s*\("), "_jmap_new("),
-    (re.compile(r"\bnew\s+TreeMap\s*\("), "_jtreemap_new("),
-    (re.compile(r"\bnew\s+(?:HashSet|LinkedHashSet)\s*\("), "_jset_new("),
-    (re.compile(r"\bnew\s+TreeSet\s*\("), "_jtreeset_new("),
-    (re.compile(r"\bnew\s+StringBuilder\s*\("), "_jsb("),
-    (re.compile(r"\bnew\s+StringJoiner\s*\("), "_jsj("),
-    (re.compile(r"\bnew\s+String\s*\("), "_jstrnew("),
-    # `throw new SomeException(msg)` -> raise of a catchable _JThrown
-    # carrying the Java type name (typed catch blocks filter on it)
-    (re.compile(r"\bnew\s+(\w*(?:Exception|Error))\s*\(\s*\)"),
-     r"_jexc_new('\1')"),
-    (re.compile(r"\bnew\s+(\w*(?:Exception|Error))\s*\("), r"_jexc_new('\1', "),
-    (re.compile(r"\bthrow\b"), "raise"),
-    # unsigned right shift: reflected-operator trick (a >>> b is not
-    # Python); _USHR.__rrshift__ captures the left operand
-    (re.compile(r">>>"), " >> _USHR >> "),
-    # Java numeric-literal suffixes: 0L, 1.5f, 2.0d -> plain literals
-    (re.compile(r"\b(\d+)[Ll]\b"), r"\1"),
-    (re.compile(r"\b(\d+\.\d+)[FfDd]\b"), r"\1"),
-]
-# a local declaration's leading type: the known primitives/def/var plus ANY
-# Capitalized type name (painless allows arbitrary allowlisted classes —
-# StringBuilder, ZonedDateTime, Set, DateTimeFormatter ...), optionally
-# generic (`Map<String, Object>`), dotted (`Map.Entry`) or array (`int[]`).
-# The lookahead requires `ident =` or a bare trailing ident so expression
-# statements like `Objects.equals(a, b)` are never mistaken for decls.
-_DECL = re.compile(
-    r"^(?:def|var|int|long|short|byte|double|float|boolean|char|"
-    r"[A-Z]\w*(?:\.\w+)?)(?:\s*<[^<>;=]*(?:<[^<>;=]*>)?[^<>;=]*>)?"
-    r"(?:\s*\[\s*\])?\s+(?=[A-Za-z_]\w*\s*(?:=(?!=)|$))")
-_INCR = re.compile(r"^(?P<t>.+?)\+\+$")
-_DECR = re.compile(r"^(?P<t>.+?)--$")
-_TERN = re.compile(r"^(?P<c>[^?]+)\?(?P<a>[^:?]+):(?P<b>.+)$")
-_WHILE_CAP = 100_000
-
-
-# Java cast `(Type) expr`: rewritten to `_CAST_Type @ expr`.  `@` binds
-# tighter than every binary operator except unary minus and `**` — the
-# same precedence Java gives a cast — and the postfix chain after the
-# operand (calls, attribute access) binds tighter still, so
-# `(int) ctx.s.charAt(0) + 1` applies the cast to the charAt result and
-# then adds, exactly like Java.  Chained casts compose through
-# _CastOp.__matmul__.
-_CAST_RX = re.compile(
-    r"\(\s*(int|long|short|byte|float|double|boolean|char|String|"
-    r"CharSequence|Integer|Long|Short|Byte|Float|Double|Boolean|Character|"
-    r"Number|Object|def|List|ArrayList|Map|HashMap)\s*\)\s*(?=[\w(])")
-
-
-def _rewrite_casts(src: str) -> str:
-    return _CAST_RX.sub(lambda m: f"_CAST_{m.group(1)} @ ", src)
-
-
-_ARR_NEW_RX = re.compile(r"\bnew\s+(\w+)\s*\[")
-
-
-def _rewrite_array_news(src: str) -> str:
-    """``new T[n]`` -> default-filled JList; ``new T[] {a, b}`` /
-    ``new def[]{a, b}`` -> _jarr_lit(a, b) (varargs, so the brace
-    initializer needs no bracket-literal interplay)."""
-    out, i = [], 0
-    while True:
-        m = _ARR_NEW_RX.search(src, i)
-        if not m:
-            out.append(src[i:])
-            break
-        out.append(src[i:m.start()])
-        j, depth, n = m.end(), 1, len(src)
-        while j < n and depth:
-            depth += {"[": 1, "]": -1}.get(src[j], 0)
-            j += 1
-        inner = src[m.end():j - 1].strip()
-        if inner:                           # sized: new T[n]
-            out.append(f"_jarr_new('{m.group(1)}', {inner})")
-            i = j
-            continue
-        k = j
-        while k < n and src[k] in " \t\r\n":
-            k += 1
-        if k < n and src[k] == "{":         # initializer: new T[] {...}
-            depth, e = 1, k + 1
-            while e < n and depth:
-                depth += {"{": 1, "}": -1}.get(src[e], 0)
-                e += 1
-            out.append(f"_jarr_lit({src[k + 1:e - 1]})")
-            i = e
-        else:                               # bare new T[]
-            out.append("_jarr_lit()")
-            i = j
-    return "".join(out)
-
-
-def _rw_expr(e: str) -> str:
-    """Whole-expression ternary `c ? a : b` -> Python conditional, found
-    via a paren/bracket-aware scan (a call in the condition — e.g.
-    ``ctx.containsKey('x') ? .. : ..`` — must not defeat the rewrite).
-    Nested right-assoc ternaries in the else-arm recurse naturally."""
-    e = e.strip()
-    depth, qi = 0, -1
-    for i, ch in enumerate(e):
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        elif ch == "?" and depth == 0:
-            qi = i
-            break
-    if qi < 0:
-        if "?" not in e:
-            return e
-        # ternary buried inside parens/brackets (e.g. a lambda body):
-        # recurse into each top-level group
-        out, i = [], 0
-        while i < len(e):
-            ch = e[i]
-            if ch in "([":
-                closer = ")" if ch == "(" else "]"
-                depth, j = 1, i + 1
-                while j < len(e) and depth:
-                    if e[j] in "([":
-                        depth += 1
-                    elif e[j] in ")]":
-                        depth -= 1
-                    j += 1
-                out.append(ch + _rw_expr(e[i + 1:j - 1]) + closer)
-                i = j
-            else:
-                out.append(ch)
-                i += 1
-        return "".join(out)
-    depth, nest = 0, 0
-    for j in range(qi + 1, len(e)):
-        ch = e[j]
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        elif ch == "?" and depth == 0:
-            nest += 1
-        elif ch == ":" and depth == 0:
-            if nest == 0:
-                c, a, b = e[:qi], e[qi + 1:j], e[j + 1:]
-                return (f"({_rw_expr(a)}) if ({_rw_expr(c)}) "
-                        f"else ({_rw_expr(b)})")
-            nest -= 1
-    return e
-
-
-def _split_assign(stmt: str):
-    """First top-level '=' that isn't a comparison -> (lhs_with_op, rhs)."""
-    depth = 0
-    for i, ch in enumerate(stmt):
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        if ch == "=" and depth == 0:
-            prev = stmt[i - 1] if i else ""
-            nxt = stmt[i + 1] if i + 1 < len(stmt) else ""
-            if prev in "=!<>" or nxt == "=":
-                continue
-            op = prev if prev in "+-*/%" else ""
-            lhs = stmt[:i - len(op)].strip()
-            return f"{lhs} {op}=", stmt[i + 1:].strip()
-    return None, None
-
-
-def _stmt_py(stmt: str) -> str:
-    # a painless statement may span source lines (fluent chains); the
-    # transpiled Python statement must be ONE line (literals are
-    # placeholder-protected, so embedded newlines can't be content)
-    stmt = re.sub(r"\s*\n\s*", " ", stmt)
-    stripped = _DECL.sub("", stmt.strip())
-    if stripped != stmt.strip() and re.fullmatch(r"[A-Za-z_]\w*", stripped):
-        # declaration without initializer (`int i;`): bind to null so a
-        # later conditional assignment has a name to write
-        return f"{stripped} = None"
-    stmt = stripped
-    m = _INCR.match(stmt)
-    if m:
-        return f"{m.group('t').strip()} += 1"
-    m = _DECR.match(stmt)
-    if m:
-        return f"{m.group('t').strip()} -= 1"
-    m = re.match(r"^\+\+\s*(?P<t>[A-Za-z_]\w*)$", stmt)
-    if m:
-        return f"{m.group('t')} += 1"
-    m = re.match(r"^--\s*(?P<t>[A-Za-z_]\w*)$", stmt)
-    if m:
-        return f"{m.group('t')} -= 1"
-    lhs, rhs = _split_assign(stmt)
-    if lhs is not None:
-        return f"{lhs} {_rw_expr(rhs)}"
-    return _rw_expr(stmt)
-
-
-def _split_stmts(src: str):
-    """Split a brace-free chunk on top-level ';' (paren/bracket-aware)."""
-    out, depth, cur = [], 0, []
-    for ch in src:
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        if ch == ";" and depth == 0:
-            out.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    if "".join(cur).strip():
-        out.append("".join(cur))
-    return [s.strip() for s in out if s.strip()]
-
-
-_HDR = re.compile(r"^\s*(if|for|while|else\s+if|else|try|catch|do)\b\s*", re.S)
-# painless user-defined function header: `returnType name(typed params)`
-_FUNC_HDR = re.compile(
-    r"^\s*(?:def|void|int|long|short|byte|double|float|boolean|char|String|"
-    r"Object|List|Map|ArrayList|HashMap)\s+(?P<name>[A-Za-z_]\w*)\s*"
-    r"\((?P<params>[^)]*)\)\s*$", re.S)
-
-
-def _sub_block(body, indent, lines, counter):
-    """Transpile a nested block; an EMPTY painless block (`{ }`) must still
-    emit `pass` (the shared-lines recursion otherwise emits nothing and
-    the next statement lands unindented)."""
-    before = len(lines)
-    _transpile_block(body, indent, lines, counter)
-    if len(lines) == before:
-        lines.append("    " * indent + "pass")
-
-
-def _transpile_block(src: str, indent: int, lines: list[str],
-                     counter: list[int]) -> None:
-    pad = "    " * indent
-    i = 0
-    n = len(src)
-    while i < n:
-        while i < n and src[i] in " \t\r\n;":
-            i += 1
-        if i >= n:
-            break
-        m = _HDR.match(src[i:])
-        if m:
-            kw = re.sub(r"\s+", " ", m.group(1))
-            j = i + m.end()
-            cond = None
-            if kw in ("else", "try", "do"):
-                pass  # no (...) header
-            elif kw == "catch":
-                # catch (ExceptionType e): capture the variable name
-                if j >= n or src[j] != "(":
-                    raise UnsupportedScriptError(
-                        f"expected ( after catch: {src[i:i+40]!r}")
-                depth, k = 1, j + 1
-                while k < n and depth:
-                    depth += {"(": 1, ")": -1}.get(src[k], 0)
-                    k += 1
-                cond, j = src[j + 1:k - 1], k
-            elif kw != "else":
-                if j >= n or src[j] != "(":
-                    raise UnsupportedScriptError(
-                        f"expected ( after {kw!r}: {src[i:i+40]!r}")
-                depth, k = 1, j + 1
-                while k < n and depth:
-                    depth += {"(": 1, ")": -1}.get(src[k], 0)
-                    k += 1
-                cond, j = src[j + 1:k - 1], k
-            while j < n and src[j] in " \t\r\n":
-                j += 1
-            if j >= n or src[j] != "{":
-                raise UnsupportedScriptError(
-                    f"painless blocks must be braced: {src[i:i+40]!r}")
-            depth, k = 1, j + 1
-            while k < n and depth:
-                depth += {"{": 1, "}": -1}.get(src[k], 0)
-                k += 1
-            body = src[j + 1:k - 1]
-            if kw == "if":
-                lines.append(f"{pad}if {_rw_expr(cond)}:")
-                _sub_block(body, indent + 1, lines, counter)
-            elif kw == "else if":
-                lines.append(f"{pad}elif {_rw_expr(cond)}:")
-                _sub_block(body, indent + 1, lines, counter)
-            elif kw == "else":
-                lines.append(f"{pad}else:")
-                _sub_block(body, indent + 1, lines, counter)
-            elif kw == "try":
-                lines.append(f"{pad}try:")
-                _sub_block(body, indent + 1, lines, counter)
-            elif kw == "catch":
-                # painless `catch (Exception e)` -> `except Exception as e`
-                # (every painless exception type maps to Python Exception;
-                # the watchdog RuntimeError deliberately remains catchable,
-                # matching the reference where scripts can catch anything)
-                toks = cond.split() if cond else []
-                var = toks[-1] if toks else "_e"
-                etype = toks[0] if len(toks) > 1 else "Exception"
-                lines.append(f"{pad}except Exception as {var}:")
-                if etype not in ("Exception", "Throwable", "Error"):
-                    # Java catch is TYPED: a catch(NumberFormatException e)
-                    # must not swallow an IndexOutOfBounds — re-raise
-                    # non-matching exceptions so an outer handler (or the
-                    # row failure channel) sees them
-                    lines.append(f"{pad}    if not _exc_is({var}, "
-                                 f"'{etype}'): raise")
-                lines.append(f"{pad}    {var} = _jexc({var})")
-                _sub_block(body, indent + 1, lines, counter)
-            elif kw == "do":
-                # do { body } while (cond); -> while True: body; if not cond: break
-                m2 = re.match(r"\s*while\s*\(", src[k:])
-                if not m2:
-                    raise UnsupportedScriptError(
-                        f"do-block needs a trailing while(...): {src[k:k+40]!r}")
-                j2 = k + m2.end()
-                depth2, k2 = 1, j2
-                while k2 < n and depth2:
-                    depth2 += {"(": 1, ")": -1}.get(src[k2], 0)
-                    k2 += 1
-                cond2 = src[j2:k2 - 1]
-                cap = f"__wcap{counter[0]}"
-                first = f"__dwfirst{counter[0]}"
-                counter[0] += 1
-                # `while first or cond:` (not `while True: ...; if not
-                # cond: break`) so a `continue` in the body re-evaluates
-                # the condition like Java does, instead of looping
-                # unconditionally into the watchdog.
-                lines.append(f"{pad}{cap} = 0")
-                lines.append(f"{pad}{first} = True")
-                lines.append(f"{pad}while {first} or ({_rw_expr(cond2)}):")
-                lines.append(f"{pad}    {first} = False")
-                lines.append(f"{pad}    {cap} += 1")
-                lines.append(f"{pad}    if {cap} > {_WHILE_CAP}: "
-                             f"raise RuntimeError('script do-while "
-                             f"exceeded {_WHILE_CAP} iterations (watchdog)')")
-                _transpile_block(body, indent + 1, lines, counter)
-                k = k2
-            elif kw == "while":
-                cap = f"__wcap{counter[0]}"
-                counter[0] += 1
-                lines.append(f"{pad}{cap} = 0")
-                lines.append(f"{pad}while {_rw_expr(cond)}:")
-                lines.append(f"{pad}    {cap} += 1")
-                lines.append(f"{pad}    if {cap} > {_WHILE_CAP}: "
-                             f"raise RuntimeError('script while-loop "
-                             f"exceeded {_WHILE_CAP} iterations (watchdog)')")
-                _transpile_block(body, indent + 1, lines, counter)
-            else:  # for
-                parts = _split_stmts(cond)
-                if len(parts) == 3:  # C-style: init; test; step
-                    lines.append(f"{pad}{_stmt_py(parts[0])}")
-                    cap = f"__wcap{counter[0]}"
-                    counter[0] += 1
-                    lines.append(f"{pad}{cap} = 0")
-                    lines.append(f"{pad}while {_rw_expr(parts[1])}:")
-                    lines.append(f"{pad}    {cap} += 1")
-                    lines.append(f"{pad}    if {cap} > {_WHILE_CAP}: "
-                                 f"raise RuntimeError('script for-loop "
-                                 f"exceeded {_WHILE_CAP} iterations "
-                                 f"(watchdog)')")
-                    _transpile_block(body, indent + 1, lines, counter)
-                    lines.append(f"{pad}    {_stmt_py(parts[2])}")
-                elif len(parts) == 1 and (
-                        ":" in parts[0]
-                        or re.search(r"\bin\b", parts[0])):  # for-each
-                    # painless has BOTH for-each forms: `for (def x : it)`
-                    # and `for (x in it)` (Groovy-style)
-                    if ":" in parts[0]:
-                        var, _, it = parts[0].partition(":")
-                    else:
-                        var, it = re.split(r"\bin\b", parts[0], maxsplit=1)
-                    var = _DECL.sub("", var.strip())
-                    lines.append(f"{pad}for {var} in ({_rw_expr(it)}):")
-                    _sub_block(body, indent + 1, lines, counter)
-                else:
-                    raise UnsupportedScriptError(
-                        f"unsupported for(...) header: {cond!r}")
-            i = k
-        else:
-            # plain statements until the next '{' at depth 0 or end
-            j = i
-            depth = 0
-            while j < n:
-                ch = src[j]
-                if ch in "([":
-                    depth += 1
-                elif ch in ")]":
-                    depth -= 1
-                elif ch == "{" and depth == 0:
-                    break
-                j += 1
-            # back off to the start of the header statement if a block
-            # follows; header keywords are matched on the next loop turn
-            chunk = src[i:j]
-            if j < n:  # a '{' follows: split off the trailing header
-                hm = None
-                for hmatch in re.finditer(
-                        r"(?:^|;)\s*((?:if|for|while|else|try|catch|do)\b.*)$", chunk,
-                        re.S):
-                    hm = hmatch
-                if hm is None:
-                    # user-defined FUNCTION?  painless: `type name(type a,
-                    # type b) { body }` — declared before statements
-                    fm = _FUNC_HDR.match(chunk[chunk.rfind(";") + 1:])
-                    if fm:
-                        head = chunk[:chunk.rfind(";") + 1]
-                        for s in _split_stmts(head):
-                            lines.append(pad + _stmt_py(s))
-                        params = ", ".join(
-                            p.strip().split()[-1]
-                            for p in fm.group("params").split(",")
-                            if p.strip())
-                        depth, k = 1, j + 1
-                        while k < n and depth:
-                            depth += {"{": 1, "}": -1}.get(src[k], 0)
-                            k += 1
-                        lines.append(f"{pad}def {fm.group('name')}({params}):")
-                        _sub_block(src[j + 1:k - 1], indent + 1, lines,
-                                   counter)
-                        i = k
-                        continue
-                    raise UnsupportedScriptError(
-                        f"unexpected '{{' after: {chunk[-40:]!r}")
-                head = chunk[:hm.start(1)]
-                for s in _split_stmts(head):
-                    lines.append(pad + _stmt_py(s))
-                i = i + hm.start(1)
-                continue
-            for s in _split_stmts(chunk):
-                lines.append(pad + _stmt_py(s))
-            i = j
-    if not lines:
-        lines.append(f"{pad}pass")
-
-
-def transpile(source: str) -> tuple[str, list[tuple[str, str]]]:
-    """Painless statements -> (Python source, regex literals).  Literals
-    are protected during the whole structural pass and restored at the
-    end; ``=~``/``==~`` regex literals become ``== _rx[mf]<N>`` reflected
-    comparisons (see _RxFind/_RxMatch); map/list literals become
-    _jmap/_jlist-wrapped Python literals."""
-    src, lits = _protect_literals(source)
-    src, regexes = _protect_regexes(src)
-    for rx, rep in _TOKEN_REWRITES:
-        src = rx.sub(rep, src)
-    src = _rewrite_method_refs(src, wrap="_jfn")
-    src = _rewrite_lambdas(src)
-    src = _rewrite_casts(src)       # after lambdas: typed params are gone
-    src = _rewrite_array_news(src)  # before collection literals: `[]` in
-    #                                 `new T[]` must not read as a literal
-    src = _rewrite_elvis(src)
-    src = _rewrite_instanceof(src)
-    src = _rewrite_collection_literals(src, wrap=True)
-    lines: list[str] = []
-    _transpile_block(src, 0, lines, [0])
-    return _restore_literals("\n".join(lines), lits), regexes
-
-
-# --------------------------------------------------------------- validate --
-
-_OK_STMT = (ast.Module, ast.Assign, ast.AugAssign, ast.Expr, ast.If,
-            ast.For, ast.While, ast.Break, ast.Continue, ast.Pass,
-            ast.Raise, ast.Return, ast.FunctionDef,
-            ast.Try, ast.ExceptHandler)
-_OK_AUX = (ast.arguments, ast.arg)
-_OK_EXPR = (ast.BoolOp, ast.BinOp, ast.UnaryOp, ast.IfExp, ast.Compare,
-            ast.Call, ast.Attribute, ast.Subscript, ast.Name, ast.Constant,
-            ast.Lambda,
-            ast.List, ast.Dict, ast.Tuple, ast.Slice, ast.And, ast.Or,
-            ast.Not, ast.USub, ast.UAdd, ast.Load, ast.Store,
-            ast.expr_context, ast.operator, ast.cmpop, ast.unaryop,
-            ast.boolop, ast.keyword, ast.Starred)
-
-
-def validate(tree: ast.AST) -> None:
-    for node in ast.walk(tree):
-        if not isinstance(node, _OK_STMT + _OK_EXPR + _OK_AUX):
-            raise UnsupportedScriptError(
-                f"painless construct unsupported: {type(node).__name__}")
-        if isinstance(node, ast.Attribute) and node.attr.startswith("_"):
-            raise UnsupportedScriptError(f"attribute {node.attr!r} blocked")
-        if isinstance(node, ast.Name) and node.id.startswith("__") \
-                and not node.id.startswith(("__wcap", "__dwfirst")):
-            raise UnsupportedScriptError(f"name {node.id!r} blocked")
-        # the ?. lowering (_NullSafe, applied before validate) turns the
-        # attribute name into a string Constant argument of _nsget/_nscall
-        # — apply the same underscore block there, or a script could reach
-        # __class__/__mro__ and escape the interpreter sandbox (r5 ADVICE)
-        if (isinstance(node, ast.Call) and isinstance(node.func, ast.Name)
-                and node.func.id in ("_nsget", "_nscall")
-                and len(node.args) > 1
-                and isinstance(node.args[1], ast.Constant)
-                and str(node.args[1].value).startswith("_")):
-            raise UnsupportedScriptError(
-                f"attribute {node.args[1].value!r} blocked")
-
+from .painless_parse import UnsupportedScriptError, nullsafe_underscore, parse
 
 # Java Collection/Map methods that mutate the receiver IN PLACE.  A call
 # like ctx.tags.add('x') is a WRITE of ctx.tags even though no '=' appears
@@ -742,8 +211,11 @@ class JStr(str):
         return len(self)
 
     def splitOnToken(self, s, limit=0):  # noqa: N802
-        # limit > 0 caps the part count, the last part keeping the rest
-        # (java.lang.String.split limit semantics)
+        # ES StringFunctionUtils.splitOnToken: an empty or null token
+        # gives [receiver]; limit > 0 caps the part count, the last part
+        # keeping the rest
+        if not s:
+            return JList([self])
         if limit and limit > 0:
             return JList(JStr(x) for x in self.split(s, limit - 1))
         return JList(JStr(x) for x in self.split(s))
@@ -3898,38 +3370,6 @@ class _JStrLiterals(ast.NodeTransformer):
         return node
 
 
-class _NullSafe(ast.NodeTransformer):
-    """Lower the `.NSAFE.` marker the `?.` token rewrite left behind:
-    `a?.b` -> _nsget(a, 'b') (None receiver -> None), `a?.m(x)` ->
-    _nscall(a, 'm', x) (None receiver -> None, like Java's null-safe
-    dereference returning null without invoking)."""
-
-    def visit_Call(self, node):    # noqa: N802
-        f = node.func
-        if (isinstance(f, ast.Attribute)
-                and isinstance(f.value, ast.Attribute)
-                and f.value.attr == "NSAFE"):
-            return ast.Call(
-                func=ast.Name(id="_nscall", ctx=ast.Load()),
-                args=[self.visit(f.value.value),
-                      ast.Constant(value=f.attr),
-                      *[self.visit(a) for a in node.args]],
-                keywords=[])
-        self.generic_visit(node)
-        return node
-
-    def visit_Attribute(self, node):  # noqa: N802
-        if (isinstance(node.value, ast.Attribute)
-                and node.value.attr == "NSAFE"):
-            return ast.Call(
-                func=ast.Name(id="_nsget", ctx=ast.Load()),
-                args=[self.visit(node.value.value),
-                      ast.Constant(value=node.attr)],
-                keywords=[])
-        self.generic_visit(node)
-        return node
-
-
 # zero-arg Java value/conversion methods valid on ANY receiver (painless
 # autoboxes: `5.toString()`, `x.intValue()`); one-arg universal methods
 # (equals/compareTo).  Lowered to dispatch helpers because Python ints
@@ -3979,17 +3419,11 @@ class CompiledScript:
     def __init__(self, source: str, params: dict | None = None):
         self.source = source
         self.params = dict(params or {})
-        py, regexes = transpile(source)
-        try:
-            tree = ast.parse(py, mode="exec")
-        except SyntaxError as e:
-            raise UnsupportedScriptError(
-                f"cannot transpile painless: {e}: {py[:200]!r}") from e
-        tree = _NullSafe().visit(tree)  # before path collection: the
-        #                                 NSAFE marker must not leak into
-        #                                 ctx paths
-        validate(tree)
-        self.python_source = py
+        tree, regexes = parse(source)
+        for node in ast.walk(tree):
+            if nullsafe_underscore(node):   # _nsget is getattr: sandbox
+                raise UnsupportedScriptError(
+                    f"attribute {node.args[1].value!r} blocked")
         self.reads, self.writes = collect_ctx_paths(tree)
         # Painless string literals are Java Strings: '+' concatenates with
         # any operand ('count=' + 5 -> 'count=5').  Rewrite str constants to

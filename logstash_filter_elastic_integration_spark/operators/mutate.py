@@ -15,7 +15,7 @@ from pyspark.sql import types as T
 from ..plans.document import (DROPPED, NULLSET, SCALARSET, TERMINATED, Step,
                               fcol, field_type, guarded, present_expr,
                               resolve_field, resolver_for)
-from ..functions.painless import UnsupportedScriptError, compile_script
+from ..functions.painless import UnsupportedScriptError, lower_script
 from .common import str_targets, template_column
 
 
@@ -555,8 +555,8 @@ def _zero_of(dt):
 
 
 def _script_interpreted(df, spec, ctx, active):
-    """Arrow-batched interpreter path for scripts beyond the Column
-    compiler (loops, locals, compound updates) — see painless_exec.
+    """Arrow-batched interpreter path for scripts the Column lowering
+    rejects (loops, locals, compound updates) — see painless_exec.
     Scripts execute per ROW (the reference's own model); everything
     around them stays vectorized, and a row-level exception fails that
     row through the standard failure channel."""
@@ -705,16 +705,17 @@ def _script_interpreted(df, spec, ctx, active):
 def p_script(df, spec, ctx):
     """Painless script processor
     (spec/integration/elastic_integration_spec.rb:754-809; caveat
-    docs/index.asciidoc:192).  Two physical engines:
+    docs/index.asciidoc:192).  The source parses through one front end
+    (functions/painless_parse.py) and runs on one of two back ends:
 
-    - Column compiler (functions/painless.py): straight-line assignments
-      and if/else blocks lower to pure Catalyst expressions — JVM-side,
-      whole-stage codegen, the fast path;
-    - statement interpreter (functions/painless_exec.py): loops, local
-      variables, compound updates run per row in an Arrow-batched UDF
-      with an iteration watchdog — the reference's own per-event script
-      execution model.
-    Scripts neither engine accepts fail at compile (fail-loud parity)."""
+    - Column lowering (functions/painless.py): assignments, if/else and
+      ternaries at any depth lower to pure Catalyst expressions —
+      JVM-side, whole-stage codegen, the fast path;
+    - per-row interpreter (functions/painless_exec.py): every script the
+      lowering rejects (loops, local variables, compound updates) runs
+      per row in an Arrow-batched UDF with an iteration watchdog — the
+      reference's own per-event script execution model.
+    A script the front end rejects fails at compile (fail-loud parity)."""
     cfg = spec.config
     active = ctx.active(df, spec)
     if "id" in cfg and "source" not in cfg:
@@ -728,7 +729,7 @@ def p_script(df, spec, ctx):
         cfg = dict(cfg, source=stored[cfg["id"]])
         spec = replace(spec, config=cfg)
     try:
-        assignments = compile_script(
+        assignments = lower_script(
             cfg.get("source", ""), resolver_for(df), cfg.get("params"))
     except UnsupportedScriptError:
         try:
@@ -737,11 +738,13 @@ def p_script(df, spec, ctx):
             return ctx.fail(df, active, spec,
                             f"unsupported painless script: {e}")
     st = Step(df)
-    for path, col in assignments:
+    for path, col, present in assignments:
         st.guarded(active, {path: col})
         # any ctx write puts the key into the document map: a null result
-        # is PRESENT-null (ES parity), tracked in the __nullset registry
+        # is PRESENT-null (ES parity), tracked in the __nullset registry;
+        # rows an untaken ``if`` branch left alone keep their presence
         if not path.startswith("_"):
-            st.nullset_update(path, added=active & st.col(path).isNull(),
-                              cleared=active & st.col(path).isNotNull())
+            live = active & present
+            st.nullset_update(path, added=live & st.col(path).isNull(),
+                              cleared=live & st.col(path).isNotNull())
     return st.done()

@@ -557,9 +557,9 @@ FROM documents
 
 
 def q_pipe_script_loop(spark, sf_dir):
-    """Script beyond the Column compiler — loops + locals + method calls —
-    exercising the per-row Painless INTERPRETER engine (transpile ->
-    validated AST -> Arrow-batched execution with an iteration watchdog).
+    """Script beyond the Column lowering — loops + locals + method calls —
+    exercising the per-row Painless INTERPRETER back end (validated AST ->
+    Arrow-batched execution with an iteration watchdog).
     Computes a word-length histogram facet and a checksum over the text."""
     doc = load(spark, sf_dir, "documents")
     out = _pipe(spark, doc, [

@@ -1,9 +1,10 @@
-"""Differential testing: every straight-line painless script that the
-COLUMN engine accepts must produce the same values as the statement
+"""Differential testing: every painless script that the COLUMN
+lowering accepts must produce the same values as the per-row
 INTERPRETER.  The reference has one engine (the bundled painless
-script service) so it cannot diverge from itself; this repo has two, so
-cross-engine agreement is a correctness property worth pinning over a
-generated expression corpus — one Spark job evaluates the whole matrix.
+script service) so it cannot diverge from itself; this repo has two
+back ends behind one front end, so cross-engine agreement is a
+correctness property worth pinning over a generated expression corpus —
+one Spark job evaluates the whole matrix.
 """
 
 import math
@@ -25,6 +26,30 @@ DOC = {"i": 7, "j": -3, "d": 2.5, "s": "Hello World", "t": "abc",
 SCHEMA = ("i long, j long, d double, s string, t string, b boolean, "
           "z long, neg double, arr array<long>, sarr array<string>, "
           "csv string, iso string, sz string, url string, big long")
+
+# nested control flow: the one front end parses these, and the Column
+# lowering takes them at any depth
+NESTED = [
+    "ctx.r = ctx.b ? (ctx.i > 5 ? 'x' : 'y') : 'z';",
+    "ctx.r = ctx.i > 100 ? 'big' : ctx.i > 5 ? 'mid' : 'small';",
+    "if (ctx.b) { ctx.r = ctx.i > 5 ? 'x' : 'y'; }",
+    "if (ctx.i > 10) { ctx.r = 'a'; } else if (ctx.i > 5) { ctx.r = 'b'; } "
+    "else { ctx.r = 'c'; }",
+    "if (ctx.b) { if (ctx.j > 0) { ctx.r = 'in'; } else { ctx.r2 = 'no'; } "
+    "ctx.r3 = ctx.r2 + '!'; }",
+    "ctx.r = ctx.i; if (ctx.r > 0) { ctx.r = ctx.r + 1; } ctx.r2 = ctx.r * 10;",
+    "if (ctx.z > 0) { ctx.r = 1; } ctx.r2 = ctx.containsKey('r');",
+]
+# ES StringFunctionUtils.splitOnToken: literal token, trailing empties
+# kept, an empty token or receiver gives [receiver]
+SPLITS = [
+    "ctx.r = ctx.t.splitOnToken('');",
+    "ctx.r = ''.splitOnToken(',');",
+    "ctx.r = ',x,,y,'.splitOnToken(',');",
+    "ctx.r = 'a--b----c'.splitOnToken('--');",
+    "ctx.r = ctx.csv.splitOnToken(',', 2);",
+    "ctx.r = ctx.csv.splitOnToken(',', 1);",
+]
 
 # operand pool: every expression references only DOC fields + literals
 CORPUS = [
@@ -131,7 +156,7 @@ CORPUS = [
     "ctx.r = ctx.j / 2;",
     # stream sum terminal
     "ctx.r = ctx.arr.stream().mapToInt(x -> x).sum();",
-]
+] + NESTED + SPLITS
 
 
 def _num(v):
@@ -164,13 +189,20 @@ def diff_results(spark):
     return column_ok, row, expected
 
 
-def test_column_engine_accepts_most_of_the_corpus(diff_results):
+def test_column_engine_accepts_most_of_the_corpus(
+        diff_results, arith_results, string_results, bool_results):
     column_ok, _, _ = diff_results
-    # the corpus is straight-line by construction; the Column engine
-    # should take nearly all of it (a falling-back corpus would make
-    # this differential test vacuous)
-    assert len(column_ok) >= len(CORPUS) * 8 // 10, (
-        f"Column engine only accepted {len(column_ok)}/{len(CORPUS)}")
+    # pinned at the measured acceptance: a front end that silently sends
+    # scripts to the interpreter fails here (and a falling-back corpus
+    # would make the differential vacuous).  Only the array subscript
+    # read is interpreter-only; every NESTED and SPLITS case lowers.
+    rejected = [src for idx, src in enumerate(CORPUS) if idx not in column_ok]
+    assert rejected == ["ctx.r = ctx.arr[0] + ctx.arr[2];"]
+    # one assignment per generated script: every one lowered
+    for (_, expected), corpus in ((arith_results, _gen_arith_corpus()),
+                                  (string_results, _gen_string_corpus()),
+                                  (bool_results, _gen_bool_corpus())):
+        assert len(expected) == len(corpus)
 
 
 def _gen_arith_corpus():

@@ -610,3 +610,13 @@ def test_nested_object_keyset_ships_prefix_columns(spark, registry):
     assert (out[0]["tags"] or []) == []
     assert out[0]["nkeys"] == 2
     assert out[0]["names"] == "[x, y]"
+
+
+def test_ctx_metadata_attribute_reads_and_writes():
+    """`ctx._index` is the map key `_index`, as in the bracket form; the
+    underscore block still holds off ctx (`ctx?._row` above) and on
+    dunders."""
+    cs = CompiledScript("ctx._index = 'logs-x'; ctx.a = ctx._id + '!';")
+    assert cs.run_row({"_id": "7"}) == {"_index": "logs-x", "a": "7!"}
+    with pytest.raises(UnsupportedScriptError):
+        CompiledScript("ctx.a = ctx.__class__;")

@@ -154,6 +154,32 @@ def test_flagship_plan_is_python_free(spark, tmp_path):
     assert "ArrowEvalPython" not in plan
 
 
+def test_integration_mix_plan_has_one_python_node(spark):
+    """The facade over examples/pipelines: the token-count loop in
+    logs-web.json is the only script the Column lowering rejects, so the
+    plan's single ArrowEvalPython node is that script's UDF; every `if`
+    condition and user_agent stay on the JVM."""
+    import os
+    from logstash_filter_elastic_integration_spark.engine import (
+        SparkIngestFilter)
+    from logstash_filter_elastic_integration_spark.sources.datagen import (
+        tool_dim)
+    pipelines = os.path.join(os.path.dirname(__file__), "..", "examples",
+                             "pipelines")
+    frame = (transcripts(spark, 200)
+             .withColumn("ua", F.lit("curl/8.4.0"))
+             .withColumn("data_stream.type", F.lit("logs"))
+             .withColumn("data_stream.dataset", F.lit("web.access"))
+             .withColumn("data_stream.namespace", F.lit("default")))
+    out = SparkIngestFilter(
+        pipelines=pipelines, dims={"tool_dim": tool_dim(spark)},
+        routing={"logs-web.access-default": "logs-web",
+                 "logs-web.tools-*": "logs-tools"}).filter(frame)
+    plan = _executed_plan(out)
+    assert plan.count("ArrowEvalPython") == 1
+    assert "token_count" in plan
+
+
 def test_registered_domain_plan_broadcast_only(spark):
     """The PSL rule joins must all be broadcast hash joins: no exchange on
     the fact side regardless of rule-set size."""

@@ -174,6 +174,80 @@ def test_painless_if_block(spark, registry):
     assert by_n[5]["cls"] == "small" and by_n[5]["flag"] is None
 
 
+def test_nested_ternary_condition_routes_rows(spark):
+    """A processor `if` has no interpreter fallback: a nested ternary in
+    it must lower to one Column condition, and Router.execute reroutes
+    exactly the rows it selects."""
+    from pyspark.sql import functions as F
+
+    from logstash_filter_elastic_integration_spark.plans import (
+        PipelineRegistry)
+    from logstash_filter_elastic_integration_spark.router import Router
+    reg = PipelineRegistry()
+    reg.register("p", {"processors": [
+        {"reroute": {"dataset": "picked",
+                     "if": "(ctx.a ? (ctx.b ? 'x' : 'y') : 'z') == 'y'"}}]})
+    df = spark.createDataFrame(
+        [(1, True, True), (2, True, False), (3, False, False),
+         (4, False, True)], "id long, a boolean, b boolean") \
+        .withColumn("_index", F.lit("logs-a-default"))
+    out = Router(registry=reg, routing={"logs-a-default": "p"}).execute(df)
+    assert {r["id"]: r["_index"] for r in out.collect()} == {
+        1: "logs-a-default", 2: "logs-picked-default",
+        3: "logs-a-default", 4: "logs-a-default"}
+
+
+def test_script_if_keeps_untaken_rows_absent(spark, registry):
+    """A lowered `if` that did not assign a field leaves it absent on that
+    row: containsKey after the script is true only where a branch wrote
+    it, a null write included (present-null)."""
+    for src in ("if (ctx.id == 1) { ctx.x = 'w'; }",
+                "ctx.a = 1; if (ctx.id == 1) { ctx.x = null; }",
+                "if (ctx.id == 2) { ctx.y = 1; } "
+                "else if (ctx.id == 1) { if (ctx.a == null) { ctx.x = 'w'; } }"):
+        out = run_one(spark, registry, [
+            {"script": {"source": src}},
+            {"set": {"field": "hasx", "value": "Y",
+                     "if": "ctx.containsKey('x')"}},
+        ], [(1, "a"), (2, None)], "id long, other string")
+        assert {r["id"]: r["hasx"] for r in out} == {1: "Y", 2: None}, src
+
+
+def test_script_if_chain_past_node_budget_runs_per_row(spark, registry):
+    """Each lowered `if` inlines the field's prior value in both arms, so
+    20 sequential updates of one field would be a 2^20-node expression:
+    the lowering gives up early and the script runs per row instead."""
+    import time
+
+    import pytest
+
+    from logstash_filter_elastic_integration_spark.functions.painless import (
+        UnsupportedScriptError, compile_script)
+    from logstash_filter_elastic_integration_spark.plans.document import (
+        resolver_for)
+    src = "ctx.score = 0; " + " ".join(
+        f"if (ctx.id > {k}) {{ ctx.score = ctx.score + {k}; }}"
+        for k in range(20))
+    df = spark.createDataFrame([(3,)], "id long")
+    t0 = time.perf_counter()
+    with pytest.raises(UnsupportedScriptError):
+        compile_script(src, resolver_for(df))
+    assert time.perf_counter() - t0 < 5
+    out = run_one(spark, registry, [{"script": {"source": src}}],
+                  [(3,), (30,)], "id long")
+    assert {r["id"]: r["score"] for r in out} == {3: 3, 30: 190}
+
+
+def test_nullsafe_metadata_key_in_condition(spark, registry):
+    """`ctx?._tmp?.x` reads the map key `_tmp` in a processor `if`, like
+    `ctx._tmp?.x` does (an absent key is null)."""
+    out = run_one(spark, registry, [
+        {"set": {"field": "hit", "value": "Y",
+                 "if": "ctx?._tmp?.x == null && ctx?._temp_?.foo == null"}},
+    ], [(1,)], "id long")
+    assert out[0]["hit"] == "Y"
+
+
 def test_dissect_append_and_skip(spark, registry):
     out = run_one(
         spark, registry,
