@@ -789,15 +789,25 @@ class _Scope:
         if path in self.vals:
             self.root.read += self.sizes[path]
             return self.vals[path]
+        self._overlaps(path)
         return self.outer(path)
 
     def present(self, path: str) -> Column:
         if path in self.written:
             return self.written[path]
+        self._overlaps(path)
         present = getattr(self.outer, "present", None)
         if present is not None:
             return present(path)
         return self.outer(path)[0].isNotNull()
+
+    def _overlaps(self, path: str) -> None:
+        """A read inside a written value, or of a value holding a written
+        path, would bypass the write and go to the input frame."""
+        for w in self.vals:
+            if path.startswith(w + ".") or w.startswith(path + "."):
+                raise UnsupportedScriptError(
+                    f"ctx.{path} overlaps the written ctx.{w}")
 
 
 # An ``if`` inlines a path's prior value in both arms, so n sequential

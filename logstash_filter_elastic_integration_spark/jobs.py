@@ -3,7 +3,8 @@ Router over an input table (north rule: "resumable from per-partition
 checkpoints with lineage + per-stage throughput metrics").
 
 One call = one incremental run:
-  1. anti-join the checkpoint manifest -> only pending input files
+  1. list the input path on the driver, minus the checkpoint manifest's
+     completed files, and read only those pending files
   2. execute the compiled pipeline fixpoint (narrow, shuffle-free)
   3. ``Router.commit``: fan-out + per-sink aggregate of only these files
   4. mark the processed files done; write lineage JSON
@@ -22,7 +23,7 @@ from pyspark.sql import SparkSession, functions as F
 from .metrics import RunMetrics
 from .router import Router
 from .sources.catalog import Catalog
-from .sources.checkpoint import CheckpointManifest
+from .sources.checkpoint import CheckpointManifest, read_files
 
 
 def run_batch(spark: SparkSession, router: Router, input_path: str,
@@ -32,15 +33,13 @@ def run_batch(spark: SparkSession, router: Router, input_path: str,
     manifest = CheckpointManifest(run_dir)
     metrics = RunMetrics(run_dir)
 
-    full = spark.read.parquet(input_path)
-    pending_df = manifest.pending(full)
-    files = manifest.input_files(pending_df)
+    files = manifest.input_files(spark, input_path)
     if not files:
         return {"status": "up-to-date", "files": 0}
 
     # Tag every row with its source file's hash BEFORE any transform: the
     # manifest's unit of resumability, the input file, is the commit's run.
-    pending_df = pending_df.withColumn(
+    pending_df = read_files(spark, input_path, files).withColumn(
         "__run", F.substring(F.md5(F.input_file_name()), 1, 12))
     runs = [hashlib.md5(f.encode()).hexdigest()[:12] for f in files]
     executed = router.execute(pending_df if prepare_df is None

@@ -39,9 +39,10 @@ class Catalog:
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.save(self.path(table))
-        self._append_meta(table, {"mode": mode, "ts": time.time(),
-                                  "partition_by": partition_by or [],
-                                  **(meta or {})})
+        # commit-metadata sidecar (stand-in for Iceberg snapshot summary)
+        append_jsonl(os.path.join(self.path(table), "_meta.jsonl"),
+                     [{"mode": mode, "ts": time.time(),
+                       "partition_by": partition_by or [], **(meta or {})}])
 
     def overwrite_runs(self, df: DataFrame, table: str, runs,
                        partition_by: list[str]) -> None:
@@ -55,8 +56,9 @@ class Catalog:
         self.write(df, table, mode="append", partition_by=partition_by,
                    meta={"runs": list(runs)})
 
-    def _append_meta(self, table: str, entry: dict) -> None:
-        """Commit-metadata sidecar (stand-in for Iceberg snapshot summary),
-        one JSON line per write: a long-lived writer never re-reads it."""
-        with open(os.path.join(self.path(table), "_meta.jsonl"), "a") as f:
-            f.write(json.dumps(entry) + "\n")
+
+def append_jsonl(path: str, entries: list[dict]) -> None:
+    """Append one JSON line per entry: a long-lived writer never re-reads
+    the log (the commit sidecar, the checkpoint manifest)."""
+    with open(path, "a") as f:
+        f.write("".join(json.dumps(e) + "\n" for e in entries))

@@ -17,6 +17,7 @@ from logstash_filter_elastic_integration_spark.functions.painless_exec import (
     CompiledScript)
 from logstash_filter_elastic_integration_spark.plans.document import (
     resolver_for)
+from tests.conftest import run_one
 
 DOC = {"i": 7, "j": -3, "d": 2.5, "s": "Hello World", "t": "abc",
        "b": True, "z": 0, "neg": -9.5, "arr": [4, 1, 3],
@@ -374,3 +375,28 @@ def test_engines_agree_on_every_value(diff_results):
         if not same:
             errors.append(f"{key}: column={got!r} interpreter={want!r}")
     assert not errors, "\n".join(errors)
+
+
+# a read that overlaps an earlier write of the same script: a sub-path of
+# a written value, or a value holding a written sub-path
+OVERLAPS = [
+    "ctx.t = ['x': 2]; ctx.y = ctx.t.x;",
+    "ctx.t = ['x': 2]; ctx.y = ctx.t['x'];",
+    "ctx.t.x = 1; ctx.y = ctx.t;",
+    "ctx.t.x = 1; ctx.y = ctx.containsKey('t');",
+]
+
+
+@pytest.mark.parametrize("src", OVERLAPS)
+def test_read_overlapping_a_write_agrees_with_interpreter(
+        spark, registry, src):
+    """A ``script`` processor over a frame with only ``id`` gives the rows
+    the interpreter gives (forced by a leading no-op loop): the Column
+    path must not send such a read to the input frame."""
+    def run(source):
+        rows = run_one(spark, registry, [{"script": {"source": source}}],
+                       [(1,)], "id long")
+        return [{k: v for k, v in r.items()
+                 if k != "@metadata._ingest_document"} for r in rows]
+
+    assert run(src) == run("for (int i = 0; i < 0; i++) {} " + src)

@@ -15,7 +15,7 @@ from logstash_filter_elastic_integration_spark.flagship import (
 from logstash_filter_elastic_integration_spark.sources.datagen import transcripts
 from logstash_filter_elastic_integration_spark.sources.catalog import Catalog
 from logstash_filter_elastic_integration_spark.sources.checkpoint import (
-    CheckpointManifest)
+    CheckpointManifest, read_files)
 
 N = 4000
 
@@ -112,18 +112,21 @@ def test_fanout_write_and_counts_table(spark, executed, tmp_path):
 def test_checkpoint_resume(spark, tmp_path):
     tdir = str(tmp_path / "t")
     transcripts(spark, 1000).repartition(4).write.parquet(tdir)
-    df = spark.read.parquet(tdir)
     ck = CheckpointManifest(str(tmp_path / "run1"))
-    files = ck.input_files(df)
+    files = ck.input_files(spark, tdir)
     assert len(files) == 4
+    # the listing spells files as input_file_name() does
+    df = spark.read.parquet(tdir)
+    assert files == sorted(r["f"] for r in df.select(
+        F.input_file_name().alias("f")).distinct().collect())
     # simulate a run that completed 2 of 4 files
     ck.mark_done(files[:2])
-    pending = ck.pending(spark.read.parquet(tdir))
-    done_rows = df.withColumn("f", F.input_file_name()) \
-                  .filter(F.col("f").isin(files[:2])).count()
-    assert pending.count() == 1000 - done_rows
+    pending = ck.input_files(spark, tdir)
+    assert pending == files[2:]
+    done_rows = df.filter(F.input_file_name().isin(files[:2])).count()
+    assert read_files(spark, tdir, pending).count() == 1000 - done_rows
     ck.mark_done(files[2:])
-    assert ck.pending(spark.read.parquet(tdir)).count() == 0
+    assert ck.input_files(spark, tdir) == []
 
 
 def test_lineage_metrics(spark, tmp_path, executed):

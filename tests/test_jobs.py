@@ -1,12 +1,14 @@
 """Resumable batch runner: first run processes everything, second is a
 no-op, and a partially-completed manifest resumes only pending files.
 Each input file is a run that ``Router.commit`` replaces whole, and an
-incremental run aggregates only its own rows."""
+incremental run aggregates only its own rows.  A run's cost does not grow
+with the files completed before it."""
 
 import glob
 import hashlib
 import json
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -14,10 +16,12 @@ from pyspark.sql import functions as F
 from logstash_filter_elastic_integration_spark.flagship import (
     build_router, with_datastream)
 from logstash_filter_elastic_integration_spark.jobs import run_batch
+from logstash_filter_elastic_integration_spark.router import Router
 from logstash_filter_elastic_integration_spark.sources.catalog import Catalog
 from logstash_filter_elastic_integration_spark.sources.checkpoint import (
     CheckpointManifest)
 from logstash_filter_elastic_integration_spark.sources.datagen import transcripts
+from tests.test_compile_jobs import _jobs
 
 
 def test_run_batch_and_resume(spark, tmp_path):
@@ -36,8 +40,10 @@ def test_run_batch_and_resume(spark, tmp_path):
 
     # simulate a partial run: forget two files, resume processes only them
     m = CheckpointManifest(run)
-    entries = json.load(open(m.path))
-    json.dump(entries[:2], open(m.path, "w"))
+    with open(m.path) as f:
+        lines = f.readlines()
+    with open(m.path, "w") as f:
+        f.writelines(lines[:2])
     r3 = run_batch(spark, router, src, wh, str(tmp_path / "run"),
                    prepare_df=with_datastream)
     assert r3["status"] == "ok" and r3["files"] == 2
@@ -191,3 +197,78 @@ def test_commit_sidecar_appends_one_line_per_write(spark, tmp_path):
         assert len(entries) == 3
         assert all(e["mode"] == "append" and len(e["runs"]) == 1
                    for e in entries)
+
+
+def _run_dirs(wh, table):
+    return sorted(os.path.basename(p).removeprefix("__run=")
+                  for p in glob.glob(os.path.join(wh, table, "__run=*")))
+
+
+def test_incremental_run_cost_does_not_grow_with_history(
+        spark, tmp_path, monkeypatch):
+    """k = 1..20 one-file arrivals.  At every k a run takes at most 4 Spark
+    jobs (the pending file's footer-schema read and the commit), an
+    immediate re-run is up-to-date with none, the frame handed to
+    ``Router.execute`` has one analyzed plan size (expression ids aside),
+    and the manifest only grows by appends."""
+    src = str(tmp_path / "in")
+    router = build_router(spark)
+    wh, run = str(tmp_path / "wh"), str(tmp_path / "run")
+    plans = []
+    execute = Router.execute
+
+    def spy(self, df):
+        plan = df._jdf.queryExecution().analyzed().toString()
+        plans.append(len(re.sub(r"#\d+", "#", plan)))
+        return execute(self, df)
+
+    monkeypatch.setattr(Router, "execute", spy)
+
+    def batch():
+        return run_batch(spark, router, src, wh, run,
+                         prepare_df=with_datastream)
+
+    manifest, before = CheckpointManifest(run).path, b""
+    for k in range(1, 21):
+        transcripts(spark, 400).coalesce(1).write.mode("append").parquet(src)
+        r, jobs = _jobs(spark, batch)
+        assert r["status"] == "ok" and r["files"] == 1, k
+        assert len(jobs) <= 4, (k, jobs)
+        r, jobs = _jobs(spark, batch)
+        assert r["status"] == "up-to-date" and jobs == [], k
+        with open(manifest, "rb") as f:
+            after = f.read()
+        assert len(after) > len(before) and after.startswith(before), k
+        before = after
+    assert len(plans) == 20 and plans[1] == plans[19], plans
+
+
+def test_run_batch_reads_odd_file_names(spark, tmp_path):
+    """Files under a ``k=v x`` partition directory whose names hold a space,
+    ``%``, ``=`` and ``[`` are all processed and keep their partition
+    column; their runs are the manifest entries' md5 prefixes, and a
+    second run is up-to-date."""
+    src = tmp_path / "in"
+    part = src / "k=v x"
+    part.mkdir(parents=True)
+    for i, name in enumerate(["a b.parquet", "p%41.parquet", "x=y.parquet",
+                              "br[1].parquet"]):
+        out = str(tmp_path / f"w{i}")
+        transcripts(spark, 150).withColumn(
+            "conv_id", F.concat(F.lit(f"f{i}-"), "conv_id")) \
+            .coalesce(1).write.parquet(out)
+        os.rename(glob.glob(out + "/part-*.parquet")[0], str(part / name))
+    router = build_router(spark)
+    wh, run = str(tmp_path / "wh"), str(tmp_path / "run")
+
+    r = run_batch(spark, router, str(src), wh, run, prepare_df=with_datastream)
+    assert r["status"] == "ok" and r["files"] == 4
+    sinks = spark.read.parquet(wh + "/sinks")
+    assert sinks.count() == 600
+    assert [row["k"] for row in sinks.select("k").distinct().collect()] \
+        == ["v x"]
+    done = CheckpointManifest(run).completed_files()
+    assert sorted(hashlib.md5(f.encode()).hexdigest()[:12] for f in done) \
+        == _run_dirs(wh, "sinks") == _run_dirs(wh, "sink_counts")
+    r = run_batch(spark, router, str(src), wh, run, prepare_df=with_datastream)
+    assert r["status"] == "up-to-date"
