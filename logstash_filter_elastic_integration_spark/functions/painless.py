@@ -801,13 +801,27 @@ class _Scope:
             return present(path)
         return self.outer(path)[0].isNotNull()
 
+    def holds(self, path: str) -> bool:
+        """Does ctx.``path`` hold a value: the script wrote it or a path
+        under it, else the frame has a column at or under it.  A resolver
+        that cannot tell says yes."""
+        if any(w == path or w.startswith(path + ".") for w in self.vals):
+            return True
+        outer = (getattr(self.outer, "holds", None)
+                 or getattr(self.outer, "exists", None))
+        return outer is None or outer(path)
+
     def _overlaps(self, path: str) -> None:
-        """A read inside a written value, or of a value holding a written
-        path, would bypass the write and go to the input frame."""
-        for w in self.vals:
-            if path.startswith(w + ".") or w.startswith(path + "."):
-                raise UnsupportedScriptError(
-                    f"ctx.{path} overlaps the written ctx.{w}")
+        """A read or write inside a written value, or of a value holding a
+        written path, would bypass the earlier write: a read goes to the
+        input frame, a write lands in a flat column beside the value."""
+        scope = self
+        while isinstance(scope, _Scope):
+            for w in scope.vals:
+                if path.startswith(w + ".") or w.startswith(path + "."):
+                    raise UnsupportedScriptError(
+                        f"ctx.{path} overlaps the written ctx.{w}")
+            scope = scope.outer
 
 
 # An ``if`` inlines a path's prior value in both arms, so n sequential
@@ -846,6 +860,12 @@ def _lower(stmts: list[ast.stmt], c: _Ctx,
                 raise UnsupportedScriptError(
                     f"assignment target must be a ctx field: "
                     f"{ast.unparse(s)!r}")
+            parent = path.rpartition(".")[0]
+            if parent and not scope.holds(parent):
+                # painless: ctx.t is null, so ctx.t.x = v fails the row
+                raise UnsupportedScriptError(
+                    f"ctx.{path} is written under a null ctx.{parent}")
+            scope._overlaps(path)
             val, size = _sized(s.value, c)
             _bind(scope, path, val, size, F.lit(True), out)
         elif isinstance(s, ast.If):

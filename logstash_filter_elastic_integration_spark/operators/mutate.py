@@ -524,6 +524,17 @@ _PY_TO_SPARK = [
 ]
 
 
+def _scalar_type(values):
+    """(ddl, converter) of the one _PY_TO_SPARK type all non-null
+    ``values`` share; string otherwise."""
+    found = {next((t for t in _PY_TO_SPARK if isinstance(v, t[0])), None)
+             for v in values if v is not None}
+    if len(found) == 1 and None not in found:
+        _, ddl, co = found.pop()
+        return ddl, co
+    return "string", lambda x: None if x is None else str(x)
+
+
 def _co_of(dt):
     """Python-side converter for an existing Spark column type."""
     if isinstance(dt, (T.LongType, T.IntegerType, T.ShortType, T.ByteType)):
@@ -607,14 +618,16 @@ def _script_interpreted(df, spec, ctx, active):
         if isinstance(v, (list, tuple)):
             out_types[w] = ("array<string>",
                             lambda x: [str(i) for i in x] if x is not None else None)
-            continue
-        for pytype, ddl, co in _PY_TO_SPARK:
-            if isinstance(v, pytype):
-                out_types[w] = (ddl, co)
-                break
+        elif isinstance(v, dict):
+            # a painless map: map<string, V> when every value has one
+            # scalar type (as the Column path types a map literal)
+            ddl, co = _scalar_type(v.values())
+            out_types[w] = (f"map<string,{ddl}>",
+                            lambda x, co=co: None if x is None else
+                            {str(k): None if i is None else co(i)
+                             for k, i in x.items()})
         else:
-            out_types[w] = ("string",
-                            lambda x: None if x is None else str(x))
+            out_types[w] = _scalar_type([v])
     writes = sorted(cs.writes)
     schema = T.StructType(
         [T.StructField(w, T._parse_datatype_string(out_types[w][0]))

@@ -1,7 +1,9 @@
 """Network / URL / hashing processors: bytes, urldecode, uri_parts,
 html_strip, user_agent, network_direction, registered_domain, community_id,
-fingerprint.  All pure JVM Column expressions — including community_id's
-packed-tuple SHA-1, built from hex-string assembly + unhex + sha1.
+fingerprint.  All are JVM Column expressions — including community_id's
+packed-tuple SHA-1, built from hex-string assembly + unhex + sha1 — except
+user_agent, which parses in one memoized pandas UDF (see p_user_agent),
+and fingerprint's MurmurHash3 digest, an Arrow-batched UDF.
 
 Reference contracts (spec/integration/elastic_integration_spec.rb):
 bytes :154-175, urldecode :960-981, uri_parts :932-958, html_strip :496-517,
@@ -11,14 +13,12 @@ user_agent :983-1006, network_direction :616-638, registered_domain
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import Column, functions as F
 from pyspark.sql import types as T
 
-from ..functions.lru import LRU
 from ..plans.document import Step, fcol, field_type, guarded, staging_name
 from .common import str_targets
+from .ua_bank import builtin_bank, default_regex_file, file_bank, parse_series
 
 # ---------------------------------------------------------------- bytes ----
 _BYTES_UNITS = {"b": 1, "kb": 1024, "mb": 1024**2, "gb": 1024**3,
@@ -122,135 +122,16 @@ def p_html_strip(df, spec, ctx):
 
 
 # ------------------------------------------------------------ user_agent ---
-# The UA bank is lowered to SQL TEXT (one F.expr per chain), not
-# Column-by-Column: building ~550 when() branches through py4j costs
-# tens of thousands of gateway round-trips (~7-9 s of plan-build wall
-# per query — measured); generating the CASE text in Python and parsing
-# it once is ~100 ms for the same tree.
-_UA_SRC = "`__ua_src`"
-
-
-def _sql_lit(s: str) -> str:
-    """Spark SQL single-quoted string literal (escape-sequence mode)."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
-def _sql_extract(rx: str, g: int) -> str:
-    return f"regexp_extract({_UA_SRC}, {_sql_lit(rx)}, {g})"
-
-
-def _sql_uap_tmpl(tmpl: str, rx: str) -> str:
-    """uap-core ``$N`` replacement template (the ua-parser ``Parse*``
-    replacement contract) as SQL."""
-    if "$" not in tmpl:
-        return _sql_lit(tmpl)
-    pieces = re.split(r"\$(\d)", tmpl)
-    parts = []
-    for i, piece in enumerate(pieces):
-        if i % 2 == 0:
-            if piece:
-                parts.append(_sql_lit(piece))
-        else:
-            parts.append(_sql_extract(rx, int(piece)))
-    if not parts:
-        return "''"
-    return parts[0] if len(parts) == 1 else f"concat({', '.join(parts)})"
-
-
-def _sql_uap_version(rx: str, vspecs, n_groups: int) -> str:
-    """v1..v4 = vN_replacement template else capture group N+1 (ua-parser
-    numbering: group 1 is the family slot), '.'-joined over present
-    parts; null when every part is empty."""
-    parts = []
-    for i, spec in enumerate(vspecs):
-        g = i + 2
-        if spec is not None:
-            parts.append(_sql_uap_tmpl(spec, rx))
-        elif n_groups >= g:
-            parts.append(_sql_extract(rx, g))
-    if not parts:
-        return "CAST(NULL AS STRING)"
-    joined = ", ".join(f"nullif({p}, '')" for p in parts)
-    return f"nullif(concat_ws('.', {joined}), '')"
-
-
-# Browser/OS/device regex bank re-expressed from the public ua-parser
-# core definitions (uap-core, public-domain data — the same dataset the
-# ES processor ships per docs/index.asciidoc:200).  Ordered: FIRST match
-# wins — see ua_bank.py for the ordering discipline (bots -> tools ->
-# consoles/TVs -> in-app -> engine forks -> generic engines).
-from .ua_bank import (UA_BROWSERS as _UA_BROWSERS,  # noqa: E402
-                      UA_DEVICES as _UA_DEVICES,
-                      UA_OS as _UA_OS,
-                      WINDOWS_NT_VERSIONS as _WINDOWS_NT_VERSIONS)
-
-
-# branches per CASE segment.  The user_agent projection runs as a
-# STANDALONE per-operator-codegen Project (see the barrier below), where
-# Spark's expression codegen splits each CASE's branches into their own
-# small methods and the remaining per-CASE caller block is ~seg call
-# sites — comfortably under the 8 KB JIT HugeMethodLimit.  Segments are
-# composed with coalesce() (a matched segment's struct is always
-# non-null), so the coalesce caller is small too, and a full ~1200-entry
-# uap-core bank stays fully compiled + JIT-able.  Sized empirically with
-# tools/ua_codegen_probe.py.
-_UA_SEG = 48
-
-
-# Whole-stage-fusion barrier: from_json is CodegenFallback, so the
-# Project carrying the regex chains is NOT inlined into the fused
-# processNext() (where the whole bank would land in one giant method);
-# it runs as a standalone Project whose expression codegen splits CASE
-# branches into small JIT-able methods.  The input is always null at
-# runtime (never parsed — zero cost) but not provably null to the
-# optimizer — the guard is length(src) < 0, which no rule folds (an
-# isnull(src) guard gets constant-folded away when the source column
-# is non-nullable, which would silently re-fuse the Project).
-_UA_BARRIER_SQL = (f"from_json(CASE WHEN length({_UA_SRC}) < 0 "
-                   f"THEN {_UA_SRC} END, '__cgf INT') IS NOT NULL")
-
-
-def _segmented_first_match(pairs, barrier=False, seg=_UA_SEG):
-    """Ordered FIRST-match-wins over ``pairs`` [(cond_sql, value_sql)] as
-    one SQL expression: ``coalesce(seg_case_0, seg_case_1, ...)``.
-
-    Why not one monolithic CASE: whole-stage codegen inlines every
-    operator under a Project into ONE processNext() method, so a
-    ~270-branch chain generated a 47 KB method — beyond janino for the
-    full uap-core bank (observed live failure) and far beyond the 8 KB
-    JIT limit, silently degrading the stage.  Split per ``seg`` branches
-    and evaluated outside whole-stage fusion, every generated method
-    stays small.  Rows that matched an earlier segment — or are gated
-    off — short-circuit later segments (coalesce stops at the first
-    non-null; each segment's branch 1 returns null when gated)."""
-    if not pairs:
-        return None
-    segs = []
-    for s in range(0, len(pairs), seg):
-        off = "(NOT `__ua_act`)"
-        if barrier and s == 0:
-            off = f"({off} OR ({_UA_BARRIER_SQL}))"
-        body = [f"CASE WHEN {off} THEN NULL"]
-        for cond, val in pairs[s:s + seg]:
-            body.append(f"WHEN {cond} THEN {val}")
-        body.append("END")
-        segs.append(" ".join(body))
-    if len(segs) == 1:
-        return F.expr(segs[0])
-    return F.expr("coalesce(" + ", ".join(segs) + ")")
-
-
-# compiled chain cache (r6): the three segmented CASE chains are pure
-# functions of the regex bank (builtin or regex_file) and reference only
-# the fixed __ua_act/__ua_src staging columns, so the unresolved Column
-# trees are reusable across every p_user_agent compile in the session.
-# Building them fresh cost ~0.3s of driver time per query build (py4j +
-# JVM-side parse of three multi-KB SQL expressions).  Keyed per Spark
-# application and bank; LRU-capped for long-lived drivers.
-_UA_CHAIN_CACHE = LRU(8)
+_UA_FIELDS = ("name", "version", "os_name", "os_version", "device",
+              "device_type")
 
 
 def p_user_agent(df, spec, ctx):
+    """One Arrow-batched pandas UDF per processor parses the UA through
+    the bank (ua_bank.Parser), memoized per Python worker by (bank, UA
+    string) like the reference's UserAgentCache: a batch pays one parse
+    per distinct string it has not seen.  The bank rides in the UDF
+    closure; its regexes compile once per worker."""
     cfg = spec.config
     f_name = cfg["field"]
     target = cfg.get("target_field", "user_agent")
@@ -262,230 +143,41 @@ def p_user_agent(df, spec, ctx):
         return df
     ua = fcol(f_name).cast("string")
 
-    def _prefix_literal(rx: str):
-        # longest plain-literal PREFIX of the regex (stops at the first
-        # metachar); used as a cheap contains() pre-filter so the regex
-        # engine only runs on candidate rows.  A char followed by a
-        # quantifier is optional -> dropped.
-        out = []
-        for i, c in enumerate(rx):
-            if c in "\\[(|.?*+{^$":
-                break
-            nxt = rx[i + 1] if i + 1 < len(rx) else ""
-            if nxt in "?*{":
-                break
-            out.append(c)
-        lit = "".join(out)
-        return lit if len(lit) >= 4 else None
-
-    def _hit(rx: str) -> str:
-        lit = _prefix_literal(rx)
-        h = f"{_UA_SRC} RLIKE {_sql_lit(rx)}"
-        if lit:
-            return f"(instr({_UA_SRC}, {_sql_lit(lit)}) > 0 AND {h})"
-        return f"({h})"
-
-    def _version_of(rx: str, start: int = 1) -> str:
-        # exact group count via Python re (the bank compiles identically
-        # under re and Java — see ua_bank.py)
-        n_groups = re.compile(rx).groups
-        if n_groups < start:
-            return "CAST(NULL AS STRING)"
-        parts = ", ".join(f"nullif({_sql_extract(rx, i)}, '')"
-                          for i in range(start, n_groups + 1))
-        return f"concat_ws('.', {parts})"
-
-    def _family_of(tmpl: str, rx: str) -> str:
-        # uap-core family_replacement: "$1" -> capture group 1
-        if "$1" not in tmpl:
-            return _sql_lit(tmpl)
-        pre, _, post = tmpl.partition("$1")
-        parts = []
-        if pre:
-            parts.append(_sql_lit(pre))
-        parts.append(_sql_extract(rx, 1))
-        if post:
-            parts.append(_sql_lit(post))
-        return (parts[0] if len(parts) == 1
-                else f"concat({', '.join(parts)})")
-
-    # gate + source columns shared by every segment (computed once; each
-    # segment's branch 1 short-circuits rows the processor won't touch)
-    gate_col = "__ua_act"
-    df = df.withColumns({
-        gate_col: F.coalesce(active & ua.isNotNull(), F.lit(False)),
-        "__ua_src": ua,
-    })
-
-    def _ns(n_sql: str, v_sql: str) -> str:
-        return f"named_struct('n', {n_sql}, 'v', {v_sql})"
-
     # ES's DEFAULT bank is the full uap-core dataset; resolve an explicit
     # regex_file first, else a wholesale default file if one is available
     # ($SPARK_GRAFT_UAP_REGEXES or bundled data/regexes.yaml), else the
     # curated builtin bank (see ua_bank.default_regex_file).
-    from .ua_bank import default_regex_file, load_uap_regexes_cached
     regex_file = cfg.get("regex_file") or default_regex_file()
-    cache_key = (df.sparkSession.sparkContext.applicationId,
-                 regex_file or "__builtin__")
-    cached = _UA_CHAIN_CACHE.get(cache_key)
-    if cached is not None:
-        pass  # chains unpacked below
-    elif regex_file:
-        # ES regex_file option (docs/index.asciidoc:173-200): a full
-        # uap-core regexes.yaml used WHOLESALE — exact ua-parser group
-        # numbering ($N templates; group 1 = family/os/device slot,
-        # versions from group 2).  Same segmented lowering as the
-        # builtin bank, so a full ~1200-entry bank stays fully compiled.
-        banks = load_uap_regexes_cached(regex_file)
-        b_pairs = []
-        for e in banks["browsers"]:
-            rx = e["regex"]
-            n_groups = re.compile(rx).groups
-            fam = (_sql_uap_tmpl(e["family"], rx) if e["family"] is not None
-                   else _sql_extract(rx, 1))
-            b_pairs.append((_hit(rx), _ns(
-                fam, _sql_uap_version(rx, e["v"], n_groups))))
-        o_pairs = []
-        for e in banks["os"]:
-            rx = e["regex"]
-            n_groups = re.compile(rx).groups
-            osn = (_sql_uap_tmpl(e["os"], rx) if e["os"] is not None
-                   else _sql_extract(rx, 1))
-            o_pairs.append((_hit(rx), _ns(
-                osn, _sql_uap_version(rx, e["v"], n_groups))))
-        d_pairs = []
-        for e in banks["devices"]:
-            rx = e["regex"]
-            dev = (f"trim({_sql_uap_tmpl(e['device'], rx)})"
-                   if e["device"] is not None
-                   else _sql_extract(rx, 1))
-            d_pairs.append((_hit(rx), f"named_struct('d', {dev})"))
-    else:
-        # FORWARD-ordered: first matching family wins AND short-circuits —
-        # a Chrome UA only executes regexes up to the Chrome rule
-        b_pairs = []
-        for bname, rx in _UA_BROWSERS:
-            b_pairs.append((_hit(rx), _ns(
-                _family_of(bname, rx),
-                _version_of(rx, start=2 if "$1" in bname else 1))))
+    bank = file_bank(regex_file) if regex_file else builtin_bank()
+    digest = bank.digest()
+    device_type = cfg.get("extract_device_type", False)
+    fields = _UA_FIELDS if device_type else _UA_FIELDS[:-1]
 
-        nt = f"regexp_extract({_UA_SRC}, 'Windows NT (\\\\d+\\\\.\\\\d+)', 1)"
-        win_ver = "CASE " + " ".join(
-            f"WHEN {nt} = {_sql_lit(kernel)} THEN {_sql_lit(marketing)}"
-            for kernel, marketing in _WINDOWS_NT_VERSIONS.items()
-        ) + f" ELSE nullif({nt}, '') END"
-        o_pairs = []
-        for oname, rx in _UA_OS:
-            o_pairs.append((_hit(rx), _ns(
-                _sql_lit(oname),
-                win_ver if oname == "Windows" else _version_of(rx))))
+    def parse(uas):
+        return parse_series(bank, digest, uas, len(fields))
 
-        d_pairs = [(_hit(drx),
-                    f"named_struct('d', {_family_of(dname, drx)})")
-                   for dname, drx in _UA_DEVICES]
-
-    if cached is None:
-        b_chain = _segmented_first_match(b_pairs, barrier=True)
-        o_chain = _segmented_first_match(o_pairs)
-        d_chain = _segmented_first_match(d_pairs)
-        # device-type classification is a pure function of the UA string
-        # too — computed with the chains (i.e. on the distinct-parse dim
-        # when enabled) instead of per fact row: its 4 rlike groups were
-        # the dominant per-row cost of the join-back stage (r6)
-        usrc = F.col("__ua_src")
-        t_chain = (
-            F.when(usrc.rlike(r"(?i)bot|spider|crawler|slurp|curl|wget|"
-                              r"python-requests|urllib|go-http-client|okhttp"),
-                   "Robot")
-            .when(usrc.rlike(r"iPad") | usrc.rlike(r"Android(?!.*Mobile)"),
-                  "Tablet")
-            .when(usrc.rlike(r"iPhone|Windows Phone")
-                  | usrc.rlike(r"Android.*Mobile"), "Phone")
-            .when(usrc.rlike(r"Smart-?TV|AppleTV|Apple TV|CrKey|Roku/DVP|"
-                             r"HbbTV|NetCast\.TV|Web0S.*?TV|BRAVIA|VIERA|"
-                             r"GoogleTV"), "Smart TV")
-            .otherwise("Desktop"))
-        _UA_CHAIN_CACHE[cache_key] = (b_chain, o_chain, d_chain, t_chain)
-    else:
-        b_chain, o_chain, d_chain, t_chain = cached
-    chains = {}
-    bcol = ocol = dcol = None
-    if cfg.get("extract_device_type", False):
-        chains["__uat"] = t_chain
-    if b_chain is not None:
-        chains["__uab"] = b_chain
-        bcol = "__uab"
-    if o_chain is not None:
-        chains["__uao"] = o_chain
-        ocol = "__uao"
-    if d_chain is not None:
-        chains["__uad"] = d_chain
-        dcol = "__uad"
-    if chains:
-        # a STREAMING DataFrame cannot host the distinct+join (no dedup
-        # aggregation mid-stream), and streaming.stream_pipeline compiles
-        # the chain onto the streaming frame — fall back to the per-row
-        # chain there (same values; pinned by the stream-versus-batch
-        # differential in tests/test_streaming.py)
-        if cfg.get("dedup_parse", True) and not df.isStreaming:
-            # DISTINCT-PARSE: run the ~350-regex bank once per DISTINCT
-            # UA value, not once per row, then equi-join the parsed dim
-            # back.  This is the Spark-first shape of the reference's
-            # UserAgentCache (ES UserAgentProcessor memoizes parses
-            # keyed by the UA string) and the plan you want at 100 TB:
-            # web-log UA cardinality is ~1e4-1e6 against 1e10+ rows, the
-            # distinct is a partial+final hash agg (map-side dedup ships
-            # only per-partition-distinct strings), and AQE converts the
-            # join to broadcast once the dim materializes small — so the
-            # fact table is never shuffled.  The dim branch re-executes
-            # the UPSTREAM plan column-pruned to the UA field (one extra
-            # derivation of that column per row, e.g. a second grok run
-            # when user_agent follows grok) — still ~2 regex executions
-            # against the ~350 the per-row chain pays.  `dedup_parse:
-            # false` forces the per-row chain (near-unique-UA inputs, or
-            # an upstream too expensive to re-derive).
-            dim = (df.where(F.col(gate_col) & F.col("__ua_src").isNotNull())
-                   # every dim row came from a gated row: the chain's
-                   # per-segment short-circuit gate is constant-true here
-                   .select("__ua_src", F.lit(True).alias(gate_col))
-                   .distinct()
-                   .select("__ua_src", *[c.alias(n)
-                                         for n, c in chains.items()]))
-            df = df.join(dim, on="__ua_src", how="left")
-        else:
-            df = df.withColumns(chains)
-    temps = [gate_col, "__ua_src"] + list(chains)
-
-    def _final(colname, field, default):
-        if colname is None:
-            return F.lit(default)
-        c = F.col(colname)
-        # CaseWhen contract preserved: a matched branch whose template
-        # rendered null stays null; "Other" only when NO branch matched
-        return F.when(c.isNotNull(), c[field]).otherwise(F.lit(default))
-
-    name = _final(bcol, "n", "Other")
-    version = F.col(bcol)["v"] if bcol else F.lit(None).cast("string")
-    os_name = _final(ocol, "n", "Other")
-    os_version = F.col(ocol)["v"] if ocol else F.lit(None).cast("string")
-    device = _final(dcol, "d", "Other")
+    udf = F.pandas_udf(parse, T.StructType(
+        [T.StructField(f, T.StringType()) for f in fields]))
+    gate = F.coalesce(active & ua.isNotNull(), F.lit(False))
+    # gate the UDF input: inactive rows ship a null and are not parsed;
+    # the result is read by every write, so it is staged once
+    st = Step(df.withColumn("__ua", udf(F.when(gate, ua))))
+    parsed = fcol("__ua")
+    os_name, os_version = parsed["os_name"], parsed["os_version"]
     updates = {
-        f"{target}.name": name,
-        f"{target}.version": version,
+        f"{target}.name": parsed["name"],
+        f"{target}.version": parsed["version"],
         f"{target}.os.name": os_name,
         f"{target}.os.version": os_version,
         f"{target}.os.full": F.when(os_version.isNotNull(),
                                     F.concat(os_name, F.lit(" "), os_version))
                               .otherwise(os_name),
-        f"{target}.device.name": device,
+        f"{target}.device.name": parsed["device"],
         f"{target}.original": ua,
     }
-    if cfg.get("extract_device_type", False):
-        # ES 8 beta option: coarse device class from UA hints — computed
-        # in the __uat chain (distinct-parse dim when enabled), not per
-        # fact row
-        updates[f"{target}.device.type"] = F.col("__uat")
+    if device_type:
+        # ES 8 beta option: coarse device class from UA hints
+        updates[f"{target}.device.type"] = parsed["device_type"]
     props = cfg.get("properties")
     if props:
         # ES: restrict the emitted properties (NAME/OS/DEVICE/ORIGINAL/
@@ -496,9 +188,8 @@ def p_user_agent(df, spec, ctx):
             head = suffix.split(".")[0]
             return head in allowed or suffix in allowed
         updates = {k: v for k, v in updates.items() if keep(k)}
-    st = Step(df)
-    st.guarded(F.col(gate_col), updates, {k: T.StringType() for k in updates})
-    st.drop(*temps)
+    st.guarded(gate, updates, {k: T.StringType() for k in updates})
+    st.drop("__ua")
     return st.done()
 
 

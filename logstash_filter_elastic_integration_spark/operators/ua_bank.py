@@ -1,7 +1,6 @@
 """Ordered user-agent regex bank, re-expressed from the public-domain
-uap-core dataset (the same data the ES user_agent processor ships —
-reference: /root/reference/docs/index.asciidoc:200; golden decomposition
-/root/reference/src/test/java/.../SmokeTest.java:37-69).
+uap-core dataset (the same data the ES user_agent processor ships), and
+the parser that evaluates a bank in Python.
 
 Semantics follow ua-parser: the list is ordered, FIRST match wins, and
 matching is an unanchored regex search.  Specific families (bots, consoles,
@@ -12,10 +11,19 @@ Entry shape: ``(family, regex)``.
   - ``family`` may contain ``$1`` — replaced by capture group 1 (uap-core
     family_replacement).  For those entries version groups start at 2;
     otherwise every capture group is a version component, joined with '.'.
-  - Regexes are written to compile identically under Python ``re`` (used
-    to count groups) and Java (used by ``rlike``/``regexp_extract``):
-    no inline flags, no named groups, no possessive quantifiers.
+  - The reference runs the bank on Java regex, the parser below on Python
+    ``re``, so regexes use the syntax both share: no named groups, no
+    conditionals.  The parser compiles them with ``re.ASCII``, since
+    Java's ``\\d``, ``\\w``, ``\\s`` and ``(?i)`` are ASCII-only by default.
+    Differences that stay: Java's ``.`` and ``$`` also treat ``\\r``,
+    ``\\u0085``, ``\\u2028`` and ``\\u2029`` as line terminators (Python's
+    only ``\\n``), and Java 17's ``\\b`` counts non-ASCII letters as word
+    characters.
 """
+
+import hashlib
+import re
+from typing import NamedTuple
 
 from ..functions.lru import LRU
 
@@ -351,30 +359,34 @@ UA_DEVICES: list[tuple[str, str]] = [
 ]
 
 
+# ES 8 ``extract_device_type``: coarse device class from UA hints; first
+# match wins, else "Desktop".
+DEVICE_TYPES: list[tuple[str, str]] = [
+    ("Robot", r"(?i)bot|spider|crawler|slurp|curl|wget|python-requests|"
+              r"urllib|go-http-client|okhttp"),
+    ("Tablet", r"iPad|Android(?!.*Mobile)"),
+    ("Phone", r"iPhone|Windows Phone|Android.*Mobile"),
+    ("Smart TV", r"Smart-?TV|AppleTV|Apple TV|CrKey|Roku/DVP|HbbTV|"
+                 r"NetCast\.TV|Web0S.*?TV|BRAVIA|VIERA|GoogleTV"),
+]
+
+
 # ------------------------------------------------------ regex_file loader --
 def load_uap_regexes(path: str) -> dict:
-    """Parse a full public uap-core ``regexes.yaml`` (the exact dataset the
-    ES user_agent processor ships — reference docs/index.asciidoc:200,
-    ``regex_file`` option) into ordered parser banks with EXACT ua-parser
-    semantics:
+    """Parse a full public uap-core ``regexes.yaml`` (the dataset the ES
+    user_agent processor ships; its ``regex_file`` option) into ordered
+    parser banks with ua-parser semantics:
 
       browsers: family = $-template over family_replacement or group(1);
-                v1..v4 = vN_replacement literal or groups 2..5
+                v1..v4 = vN_replacement ($N) or groups 2..5
       os:       os = os_replacement ($N templates) or group(1);
                 os_v1..os_v4 = os_vN_replacement ($N) or groups 2..5
-      devices:  device = device_replacement ($N) or group(1)
+      devices:  device = device_replacement ($N, spaces trimmed) or group(1)
 
     (python ua-parser user_agent_parser.py Parse* methods are the public
     behavioral contract).  ``regex_flag: i`` becomes an inline ``(?i)``.
-    Every regex is compile-checked under python ``re``; group indexing is
-    identical under Java, so the bank lowers to the same
-    rlike/regexp_extract CASE chain as the built-in bank.  Banks this
-    size (~1200 entries) stay fully compiled: the chain is lowered in
-    coalesce-composed segments evaluated in a standalone Project outside
-    whole-stage fusion, so every generated method is small and JIT-able
-    (see operators/net.py _segmented_first_match).
+    Every regex is compile-checked here, so a bad bank fails at compile.
     """
-    import re
     import yaml
 
     with open(path) as fh:
@@ -384,7 +396,7 @@ def load_uap_regexes(path: str) -> dict:
         rx = p["regex"]
         if p.get("regex_flag"):
             rx = f"(?{p['regex_flag']})" + rx
-        re.compile(rx)  # fail loud on anything re/Java can't share
+        re.compile(rx, re.ASCII)  # fail loud on anything the parser rejects
         return rx
 
     browsers = [{
@@ -408,8 +420,7 @@ def load_uap_regexes(path: str) -> dict:
 
 # ------------------------------------------------- default-bank resolution --
 # ES ships the complete uap-core definitions as its DEFAULT user_agent
-# bank (reference docs/index.asciidoc:200).  This build environment has
-# no network and no bundled copy of the public regexes.yaml, so the
+# bank.  This package bundles no copy of the public regexes.yaml, so the
 # default resolves in order:
 #   1. $SPARK_GRAFT_UAP_REGEXES           (explicit override)
 #   2. <package>/data/regexes.yaml        (drop the public uap-core file
@@ -443,3 +454,174 @@ def load_uap_regexes_cached(path: str) -> dict:
     if banks is None:
         banks = _BANK_CACHE[key] = load_uap_regexes(path)
     return banks
+
+
+# ------------------------------------------------------------- the parser --
+class Entry(NamedTuple):
+    regex: str
+    name: str              # $N template (a literal when it has no $N)
+    version: tuple = ()    # parts: capture-group index or $N template
+    trim: bool = False     # device_replacement: surrounding spaces trimmed
+
+
+class Bank(NamedTuple):
+    """A bank in the one shape the parser reads.  Plain tuples of strings,
+    so it pickles into a UDF closure (workers may not see a regex_file)."""
+    browsers: tuple
+    os: tuple
+    devices: tuple
+    blank_version: str | None  # version when every part is empty
+    windows_nt: bool           # "Windows" versions via WINDOWS_NT_VERSIONS
+
+    def digest(self) -> str:
+        return hashlib.sha1(repr(tuple(self)).encode()).hexdigest()
+
+
+def _groups(rx: str) -> int:
+    return re.compile(rx, re.ASCII).groups
+
+
+def builtin_bank() -> Bank:
+    """The curated bank: a ``$1`` family takes group 1, and every other
+    group is a version part; versions whose parts are all empty are ''."""
+    def entry(name, rx, start):
+        return Entry(rx, name, tuple(range(start, _groups(rx) + 1)))
+    return Bank(
+        tuple(entry(n, rx, 2 if "$1" in n else 1) for n, rx in UA_BROWSERS),
+        tuple(entry(n, rx, 1) for n, rx in UA_OS),
+        tuple(Entry(rx, n) for n, rx in UA_DEVICES),
+        blank_version="", windows_nt=True)
+
+
+def file_bank(path: str) -> Bank:
+    """A uap-core ``regexes.yaml`` (see load_uap_regexes): group 1 is the
+    family slot, versions come from vN templates or groups 2..5, and a
+    version whose parts are all empty is None."""
+    banks = load_uap_regexes_cached(path)
+
+    def tmpl(v):
+        return "$1" if v is None else str(v)
+
+    def entry(e, name):
+        n = _groups(e["regex"])
+        parts = tuple(str(v) if v is not None else g
+                      for g, v in enumerate(e["v"], start=2)
+                      if v is not None or n >= g)
+        return Entry(e["regex"], tmpl(e[name]), parts)
+    return Bank(
+        tuple(entry(e, "family") for e in banks["browsers"]),
+        tuple(entry(e, "os") for e in banks["os"]),
+        tuple(Entry(e["regex"], tmpl(e["device"]),
+                    trim=e["device"] is not None)
+              for e in banks["devices"]),
+        blank_version=None, windows_nt=False)
+
+
+def _prefix_literal(rx: str) -> str | None:
+    """Longest plain-literal prefix of ``rx`` (up to the first metachar; a
+    char followed by a quantifier is optional, so dropped), kept when at
+    least 4 chars.  An entry is tried only on strings containing it: a
+    cheap pre-filter that is part of the bank's semantics, since it also
+    applies to alternations (``BB10|BlackBerry`` needs ``BB10``)."""
+    out = []
+    for i, c in enumerate(rx):
+        if c in "\\[(|.?*+{^$":
+            break
+        if rx[i + 1:i + 2] in ("?", "*", "{"):
+            break
+        out.append(c)
+    lit = "".join(out)
+    return lit if len(lit) >= 4 else None
+
+
+_TEMPLATE = re.compile(r"\$(\d)")
+_WINDOWS_NT = re.compile(r"Windows NT (\d+\.\d+)", re.ASCII)
+
+
+def _render(tmpl: str, m) -> str:
+    """uap-core ``$N`` template; a group that did not participate is ''."""
+    if "$" not in tmpl:
+        return tmpl
+    return _TEMPLATE.sub(lambda t: m.group(int(t.group(1))) or "", tmpl)
+
+
+class Parser:
+    """One bank, compiled; ``parse(ua)`` -> (name, version, os_name,
+    os_version, device, device_type)."""
+
+    def __init__(self, bank: Bank):
+        def compiled(entries):
+            return [(_prefix_literal(e.regex), re.compile(e.regex, re.ASCII),
+                     e) for e in entries]
+        self.bank = bank
+        self.browsers = compiled(bank.browsers)
+        self.os = compiled(bank.os)
+        self.devices = compiled(bank.devices)
+        self.device_types = [(t, re.compile(rx, re.ASCII))
+                             for t, rx in DEVICE_TYPES]
+
+    @staticmethod
+    def _first(entries, ua):
+        for lit, rx, e in entries:
+            if lit is None or lit in ua:
+                m = rx.search(ua)
+                if m:
+                    return m, e
+        return None, None
+
+    def _version(self, m, e):
+        if not e.version:
+            return None
+        parts = [_render(p, m) if isinstance(p, str) else m.group(p) or ""
+                 for p in e.version]
+        return ".".join(p for p in parts if p) or self.bank.blank_version
+
+    def parse(self, ua: str) -> tuple:
+        name = os_name = device = "Other"
+        version = os_version = None
+        m, e = self._first(self.browsers, ua)
+        if m:
+            name, version = _render(e.name, m), self._version(m, e)
+        m, e = self._first(self.os, ua)
+        if m:
+            os_name = _render(e.name, m)
+            if self.bank.windows_nt and e.name == "Windows":
+                nt = _WINDOWS_NT.search(ua)
+                nt = nt.group(1) if nt else ""
+                os_version = WINDOWS_NT_VERSIONS.get(nt, nt or None)
+            else:
+                os_version = self._version(m, e)
+        m, e = self._first(self.devices, ua)
+        if m:
+            device = _render(e.name, m)
+            if e.trim:
+                device = device.strip(" ")
+        device_type = next((t for t, rx in self.device_types
+                            if rx.search(ua)), "Desktop")
+        return name, version, os_name, os_version, device, device_type
+
+
+# Per process (each Python worker): compiled banks by digest, and parses
+# by (bank digest, UA) — the ES UserAgentCache, bounded.
+_PARSER_CACHE = LRU(4)
+_PARSE_MEMO = LRU(10_000)
+
+
+def parse_series(bank: Bank, digest: str, uas, width: int):
+    """Parse a pandas Series of UA strings (None: not parsed) into a frame
+    of the first ``width`` parse fields, once per distinct string."""
+    import pandas as pd
+
+    parser = _PARSER_CACHE.get(digest)
+    if parser is None:
+        parser = _PARSER_CACHE[digest] = Parser(bank)
+    codes, uniques = pd.factorize(uas)
+    rows = []
+    for ua in uniques:
+        key = (digest, ua)
+        hit = _PARSE_MEMO.get(key)
+        if hit is None:
+            hit = _PARSE_MEMO[key] = parser.parse(ua)
+        rows.append(hit[:width])
+    rows.append((None,) * width)  # code -1: a null input
+    return pd.DataFrame(rows).iloc[codes].reset_index(drop=True)

@@ -114,6 +114,9 @@ def resolver_for(df: DataFrame):
         return resolve_field(df, path)
     # presence probe for containsKey lowerings (explicit-null aware)
     resolve.present = lambda path: present_expr(df, path)
+    # does the frame hold ctx.<path>: a column at or under the path
+    resolve.exists = lambda path: any(
+        c == path or c.startswith(path + ".") for c in df.columns)
 
     # schema signature of a path: everything resolve/present's OUTPUT
     # depends on for that path.  Lets compile_condition cache compiled
@@ -184,7 +187,7 @@ class Step:
     temp columns).
 
     Every Dataset call re-analyses the whole plan — tens of ms per call
-    once the plan carries the user_agent bank — so a processor batches its
+    once the plan is large — so a processor batches its
     guarded updates, ``__failure`` stamps, registry updates and temp-column
     drops here instead of paying one call per column.  ``withColumns``
     evaluates every expression against its input, so all expressions are

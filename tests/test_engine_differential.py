@@ -387,16 +387,40 @@ OVERLAPS = [
 ]
 
 
+def _script_rows(spark, registry, source):
+    """A ``script`` processor's rows over a frame with only ``id``."""
+    rows = run_one(spark, registry, [{"script": {"source": source}}],
+                   [(1,)], "id long")
+    return [{k: v for k, v in r.items()
+             if k != "@metadata._ingest_document"} for r in rows]
+
+
+# a leading no-op loop forces a script onto the interpreter
+_INTERPRETED = "for (int i = 0; i < 0; i++) {} "
+
+
 @pytest.mark.parametrize("src", OVERLAPS)
 def test_read_overlapping_a_write_agrees_with_interpreter(
         spark, registry, src):
     """A ``script`` processor over a frame with only ``id`` gives the rows
     the interpreter gives (forced by a leading no-op loop): the Column
     path must not send such a read to the input frame."""
-    def run(source):
-        rows = run_one(spark, registry, [{"script": {"source": source}}],
-                       [(1,)], "id long")
-        return [{k: v for k, v in r.items()
-                 if k != "@metadata._ingest_document"} for r in rows]
+    assert (_script_rows(spark, registry, src)
+            == _script_rows(spark, registry, _INTERPRETED + src))
 
-    assert run(src) == run("for (int i = 0; i < 0; i++) {} " + src)
+
+# writes the Column path cannot place: under a path the frame lacks (a
+# null ctx.t fails the row), into a map the script wrote, and a map value
+@pytest.mark.parametrize("src", [
+    "ctx.t.x = 1;",
+    "ctx.t.x.y = 1;",
+    "ctx.t = ['x': 2]; ctx.t.y = 3;",
+    "ctx.t.x = 1; ctx.t = ['y': 2];",
+    "ctx.t = ['x': 2];",
+    "ctx.t = ['x': 2.5, 'y': null];",
+])
+def test_writes_agree_with_interpreter(spark, registry, src):
+    """The Column path and the interpreter give the same rows, values and
+    row failures alike."""
+    assert (_script_rows(spark, registry, src)
+            == _script_rows(spark, registry, _INTERPRETED + src))

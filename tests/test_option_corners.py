@@ -519,10 +519,10 @@ def test_network_direction_garbage_ip_not_composite(spark, registry):
 
 
 def test_user_agent_option_interactions(spark, registry, tmp_path):
-    """regex_file x dedup_parse x properties x extract_device_type
-    together: the distinct-parse dim path must respect the wholesale
-    bank, the properties filter, and the device-type classifier
-    (the classifier reads the ORIGINAL ua column, not the dim)."""
+    """regex_file x properties x extract_device_type together: the UDF
+    must respect the wholesale bank, the properties filter and the
+    device-type classifier.  ``dedup_parse`` is a removed option: a
+    leftover key, either value, is ignored like any unknown key."""
     p = tmp_path / "regexes.yaml"
     p.write_text(UAP_YAML)
     rows = [("MyBrowser/1.2.3 (MyOS 10_5) Gadget-Z9",),

@@ -154,11 +154,13 @@ def test_flagship_plan_is_python_free(spark, tmp_path):
     assert "ArrowEvalPython" not in plan
 
 
-def test_integration_mix_plan_has_one_python_node(spark):
+def test_integration_mix_plan_has_one_python_node(spark, tmp_path):
     """The facade over examples/pipelines: the token-count loop in
-    logs-web.json is the only script the Column lowering rejects, so the
-    plan's single ArrowEvalPython node is that script's UDF; every `if`
-    condition and user_agent stay on the JVM."""
+    logs-web.json is the only script the Column lowering rejects, and
+    user_agent parses in its own pandas UDF.  Spark evaluates both UDFs
+    in one ArrowEvalPython node, every `if` condition stays on the JVM,
+    and the plan has no Exchange (the scan is written to parquet first,
+    so the generator's own shuffle is not in it)."""
     import os
     from logstash_filter_elastic_integration_spark.engine import (
         SparkIngestFilter)
@@ -166,7 +168,9 @@ def test_integration_mix_plan_has_one_python_node(spark):
         tool_dim)
     pipelines = os.path.join(os.path.dirname(__file__), "..", "examples",
                              "pipelines")
-    frame = (transcripts(spark, 200)
+    src = str(tmp_path / "mix")
+    transcripts(spark, 200).write.parquet(src)
+    frame = (spark.read.parquet(src)
              .withColumn("ua", F.lit("curl/8.4.0"))
              .withColumn("data_stream.type", F.lit("logs"))
              .withColumn("data_stream.dataset", F.lit("web.access"))
@@ -177,7 +181,10 @@ def test_integration_mix_plan_has_one_python_node(spark):
                  "logs-web.tools-*": "logs-tools"}).filter(frame)
     plan = _executed_plan(out)
     assert plan.count("ArrowEvalPython") == 1
+    node, = [ln for ln in plan.splitlines() if "ArrowEvalPython" in ln]
+    assert "kernel(" in node and "parse(" in node, node
     assert "token_count" in plan
+    assert "Exchange" not in plan
 
 
 def test_registered_domain_plan_broadcast_only(spark):
@@ -231,7 +238,7 @@ def test_decontaminate_plan_never_shuffles_corpus(spark):
     assert plan.count("Exchange hashpartitioning(doc_id#") == 1
 
 
-# ------------------------------------------------- user_agent codegen ------
+# ------------------------------------------------------- user_agent -------
 def _ua_pipeline(spark, rows, cfg):
     from logstash_filter_elastic_integration_spark.plans import (
         PipelineRegistry, run_pipeline)
@@ -251,59 +258,77 @@ _UA_ROWS = [
 
 
 def test_user_agent_chain_outside_wholestage_codegen(spark):
-    """VERDICT r4 #1: the ~270-branch bank must NOT be inlined into a
-    fused processNext() (one 47KB method -> janino failure / silent
-    interpreted eval).  The chain Project runs standalone: its plan line
-    has no whole-stage `*(n)` marker."""
-    # dedup_parse=False pins the raw per-row chain shape (the DEFAULT
-    # distinct-parse path runs the IDENTICAL chain expressions on the
-    # distinct dim — see test_user_agent_default_dedup_parse below)
-    out = _ua_pipeline(spark, _UA_ROWS, {"field": "ua",
-                                         "dedup_parse": False})
+    """The bank must never be inlined into a fused processNext(): it runs
+    in one pandas UDF, whose ArrowEvalPython node stands outside
+    WholeStageCodegen (no `*(n)` marker), and no regex expression of the
+    bank is left in the JVM plan."""
+    out = _ua_pipeline(spark, _UA_ROWS, {"field": "ua"})
+    rows = {r["ua"]: r for r in out.collect()}
     plan = _executed_plan(out)
-    chain_lines = [ln for ln in plan.splitlines() if "coalesce(CASE WHEN" in ln]
-    assert chain_lines, "UA chain Project missing from plan"
-    for ln in chain_lines:
-        assert not ln.lstrip("+- ").startswith("*("), (
-            "UA chain fused into WholeStageCodegen:\n" + ln[:200])
+    udf_lines = [ln for ln in plan.splitlines() if "ArrowEvalPython" in ln]
+    assert len(udf_lines) == 1, plan
+    assert "parse(" in udf_lines[0]
+    assert not udf_lines[0].lstrip("+- ").startswith("*("), udf_lines[0]
+    for jvm_regex in ("RLIKE", "regexp_extract", "coalesce(CASE WHEN"):
+        assert jvm_regex not in plan, jvm_regex
+    assert rows[_UA_ROWS[0][0]]["user_agent.name"] == "Chrome"
 
 
 def test_user_agent_default_dedup_parse_broadcasts(spark):
-    """DEFAULT path: the bank runs once per DISTINCT UA (ES
-    UserAgentCache parity), joined back via an AQE-decided broadcast —
-    the fact side is never exchange-shuffled."""
+    """DEFAULT path: the bank runs once per DISTINCT UA (ES UserAgentCache
+    parity), now inside the UDF, so no distinct-parse aggregate, Exchange
+    or join back (broadcast or sort-merge) is left in the plan."""
+    import pandas as pd
+    from logstash_filter_elastic_integration_spark.operators import ua_bank
+
     out = _ua_pipeline(spark, _UA_ROWS * 50, {"field": "ua"})
     rows = out.collect()                      # finalize the AQE plan
-    final = _executed_plan(out).split("== Initial Plan ==")[0]
-    assert "HashAggregate" in final           # the distinct dim
-    assert "BroadcastHashJoin" in final
-    # AQE replans the initial SMJ to broadcast; the fact side's planned
-    # exchange degrades to a LOCAL shuffle read (no network movement)
-    assert "SortMergeJoin" not in final
+    plan = _executed_plan(out)
+    assert plan.count("ArrowEvalPython") == 1
+    assert "Exchange" not in plan
+    assert "BroadcastHashJoin" not in plan
+    assert "SortMergeJoin" not in plan
+    assert "HashAggregate" not in plan
     by_ua = {r["ua"]: r for r in rows}
     assert by_ua[_UA_ROWS[0][0]]["user_agent.name"] == "Chrome"
+    assert by_ua[None]["user_agent.name"] is None
 
+    # The UDF body: 200 rows, 3 distinct non-null UAs -> 3 parses.
+    calls = []
 
-def test_user_agent_codegen_compiles_default_bank(spark):
-    """The standalone chain Project must COMPILE (branch-split small
-    methods), not fall back to interpreted eval: CODEGEN_ONLY factory
-    mode makes any expression-codegen failure a hard error."""
-    spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
+    class Counting:
+        def parse(self, ua):
+            calls.append(ua)
+            return (ua, "v", None, None, "Other", "Desktop")
+
+    digest = "test-dedup-digest"
+    ua_bank._PARSER_CACHE[digest] = Counting()
     try:
-        out = _ua_pipeline(spark, _UA_ROWS, {"field": "ua",
-                                             "extract_device_type": True})
-        rows = {r["ua"]: r for r in out.collect()}
+        uas = pd.Series([r[0] for r in _UA_ROWS * 50])
+        got = ua_bank.parse_series(None, digest, uas, 5)
     finally:
-        spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+        ua_bank._PARSER_CACHE.pop(digest, None)
+        for key in [k for k in ua_bank._PARSE_MEMO if k[0] == digest]:
+            ua_bank._PARSE_MEMO.pop(key)
+    assert sorted(calls) == sorted(r[0] for r in _UA_ROWS[:3])
+    assert len(got) == 200
+    assert list(got.iloc[0]) == [_UA_ROWS[0][0], "v", None, None, "Other"]
+    assert got.iloc[3].isna().all()
+
+
+def test_user_agent_default_bank_values(spark):
+    out = _ua_pipeline(spark, _UA_ROWS, {"field": "ua",
+                                         "extract_device_type": True})
+    rows = {r["ua"]: r for r in out.collect()}
     chrome = rows[_UA_ROWS[0][0]]
     assert chrome["user_agent.name"] == "Chrome"
     assert chrome["user_agent.os.name"] == "Windows"
     assert rows[_UA_ROWS[1][0]]["user_agent.name"] == "Googlebot"
 
 
-def test_user_agent_codegen_compiles_full_scale_bank(spark, tmp_path):
-    """A wholesale ~1200-entry regex_file bank (uap-core scale) must stay
-    fully compiled too — every segment is its own small method."""
+def test_user_agent_full_scale_bank_parses_through_the_udf(spark, tmp_path):
+    """A wholesale ~1200-entry regex_file bank (uap-core scale) ships in
+    the UDF closure and parses through the same memoized path."""
     lines = ["user_agent_parsers:"]
     for i in range(1150):
         lines.append(f"  - regex: '(SynthAgent{i:04d})/(\\d+)\\.(\\d+)'")
@@ -319,13 +344,9 @@ def test_user_agent_codegen_compiles_full_scale_bank(spark, tmp_path):
     p.write_text("\n".join(lines) + "\n")
     rows = [("SynthAgent1149/9.7 SynthOS119 42 SynthDev079",),
             ("SynthAgent0000/1.0",), ("nothing-matches",)]
-    spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
-    try:
-        out = _ua_pipeline(spark, rows, {"field": "ua",
-                                         "regex_file": str(p)})
-        got = {r["ua"]: r for r in out.collect()}
-    finally:
-        spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+    out = _ua_pipeline(spark, rows, {"field": "ua", "regex_file": str(p)})
+    got = {r["ua"]: r for r in out.collect()}
+    assert _executed_plan(out).count("ArrowEvalPython") == 1
     last = got["SynthAgent1149/9.7 SynthOS119 42 SynthDev079"]
     assert last["user_agent.name"] == "SynthAgent1149"
     assert last["user_agent.version"] == "9.7"

@@ -1,7 +1,8 @@
 """Long-tail user_agent bank coverage (uap-core-derived, ua_bank.py):
 smart-TV / console / crawler families beyond the r1-r3 curated subset,
-plus a compile check over every bank regex under Python re (the group
-counter) — Java compatibility is exercised by the Spark goldens below."""
+plus a compile check over every bank regex under Python re (the parser's
+engine); parity with the Java regex chains the parser replaced is pinned
+by the golden fixture at the end."""
 
 import re
 
@@ -21,8 +22,9 @@ def test_every_bank_regex_compiles_and_groups_are_sane():
 
 
 def test_bank_has_no_python_only_constructs():
-    # rlike is Java regex: named groups (?P<>) and inline (?i) mid-pattern
-    # diverge; conditionals (?(1)...) are Python-only
+    # the reference runs the bank on Java regex: named groups (?P<>) and
+    # inline (?i) mid-pattern diverge; conditionals (?(1)...) are
+    # Python-only
     for _, rx in UA_BROWSERS + UA_OS + UA_DEVICES:
         assert "(?P<" not in rx
         assert "(?(" not in rx
@@ -211,3 +213,52 @@ def test_default_env_bank_drives_processor(spark, registry, tmp_path,
     assert out[0]["user_agent.name"] == "WholeUA"
     assert out[0]["user_agent.version"] == "4.2"
     assert out[0]["user_agent.os.name"] == "Whole OS"
+
+
+# ------------------------------------------------- golden parity fixture --
+# tests/data/ua_golden.json holds the outputs of the JVM regex chains this
+# parser replaced (rlike/regexp_extract CASE chains, commit c1f32e2), over
+# the test UAs, per-family synthetic strings of the three builtin banks
+# and the device-type rules, null and '': the builtin bank, the
+# test_option_corners regex_file bank ((?i), $N, v1_replacement) and a
+# second regex_file bank of template corners (non-participating $N
+# groups, vN gaps, trimmed and untrimmed devices).  All with
+# extract_device_type.
+def _golden_cases():
+    import json
+    import os
+    path = os.path.join(os.path.dirname(__file__), "data", "ua_golden.json")
+    with open(path) as fh:
+        golden = json.load(fh)
+    return golden["fields"], golden["cases"]
+
+
+_FIELDS, _CASES = _golden_cases()
+
+
+def test_golden_fixture_covers_the_banks():
+    assert sum(len(c["rows"]) for c in _CASES) >= 500
+    uas = [r[0] for r in _CASES[0]["rows"]]
+    assert _CASES[0]["yaml"] is None and None in uas and "" in uas
+    names = {r[1] for r in _CASES[0]["rows"]}
+    assert len(names) > 200  # most browser families are hit
+
+
+@pytest.mark.parametrize("case", _CASES, ids=[c["name"] for c in _CASES])
+def test_golden_parity_with_jvm_chains(spark, registry, tmp_path, case):
+    cfg = dict(case["config"])
+    if case["yaml"] is not None:
+        p = tmp_path / "regexes.yaml"
+        p.write_text(case["yaml"])
+        cfg["regex_file"] = str(p)
+    rows = [(i, r[0]) for i, r in enumerate(case["rows"])]
+    out = run_one(spark, registry, [{"user_agent": cfg}], rows,
+                  "i int, ua string")
+    mismatches = []
+    for r in out:
+        ua, *want = case["rows"][r["i"]]
+        got = [r[f"user_agent.{f}"] for f in _FIELDS]
+        if got != want or r["user_agent.original"] != ua:
+            mismatches.append(f"{ua!r}: {got} != {want}")
+    assert len(out) == len(rows)
+    assert mismatches == [], "\n".join(mismatches[:20])

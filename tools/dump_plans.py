@@ -26,10 +26,8 @@ HEADLINE = [
 NOTES = {
     "pipe_grok_typed": "ZERO Python: auto-JVM grok (packed rlike + "
                        "regexp_replace/split in one codegen span), no exchange",
-    "pipe_user_agent": "distinct-parse: HashAggregate dedups UA strings, "
-                       "the segmented regex chain projects over the tiny "
-                       "dim, AQE broadcast-joins it back (fact side local "
-                       "shuffle read only)",
+    "pipe_user_agent": "one ArrowEvalPython node: the memoized UA parser "
+                       "UDF over the fact rows; no exchange, no join",
     "route_fanout": "route column computed in-plan; no shuffle before the "
                     "fan-out write",
     "agg_sink_counts": "partial HashAggregate -> Exchange -> final "
